@@ -647,48 +647,56 @@ object Streams {
       .drop("_ldm")
   }
 
-  /** Directory-partition BUCKET count of the cross-lingual list and
-    * postings delta stores: every list delta is laid out as
-    * `delta=N/qb=H` with H = [[storeBucket]](query_id), every
-    * postings delta as `delta=N/nb=H` with H = bucket(nn_id), so a
-    * lookup for a bounded key set prunes to its keys' bucket
-    * DIRECTORIES at file-listing time instead of scanning the store
-    * and semi-joining it down (the r12 verdict's one `weak` mark: the
-    * mine-set lookups paid 3-4 full O(corpus·k) store scans per
-    * micro-batch, and the nn_id-keyed reverse lookup was unservable
-    * by any query_id layout).
+  /** BUCKET count of the cross-lingual list and postings delta
+    * stores. A delta is plain parquet files (no bucket directories)
+    * carrying a bucket column — `qb` = [[storeBucket]](query_id) on
+    * lists, `nb` = bucket(nn_id) on postings — with each file's rows
+    * sorted by it: B is an in-file sort key, not a directory count,
+    * and a batch writes one file per non-empty partition of its
+    * batch-shaped frame whatever B is. A bounded-key lookup filters
+    * on its keys' [[hitBuckets]] via [[bucketPred]], which reaches
+    * the Parquet scan's pushed filters as the EXACT bucket set; the
+    * semi-join after it carries correctness.
     *
-    * WHEN PRUNING ENGAGES — said precisely, because uniform hashing
-    * makes it easy to overclaim: a key set of size t hits about
-    * B·(1−e^(−t/B)) of B buckets, so the filter only drops
-    * directories when t ≲ B. Size B to ≳ 10× the expected per-batch
-    * touched-set size at deployment (on the COMPACTED base — the
-    * batch-shaped deltas are small either way); at test scale
-    * (64-4000-row touched sets against B = 64) the filter usually
-    * degenerates to all-buckets, and the measured per-batch bound
-    * comes from the OTHER lever, compaction (stream-tail probe:
-    * timed batch 7.6/8.6/10.3/13.6 s over 1/2/5/8 delta dirs;
-    * ×3-corpus slope 1.04-1.09× at a fixed batch). 64 keeps
-    * per-delta directory counts sane at test scale; it is a STORE
-    * FORMAT property (writers and readers must agree), so changing
-    * it on a live store requires a [[compactCrossLingualState]]
-    * rewrite, which re-buckets everything. */
+    * WHEN SKIPPING ENGAGES — a t-key set hits about B·(1−e^(−t/B)) of
+    * B buckets, and Parquet drops a row group only when no hit bucket
+    * lies inside its min/max bucket; sorted files give each row group
+    * a contiguous bucket run. So it needs (1) a delta file of more
+    * than one row group (`parquet.block.size`, 128 MB by default — a
+    * compacted base at deployment scale, never a batch-shaped delta)
+    * and (2) t ≲ B, so whole runs are missed. The `isin` reaches
+    * Parquet as a SET predicate (ORed equalities up to
+    * `spark.sql.parquet.pushdown.inFilterThreshold`, Parquet's `in`
+    * above it — not a min/max range), tested per value against each
+    * row group's statistics. At test and bench scale every delta is
+    * one row group and the filter saves no I/O. 32 is a STORE FORMAT
+    * property (writers and readers must agree); changing it on a live
+    * store requires a [[compactCrossLingualState]] rewrite, which
+    * re-buckets everything. */
   private[streaming] val StoreBuckets = 32
 
-  /** The bucket a store row routes to at write time — ONE function
-    * shared by writers and readers; pruning correctness is exactly
-    * this equality. */
-  private def storeBucket(c: Column, buckets: Int): Column =
+  /** The bucket a store row carries at write time — ONE function
+    * shared by writers and readers; the filter's correctness is
+    * exactly this equality. */
+  private[streaming] def storeBucket(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
+
+  /** `df` plus its bucket column (of `keyCol`), rows sorted by
+    * (bucket, key) inside the frame's EXISTING partitions — the one
+    * write layout of the list and postings deltas (no exchange). */
+  private[streaming] def bucketSorted(
+      df: DataFrame, bucketCol: String, keyCol: String): DataFrame =
+    df.withColumn(bucketCol, storeBucket(col(keyCol), StoreBuckets))
+      .sortWithinPartitions(bucketCol, keyCol)
 
   /** The distinct store buckets `keys` hits — COLLECTED (bounded by
     * `buckets`, a few dozen ints — the one deliberate driver-side
     * step in the tail, and the only way to turn a key set into a
-    * literal PARTITION filter, which a semi-join cannot express at
-    * file-listing time). None when every bucket is hit: the filter
-    * would be a no-op, and the corpus-shaped exact mode lands here by
+    * literal filter Parquet can evaluate against row-group
+    * statistics). None when every bucket is hit: the filter would be
+    * a no-op, and the corpus-shaped exact mode lands here by
     * construction. */
-  private def hitBuckets(
+  private[streaming] def hitBuckets(
       keys: DataFrame, keyCol: String, buckets: Int): Option[Seq[Int]] = {
     val hit = keys
       .select(storeBucket(col(keyCol), buckets).as("_b"))
@@ -696,41 +704,55 @@ object Streams {
     if (hit.size >= buckets) None else Some(hit)
   }
 
-  private def bucketPred(
+  private[streaming] def bucketPred(
       bucketCol: String, hit: Option[Seq[Int]]): Column =
     hit.map(bs => col(bucketCol).isin(bs: _*)).getOrElse(lit(true))
+
+  /** Declared file schemas (DDL) of the cross-lingual stores (the
+    * vector stores' are the batch's own): no store read starts a
+    * schema-inference job before its action. */
+  private val ListsSchema =
+    "query_id BIGINT, nn_id BIGINT, cos DOUBLE, rank BIGINT, qb INT"
+  private val PostingsSchema = "query_id BIGINT, nn_id BIGINT, nb INT"
+  private val PairsSchema = "query_id BIGINT, partner_id BIGINT, " +
+    "cos DOUBLE, margin DOUBLE, alive BOOLEAN"
+
+  /** Every `delta=N` of `dir` under the declared file schema, with
+    * `delta` typed as the batch id it is. */
+  private def readDeltas(
+      spark: SparkSession, dir: String, ddl: String): DataFrame =
+    spark.read.schema(s"$ddl, delta BIGINT").parquet(dir)
 
   /** The inverted `nn_id -> query_id` POSTINGS store that rides along
     * with a cross-lingual list store: a SIBLING root (`<listsDir>
     * _postings` — outside listsDir, so the lists' partition discovery
     * never sees it and no underscore-hiding subtlety is involved),
-    * holding every list delta inverted and bucketed by the NEIGHBOR
-    * id — what serves the reverse-reference lookup the query_id
-    * layout cannot. */
+    * holding every list delta inverted and bucket-sorted by the
+    * NEIGHBOR id — what serves the reverse-reference lookup the
+    * query_id layout cannot. */
   private[streaming] def postingsPath(listsDir: String): String =
     s"${listsDir.stripSuffix("/")}_postings"
 
   /** Current k-NN lists for a BOUNDED query set out of the
     * cross-lingual delta store — the lookup the touched-only tail
-    * lives on: the store IS bucketed by query_id hash
-    * (`delta=N/qb=H`, [[StoreBuckets]]), so `buckets` — the qids'
-    * [[hitBuckets]] — prunes to the matched bucket directories at
-    * file-listing time; then one semi-join of the pruned scan (no
+    * lives on: the store is bucket-sorted by query_id hash (`qb`,
+    * [[StoreBuckets]]), so `buckets` — the qids' [[hitBuckets]] —
+    * becomes a pushed scan filter; then one semi-join of the scan (no
     * shuffle of the store, no hint — the qids side is batch-shaped
     * in the ANN mode and AQE broadcasts it when it is genuinely
     * small; in the exact mode it is corpus-shaped, the bucket filter
     * degenerates to all-buckets, and the join must degrade to a
     * shuffle semi-join, the listInvalidation hub lesson), then
     * latest-wins over only the matched groups. Compaction
-    * ([[compactCrossLingualState]]) bounds the delta-directory count
-    * the listing pays. */
+    * ([[compactCrossLingualState]]) bounds the delta count the scan
+    * pays. */
   private def listsForQueries(
       spark: SparkSession,
       listsDir: String,
       upTo: Long,
       qids: DataFrame,
       buckets: Option[Seq[Int]] = None): DataFrame = {
-    val hit = spark.read.parquet(listsDir)
+    val hit = readDeltas(spark, listsDir, ListsSchema)
       .filter(col("delta") <= upTo && bucketPred("qb", buckets))
       .join(qids.select("query_id"), Seq("query_id"), "left_semi")
     latestDelta(hit, Seq("query_id"))
@@ -752,7 +774,7 @@ object Streams {
     // mid-flight before the file listing resolves (no-op when clean)
     recoverStores(spark, listsDir)
     latestDelta(
-      spark.read.parquet(listsDir).filter(col("delta") <= upTo),
+      readDeltas(spark, listsDir, ListsSchema).filter(col("delta") <= upTo),
       Seq("query_id"))
       .select("query_id", "rank", "nn_id", "cos")
   }
@@ -774,7 +796,7 @@ object Streams {
       upTo: Long = Long.MaxValue): DataFrame = {
     recoverStores(spark, postingsPath(listsDir))
     latestDelta(
-      spark.read.parquet(postingsPath(listsDir))
+      readDeltas(spark, postingsPath(listsDir), PostingsSchema)
         .filter(col("delta") <= upTo),
       Seq("query_id"))
       .select("nn_id", "query_id")
@@ -799,7 +821,7 @@ object Streams {
       upTo: Long = Long.MaxValue): DataFrame = {
     recoverStores(spark, pairsDir)
     val cur = latestDelta(
-        spark.read.parquet(pairsDir).filter(col("delta") <= upTo),
+        readDeltas(spark, pairsDir, PairsSchema).filter(col("delta") <= upTo),
         Seq("query_id"))
       .filter(col("alive"))
       .select("query_id", "partner_id", "cos", "margin")
@@ -813,11 +835,9 @@ object Streams {
   }
 
   /** COMPACT a cross-lingual delta store pair — the maintenance pass
-    * that keeps the touched-only tail's lookups from scanning one
-    * delta directory per historical batch forever (the
-    * [[compactTombstoneDeltas]] discipline, applied to this family's
-    * two stores): the folded state as of `upTo` is rewritten as the
-    * single delta `delta=upTo`, and every superseded `delta<upTo`
+    * that keeps the tail's lookups from scanning one delta per
+    * historical batch forever: the folded state as of `upTo` becomes
+    * the single delta `delta=upTo`, and every superseded `delta<upTo`
     * directory is deleted. Folds ([[crossLingualLists]],
     * [[crossLingualPairs]]) at any horizon >= upTo are
     * bitwise-unchanged, and a later batch N > upTo runs against the
@@ -867,28 +887,21 @@ object Streams {
     // store would silently miss the renamed-away delta even though
     // stagedReplaceDelta heals the directory before writing
     recoverStores(spark, listsDir, postingsPath(listsDir), pairsDir)
-    stagedReplaceDelta(spark, listsDir, upTo,
+    stagedReplaceDelta(spark, listsDir, upTo, bucketSorted(
       crossLingualLists(spark, listsDir, upTo)
-        .select("query_id", "nn_id", "cos", "rank")
-        .withColumn("qb", storeBucket(col("query_id"), StoreBuckets))
-        .repartition(col("qb")),
-      partitionCols = Seq("qb"))
+        .select("query_id", "nn_id", "cos", "rank"), "qb", "query_id"))
     // postings mirror: inverted from the just-compacted lists delta
     // (a materialized directory — no lineage back into the postings
-    // dirs about to be replaced), re-bucketed by the neighbor id
-    stagedReplaceDelta(spark, postingsPath(listsDir), upTo,
-      spark.read.parquet(s"$listsDir/delta=$upTo")
-        .select("query_id", "nn_id")
-        .withColumn("nb", storeBucket(col("nn_id"), StoreBuckets))
-        .repartition(col("nb")),
-      partitionCols = Seq("nb"))
+    // deltas about to be replaced), re-sorted by the neighbor id
+    stagedReplaceDelta(spark, postingsPath(listsDir), upTo, bucketSorted(
+      spark.read.schema(ListsSchema).parquet(s"$listsDir/delta=$upTo")
+        .select("query_id", "nn_id"), "nb", "nn_id"))
     stagedReplaceDelta(spark, pairsDir, upTo,
       latestDelta(
-        spark.read.parquet(pairsDir).filter(col("delta") <= upTo),
+        readDeltas(spark, pairsDir, PairsSchema).filter(col("delta") <= upTo),
         Seq("query_id"))
         .filter(col("alive"))
-        .select("query_id", "partner_id", "cos", "margin", "alive"),
-      partitionCols = Seq.empty)
+        .select("query_id", "partner_id", "cos", "margin", "alive"))
   }
 
   /** Crash-safe REPLACE of `dir/delta=upTo` with `folded`, then
@@ -928,17 +941,14 @@ object Streams {
       spark: SparkSession,
       dir: String,
       upTo: Long,
-      folded: DataFrame,
-      partitionCols: Seq[String]): Unit = {
+      folded: DataFrame): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     recoverCompact(fs, root)
     val tmp = new org.apache.hadoop.fs.Path(root, s"_compact_tmp_$upTo")
     val old = new org.apache.hadoop.fs.Path(root, s"_compact_old_$upTo")
     val dst = new org.apache.hadoop.fs.Path(root, s"delta=$upTo")
-    val w = folded.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
+    folded.write.mode("overwrite").parquet(tmp.toString)
     // the stage is committed (_SUCCESS durable); superseded history
     // goes first, under the marker
     deleteDeltasBelow(fs, root, upTo)
@@ -1029,12 +1039,24 @@ object Streams {
     * about to read — the read-side half of [[stagedReplaceDelta]]'s
     * crash contract: a stream restarted after a crash MID-SWAP must
     * not fold a store whose `delta=u` is momentarily renamed away.
-    * One directory listing per store; a no-op on clean stores. */
+    * A delta still holding `qb=`/`nb=` bucket DIRECTORIES (the
+    * retired list/postings layout) fails loud here, naming the store:
+    * there is no in-place migration. One listing per store and per
+    * delta; a no-op on clean stores. */
   private def recoverStores(spark: SparkSession, dirs: String*): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     dirs.foreach { d =>
       val root = new org.apache.hadoop.fs.Path(d)
-      recoverCompact(root.getFileSystem(conf), root)
+      val fs = root.getFileSystem(conf)
+      recoverCompact(fs, root)
+      if (fs.exists(root)) fs.listStatus(root)
+        .filter(_.getPath.getName.startsWith("delta="))
+        .flatMap(st => fs.listStatus(st.getPath)).map(_.getPath)
+        .find(p => p.getName.startsWith("qb=") || p.getName.startsWith("nb="))
+        .foreach(p => throw new IllegalStateException(s"delta store $d " +
+          s"is in the retired bucket-directory layout ($p), which this " +
+          "version cannot read or extend — re-ingest the stream into " +
+          "a fresh store"))
     }
   }
 
@@ -1055,14 +1077,11 @@ object Streams {
     *   - `listsDir/delta=N` — full replacement k-lists for the
     *     TOUCHED queries T (query_ids in `oriented`; lists of
     *     untouched queries are bitwise inert — cos(x,y) never
-    *     changes — so their files are never rewritten), bucketed
-    *     `qb=hash(query_id)` ([[StoreBuckets]]) so query_id-keyed
-    *     lookups prune directories; plus the inverted POSTINGS
-    *     mirror `<listsDir>_postings/delta=N` (the same replacement lists as
-    *     (nn_id, query_id) rows, bucketed `nb=hash(nn_id)`) so the
-    *     nn_id-keyed reverse lookup prunes too — the r12 verdict's
-    *     one `weak` term was exactly that these lookups scanned the
-    *     full store per micro-batch;
+    *     changes — so their files are never rewritten), sorted by
+    *     `qb` = hash(query_id) ([[StoreBuckets]]); plus the inverted
+    *     POSTINGS mirror `<listsDir>_postings/delta=N` (the same
+    *     lists as (nn_id, query_id) rows sorted by `nb` =
+    *     hash(nn_id)) serving the nn_id-keyed reverse lookup;
     *   - `pairsDir/delta=N` — re-mined best-margin rows
     *     (query_id, partner_id, cos, margin, alive) for the MINE set
     *     M = T ∪ {queries whose current lists reference T}: a
@@ -1078,16 +1097,12 @@ object Streams {
     *     tombstone diff — the margin rows ARE the pair deltas.
     *
     * The published view is [[crossLingualPairs]] / [[crossLingualLists]]
-    * (consumer-side folds). Mine-set lookups PRUNE to their key
-    * sets' bucket directories ([[hitBuckets]] — a bounded collect of
-    * at most [[StoreBuckets]] ints per lookup) and then semi-join
-    * the pruned scan, unhinted (no store shuffle; hub batches
-    * degrade to shuffle semi-joins instead of a broadcast
-    * hard-stop); per-batch I/O is touched-bucket-shaped once
-    * StoreBuckets is sized above the touched-set size (see the
-    * engagement condition on [[StoreBuckets]] — at smaller B the
-    * lookups fall back to the compaction-bounded full fold, never
-    * worse than r12's shape). The
+    * (consumer-side folds). Mine-set lookups filter on their key
+    * sets' buckets ([[hitBuckets]] — a bounded collect of at most
+    * [[StoreBuckets]] ints per lookup; when that skips I/O is stated
+    * on [[StoreBuckets]]) and then semi-join the scan, unhinted (no
+    * store shuffle; hub batches degrade to shuffle semi-joins
+    * instead of a broadcast hard-stop). The
     * reverse-reference lookup for M reads the postings mirror and
     * over-approximates by scanning superseded delta rows too —
     * re-mining an unaffected query rewrites bitwise-identical
@@ -1117,9 +1132,6 @@ object Streams {
       System.err.println(f"[graft]   tail/$name ${(now - tPhase) / 1e9}%.3f s")
       tPhase = now
     }
-    // read-side crash contract: heal any swap a compaction left
-    // mid-flight before folding these stores (one listing each)
-    recoverStores(spark, listsDir, postingsPath(listsDir), pairsDir)
     val o = oriented
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1138,12 +1150,9 @@ object Streams {
         // exact mode T is corpus-shaped and this degenerates to None
         // (all buckets), which is that face's documented shape — so
         // the exact-mode CALLER passes pruneLookups=false and skips
-        // the collect job outright (r14): every stored list belongs
-        // to an id some earlier batch ingested, and the exact mode's
-        // T ⊇ batch ∪ prior covers them all, so the bucket filter
-        // provably keeps every existing directory. None is always
-        // value-safe regardless (bucketPred(None) = keep-everything;
-        // the semi-joins below enforce the exact key sets)
+        // the collect job outright (r14): the exact mode's T ⊇ batch ∪
+        // prior covers every stored query. None is always value-safe
+        // (keep-everything; the semi-joins enforce the key sets)
         val touchedBuckets =
           if (hasLists && pruneLookups)
             hitBuckets(touched, "query_id", StoreBuckets)
@@ -1159,7 +1168,7 @@ object Streams {
         val newRows = o.withColumn("delta", lit(batchId))
         val carried =
           if (hasLists)
-            spark.read.parquet(listsDir)
+            readDeltas(spark, listsDir, ListsSchema)
               .filter(col("delta") < batchId &&
                 bucketPred("qb", touchedBuckets))
               .join(touched, Seq("query_id"), "left_semi")
@@ -1169,12 +1178,10 @@ object Streams {
         val wMax = Window.partitionBy("query_id")
         val wRank = Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("nn_id"))
-        // the merged replacement lists feed BOTH store writes (lists
-        // bucketed by query_id, postings by nn_id) — persist so the
-        // fold+rank window runs once, not once per write. Both writes
-        // are batch-id-deterministic overwrites of a deterministic
-        // plan ⇒ replay-idempotent; a restart recomputes the same
-        // rows, so the mirror can never drift from the lists
+        // the merged replacement lists feed BOTH store writes —
+        // persist so the fold+rank window runs once. Both writes are
+        // batch-id-deterministic overwrites of a deterministic plan ⇒
+        // replay-idempotent, so the mirror never drifts from the lists
         val merged = carried
           .withColumn("_mp",
             max(when(col("delta") < batchId, col("delta"))).over(wMax))
@@ -1183,28 +1190,19 @@ object Streams {
           .filter(col("rank") <= k)
           .select("query_id", "nn_id", "cos", "rank")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // the two store writes are INDEPENDENT jobs over the same
-        // persisted frame (block-level locking computes the fold
-        // once; the second job's tasks read the cached blocks) —
-        // submit them from two threads so the second write's tasks
-        // back-fill the first's commit tail instead of waiting for
-        // it (one job's wall was pure fixed overhead per batch)
+        // two INDEPENDENT jobs over the persisted frame, submitted from
+        // two threads so the second back-fills the first's commit
+        // tail; each writes one file per non-empty partition of the
+        // batch-shaped merge, whatever StoreBuckets is
         val writeLists: Runnable = () =>
-          merged
-            .withColumn("qb", storeBucket(col("query_id"), StoreBuckets))
-            // one bucket lands in one task → ≤ one file per bucket
-            // dir (touched-only rows: a batch-shaped shuffle)
-            .repartition(col("qb"))
-            .write.partitionBy("qb").mode("overwrite")
-            .parquet(s"$listsDir/delta=$batchId")
+          bucketSorted(merged, "qb", "query_id")
+            .write.mode("overwrite").parquet(s"$listsDir/delta=$batchId")
         // postings mirror: the same replacement lists inverted and
-        // re-bucketed by the NEIGHBOR id — the key the reverse
-        // lookup below prunes on
+        // sorted by the NEIGHBOR id's bucket — the key the reverse
+        // lookup below filters on
         val writePostings: Runnable = () =>
-          merged.select("query_id", "nn_id")
-            .withColumn("nb", storeBucket(col("nn_id"), StoreBuckets))
-            .repartition(col("nb"))
-            .write.partitionBy("nb").mode("overwrite")
+          bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id")
+            .write.mode("overwrite")
             .parquet(s"${postingsPath(listsDir)}/delta=$batchId")
         val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         try {
@@ -1221,13 +1219,12 @@ object Streams {
         // 2. mine set M = T ∪ reverse-references (queries whose lists
         // hold a touched query as neighbor — their margins consume
         // that neighbor's now-changed mean), looked up in the
-        // POSTINGS mirror pruned to T's nb buckets — O(touched)
-        // directories, never a full store scan (the r12 weak mark).
-        // Scanning superseded postings rows over-approximates M:
-        // harmless (bitwise-identical re-mine)
+        // POSTINGS mirror filtered to T's nb buckets. Scanning
+        // superseded postings rows over-approximates M: harmless
+        // (bitwise-identical re-mine)
         val rev =
           if (hasLists)
-            spark.read.parquet(postingsPath(listsDir))
+            readDeltas(spark, postingsPath(listsDir), PostingsSchema)
               .filter(col("delta") < batchId &&
                 bucketPred("nb", touchedBuckets))
               .join(touched.select(col("query_id").as("nn_id")),
@@ -1239,36 +1236,29 @@ object Streams {
         try {
           // 3. re-mine M: frame = current lists of M plus of M's list
           // members (their means feed M's margins). The member set is
-          // taken from a store scan PRUNED to M's qb buckets and
+          // taken from a store scan filtered to M's qb buckets and
           // semi-joined on M (stale rows over-approximate it — extra
           // means cost a few folds and change nothing). Margins of
           // those 2-hop frame queries can drop candidate rows at the
           // mean join — the M semi-join below discards their outputs,
           // and every row surviving for q ∈ M consumed complete means
           // same first-batch rule as touchedBuckets: with no prior
-          // state, M ∪ its members cover the whole single delta and
-          // the collects cannot prune anything. Superset
+          // state the collects cannot filter anything. Superset
           // short-circuit (r14): M ⊇ T, so when T already hit every
-          // bucket (touchedBuckets = None — the exact mode's
-          // corpus-shaped batches land here by construction) M must
-          // too — the collect job is provably a no-op and is skipped
-          // outright instead of paying a distinct+collect pass per
-          // batch for an all-buckets answer
+          // bucket (touchedBuckets = None — the exact mode by
+          // construction) M does too and its collect is skipped
           val mBuckets =
             if (hasLists && touchedBuckets.isDefined)
               hitBuckets(m, "query_id", StoreBuckets)
             else None
-          val nnOfM = spark.read.parquet(listsDir)
+          val nnOfM = readDeltas(spark, listsDir, ListsSchema)
             .filter(col("delta") <= batchId &&
               bucketPred("qb", mBuckets))
             .join(m, Seq("query_id"), "left_semi")
             .select(col("nn_id").as("query_id"))
           // the frame is a multi-shuffle lookup consumed several times
-          // by the two marginScore passes — persist it (the old tail
-          // re-read a cheap full-state parquet snapshot instead; the
-          // touched-only lookups are narrower but not free to re-run).
-          // frameQids persists too: its bucket set is collected before
-          // the frame lookup consumes it
+          // by the two marginScore passes — persist it; frameQids too:
+          // its bucket set is collected before the lookup consumes it
           val frameQids = m.unionByName(nnOfM)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           // frameQids ⊇ M: the same superset short-circuit — an
@@ -1402,8 +1392,7 @@ object Streams {
         .filter(_ <= upTo).sorted
     if (ids.nonEmpty)
       stagedReplaceDelta(spark, dir, upTo,
-        fold(ids.map(i => spark.read.parquet(s"$dir/delta=$i"))),
-        partitionCols = Seq.empty)
+        fold(ids.map(i => spark.read.parquet(s"$dir/delta=$i"))))
   }
 
   /** One [[ingestCrossLingualStream]] micro-batch — factored out so
@@ -1424,10 +1413,10 @@ object Streams {
     val t0 = System.nanoTime()
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    // heal any vecs-store compaction swap a crash left mid-flight
-    // (the lists/postings/pairs sweep runs inside mergeListsAndMine,
-    // but the vector deltas are read before that)
-    recoverStores(spark, vecsDir)
+    // read-side crash contract: heal any compaction swap a crash left
+    // mid-flight, and refuse a retired-layout store, before this batch
+    // reads or writes anything
+    recoverStores(spark, vecsDir, listsDir, postingsPath(listsDir), pairsDir)
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1465,7 +1454,7 @@ object Streams {
       }
       val newPairs =
         (if (hasPrior) {
-          val prior = spark.read.parquet(vecsDir)
+          val prior = readDeltas(spark, vecsDir, b.schema.toDDL)
             .filter(col("delta") < batchId).select("id", "v")
           crossParity(b, prior, dedupe = false)
             .unionByName(crossParity(b, b, dedupe = true))
@@ -1609,9 +1598,8 @@ object Streams {
     val t0 = System.nanoTime()
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    // heal any vecs-store compaction swap a crash left mid-flight
-    // (read before mergeListsAndMine's own sweep)
-    recoverStores(spark, vecsDir)
+    // the same sweep as the exact mode, before anything is touched
+    recoverStores(spark, vecsDir, listsDir, postingsPath(listsDir), pairsDir)
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1625,9 +1613,10 @@ object Streams {
           val (a, c) = Similarity.ivfIndex(
             b, "id", "v", nlist, sampleSize)
           c.write.mode("overwrite").parquet(centroidsDir)
-          (a, spark.read.parquet(centroidsDir))
+          (a, spark.read.schema(c.schema).parquet(centroidsDir))
         } else {
-          val c = spark.read.parquet(centroidsDir)
+          val c = spark.read.schema("cell INT, centroid ARRAY<FLOAT>")
+            .parquet(centroidsDir)
           (Similarity.ivfAssign(b, "id", "v", c), c)
         }
       // the batch's assignments feed the probe index AND the delta
@@ -1640,7 +1629,7 @@ object Streams {
         val hasPrior = hasPriorDeltas(vecsDir, batchId, spark)
         val index =
           if (hasPrior)
-            spark.read.parquet(vecsDir)
+            readDeltas(spark, vecsDir, own.schema.toDDL)
               .filter(col("delta") < batchId)
               .select("id", "v", "cell")
               .unionByName(own)
@@ -1775,8 +1764,7 @@ object Streams {
           // compactCrossLingualState)
           recoverStores(s, deltaDir)
           stagedReplaceDelta(s, deltaDir, batchId - 1,
-            compactTombstoneDeltas(s, deltaDir, batchId - 1),
-            partitionCols = Seq.empty)
+            compactTombstoneDeltas(s, deltaDir, batchId - 1))
         }
       }
       .start()

@@ -213,8 +213,18 @@ object Probe {
     val cut = e.select(col("vec_id")).orderBy(col("vec_id").desc)
       .limit(batchRows).agg(min(col("vec_id"))).first().getLong(0)
     val nlist = math.max(16, (n / 128).toInt)
-    // prior corpus split into priorDeltas contiguous id ranges
-    val loMax = cut - 1
+    // prior corpus split into priorDeltas contiguous id ranges of
+    // equal ROW counts (absolute id ranges leave slices empty or
+    // skewed on offset or sparse ids); slice i is [bounds(i),
+    // bounds(i + 1)), and the last ends at the timed batch's cut
+    val priorIds = e.select(col("vec_id")).filter(col("vec_id") < cut)
+      .orderBy(col("vec_id")).collect().map(_.getLong(0))
+    require(priorIds.length >= priorDeltas,
+      s"${priorIds.length} prior rows cannot fill $priorDeltas deltas")
+    val bounds = (0 until priorDeltas)
+      .map(i => priorIds(priorIds.length * i / priorDeltas)) :+ cut
+    require(bounds.sliding(2).forall { case Seq(lo, hi) => lo < hi },
+      s"an empty prior slice: bounds ${bounds.mkString(", ")}")
     println(s"corpus $n rows; prior ${n - batchRows} rows over " +
       s"$priorDeltas deltas (compactEvery=$compactEvery), timed batch " +
       s"$batchRows rows, nlist $nlist, nprobe 4")
@@ -224,12 +234,9 @@ object Probe {
         .createTempDirectory("graft_tailprobe_").toString
       try {
         for (i <- 0 until priorDeltas) {
-          val lo = loMax * i.toLong / priorDeltas
-          val hi =
-            if (i == priorDeltas - 1) cut
-            else loMax * (i + 1).toLong / priorDeltas
           graft.streaming.Streams.ingestCrossLingualAnnBatch(
-            e.filter(col("vec_id") >= lo && col("vec_id") < hi),
+            e.filter(col("vec_id") >= bounds(i) &&
+              col("vec_id") < bounds(i + 1)),
             i.toLong, "vec_id", "embedding",
             s"$base/vecs", s"$base/cents", s"$base/lists", s"$base/pairs",
             4, 1.05, nlist, 4, 256)

@@ -740,8 +740,7 @@ class StreamsSpec extends AnyFunSuite {
       // byte-level snapshot of the batch-0 list delta — the r11
       // verdict's pin: untouched lists are bitwise INERT, so a later
       // batch must not rewrite (or even re-open for write) delta=0.
-      // Recursive walk: deltas are bucket-partitioned (delta=N/qb=H)
-      // since r13, so the data files live one level down
+      // Recursive walk, so the pin holds whatever the delta layout
       def snapshot(dir: String): Map[String, String] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isFile) Seq(f)
@@ -1519,11 +1518,12 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed store lookups prune at the LISTING level: a literal " +
-      "qb/nb filter reaches the scan's partition filters and drops " +
-      "bucket directories from the selected file set") {
+  test("bucket-sorted stores: a hitBuckets set reaches the Parquet " +
+      "scan's pushed filters as that exact set, and every delta data " +
+      "file is sorted by its bucket column") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.sources
     val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
       .select("vec_id", "embedding")
     val cut = e.agg(max($"vec_id")).first().getLong(0) / 2
@@ -1531,41 +1531,202 @@ class StreamsSpec extends AnyFunSuite {
       e.filter(p).as[(Long, Seq[Float])].collect().toSeq
         .toDF("vec_id", "embedding")
     val base = java.nio.file.Files
-      .createTempDirectory("graft_xling_prune_").toString
+      .createTempDirectory("graft_xling_sorted_").toString
     try {
       for ((bdf, n) <- Seq(half($"vec_id" <= cut) -> 0L,
           half($"vec_id" > cut) -> 1L))
         Streams.ingestCrossLingualAnnBatch(bdf, n, "vec_id", "embedding",
           s"$base/vecs", s"$base/cents", s"$base/lists", s"$base/pairs",
           4, 1.05, 4, 4, 256)
-      // the exact read shape the tail's lookups build: delta bound +
-      // literal bucket isin — assert it prunes the FILE LISTING, not
-      // just post-scan rows (the whole point of the layout)
-      def pin(dir: String, bucketCol: String): Unit = {
-        val v = spark.read.parquet(dir)
-          .select(bucketCol).distinct().as[Int].head()
-        val pruned = spark.read.parquet(dir)
-          .filter(col("delta") <= 1L && col(bucketCol).isin(v))
-        val scan = pruned.queryExecution.executedPlan.collectFirst {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-        }.getOrElse(fail(s"$dir: expected a FileSourceScanExec"))
-        assert(scan.partitionFilters.exists(
-          _.references.exists(_.name == bucketCol)),
-          s"$dir: the $bucketCol literal filter did not reach the " +
-            "scan's PARTITION filters")
-        val all = spark.read.parquet(dir).inputFiles.length
-        val selected = scan.relation.location
-          .listFiles(scan.partitionFilters, scan.dataFilters)
-          .flatMap(_.files)
-        assert(selected.nonEmpty &&
-          selected.forall(_.getPath.toString.contains(s"/$bucketCol=$v/")),
-          s"$dir: selected files leaked outside the filtered bucket")
-        assert(selected.length < all,
-          s"$dir: listing not pruned — ${selected.length} of $all " +
-            "files selected")
+      // non-contiguous and above the in-filter threshold (10)
+      val want = Seq(0, 1, 2, 3, 5, 7, 8, 9, 12, 15, 16, 20, 21, 22, 25, 30)
+      def pin(dir: String, keyCol: String, bucketCol: String): Unit = {
+        val keys = spark.read.parquet(dir).select(keyCol).distinct()
+          .filter(storeBucket(col(keyCol), StoreBuckets).isin(want: _*))
+        val hit = hitBuckets(keys, keyCol, StoreBuckets)
+        assert(hit.map(_.sorted) == Some(want), s"$dir: fixture hit set")
+        // the read shape the tail's lookups build: delta bound +
+        // bucketPred over the hit set
+        val scan = spark.read.parquet(dir)
+          .filter(col("delta") <= 1L && bucketPred(bucketCol, hit))
+          .queryExecution.executedPlan.collectFirst {
+            case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+          }.getOrElse(fail(s"$dir: expected a FileSourceScanExec"))
+        // the filters the scan hands Parquet (Scala-protected; public
+        // in bytecode)
+        val pushed = scan.getClass.getMethod("pushedDownFilters")
+          .invoke(scan).asInstanceOf[Seq[sources.Filter]]
+        // the bucket set a pushed filter on the bucket column admits
+        val admits = pushed.collect {
+          case sources.In(`bucketCol`, vs) => vs.toSet
+          case sources.EqualTo(`bucketCol`, v) => Set(v)
+        }
+        assert(admits == Seq(want.toSet),
+          s"$dir: pushed filters ${pushed.mkString(", ")} do not carry " +
+            s"the exact $bucketCol set")
+        // plain files, no bucket directories, each sorted by bucket
+        val deltas = new java.io.File(dir).listFiles()
+          .filter(_.getName.startsWith("delta="))
+        assert(deltas.length == 2)
+        assert(deltas.flatMap(_.listFiles()).forall(_.isFile),
+          s"$dir: a delta holds a directory")
+        val files = deltas.flatMap(_.listFiles())
+          .filter(_.getName.endsWith(".parquet"))
+        assert(files.nonEmpty)
+        files.foreach { f =>
+          val bs = spark.read.parquet(f.getPath).select(bucketCol)
+            .as[Int].collect().toSeq
+          assert(bs.nonEmpty && bs == bs.sorted,
+            s"$f is not sorted by $bucketCol")
+        }
       }
-      pin(s"$base/lists", "qb")
-      pin(s"$base/lists_postings", "nb")
+      pin(s"$base/lists", "query_id", "qb")
+      pin(s"$base/lists_postings", "nn_id", "nb")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(base))
+    }
+  }
+
+  test("row-group skipping engages on a multi-row-group bucket-sorted " +
+      "delta: the exact bucket set reads fewer rows than its min/max " +
+      "range and keeps every matching row") {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_xling_rowgroups_").toString
+    try {
+      // one bucket-sorted lists-shaped file cut into many small row
+      // groups (each spans a short bucket run)
+      bucketSorted(spark.range(0, 20000, 1, 1).select(
+          col("id").as("query_id"), (col("id") + 1).as("nn_id")),
+          "qb", "query_id")
+        .write.option("parquet.block.size", 16 * 1024)
+        .parquet(s"$base/delta=0")
+      // 12 buckets with gaps inside [0, 25], above the in-filter
+      // threshold (10)
+      val hit = Seq(0, 1, 2, 3, 4, 5, 9, 20, 21, 22, 23, 25)
+      def scanned(pred: org.apache.spark.sql.Column): (Long, Long) = {
+        val df = spark.read.parquet(base).filter(pred)
+        // collect, not count: the scan metrics live in df's own plan
+        val n = df.collect().length.toLong
+        val scan = df.queryExecution.executedPlan.collectFirst {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }.getOrElse(fail("expected a FileSourceScanExec"))
+        (n, scan.metrics("numOutputRows").value)
+      }
+      // the matching rows, counted off the generator, not the file
+      val want = spark.range(0, 20000)
+        .filter(storeBucket(col("id"), StoreBuckets).isin(hit: _*)).count()
+      val (exactN, exactRead) = scanned(bucketPred("qb", Some(hit)))
+      val rangeRead = scanned(col("qb").between(0, 25))._2
+      assert(exactN == want && want > 0L)
+      assert(exactRead < rangeRead && rangeRead < 20000L,
+        s"exact set read $exactRead rows, its range $rangeRead of 20000")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(base))
+    }
+  }
+
+  test("schema-declared store reads: building crossLingualLists, " +
+      "crossLingualPostings and crossLingualPairs starts no Spark job " +
+      "before the action") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select("vec_id", "embedding").filter($"vec_id" < 160)
+    def part(p: org.apache.spark.sql.Column) =
+      e.filter(p).as[(Long, Seq[Float])].collect().toSeq
+        .toDF("vec_id", "embedding")
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_xling_nojob_").toString
+    val sc = spark.sparkContext
+    // job-group id of every job start the listener has seen
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // the listener queue delivers in order: once a marker job's
+      // start is seen, every earlier start has been delivered
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.contains(marker), "listener never saw the marker")
+      started.toArray.count(_ == group)
+    }
+    try {
+      for ((p, n) <- Seq(($"vec_id" < 80) -> 0L, ($"vec_id" >= 80) -> 1L))
+        Streams.ingestCrossLingualBatch(part(p), n, "vec_id", "embedding",
+          s"$base/vecs", s"$base/lists", s"$base/pairs", 4, 1.05)
+      sc.addSparkListener(listener)
+      // control: an undeclared read infers its schema with a job, so
+      // the listener does see jobs of the group
+      assert(jobsIn("graft-inferred-read") {
+        spark.read.parquet(s"$base/pairs")
+      } >= 1)
+      var folds = Seq.empty[org.apache.spark.sql.DataFrame]
+      assert(jobsIn("graft-declared-reads") {
+        folds = Seq(Streams.crossLingualLists(spark, s"$base/lists"),
+          Streams.crossLingualPostings(spark, s"$base/lists"),
+          Streams.crossLingualPairs(spark, s"$base/pairs"))
+      } == 0, "building a fold started a Spark job before its action")
+      assert(folds.take(2).forall(_.count() > 0L))
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(base))
+    }
+  }
+
+  test("a store in the retired qb=/nb= bucket-directory layout fails " +
+      "loud in every writer and fold, naming the store and the re-ingest") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_xling_oldlayout_").toString
+    try {
+      // the old layout on a tiny fixture: lists under delta=0/qb=H,
+      // postings under delta=0/nb=H, pairs plain
+      val lists = spark.range(8).select($"id".as("query_id"),
+        ($"id" + 1).as("nn_id"), lit(0.5).as("cos"), lit(1L).as("rank"))
+      lists.withColumn("qb", ($"query_id" % 4).cast("int"))
+        .write.partitionBy("qb").parquet(s"$base/lists/delta=0")
+      lists.select($"query_id", $"nn_id",
+          ($"nn_id" % 4).cast("int").as("nb"))
+        .write.partitionBy("nb").parquet(s"$base/lists_postings/delta=0")
+      lists.select($"query_id", $"nn_id".as("partner_id"), $"cos",
+          lit(1.1).as("margin"), lit(true).as("alive"))
+        .write.parquet(s"$base/pairs/delta=0")
+      val emb = spark.read
+        .parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+        .select("vec_id", "embedding").limit(4)
+      def loud(store: String)(body: => Unit): Unit = {
+        val err = intercept[IllegalStateException](body).getMessage
+        assert(err.contains(s"delta store $store ") &&
+          err.contains("re-ingest"), err)
+      }
+      loud(s"$base/lists")(Streams.crossLingualLists(spark, s"$base/lists"))
+      loud(s"$base/lists_postings")(
+        Streams.crossLingualPostings(spark, s"$base/lists"))
+      loud(s"$base/lists")(Streams.compactCrossLingualState(
+        spark, s"$base/lists", s"$base/pairs", 0L))
+      loud(s"$base/lists")(Streams.ingestCrossLingualBatch(emb, 1L,
+        "vec_id", "embedding", s"$base/vecs", s"$base/lists",
+        s"$base/pairs", 4, 1.05))
+      // the writer failed before writing its vector delta
+      assert(!new java.io.File(s"$base/vecs").exists())
+      // a plain store still folds
+      Streams.crossLingualPairs(spark, s"$base/pairs").collect()
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(base))
