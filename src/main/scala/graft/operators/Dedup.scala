@@ -505,33 +505,39 @@ object Dedup {
     verifyJaccard(candidates, all.select("id", "ngrams"), minJ)
   }
 
-  /** Compact a persisted [[minHashIndex]] lineage: union any number
-    * of per-batch index deltas, resolve docs re-ingested in a later
-    * delta to their LATEST rows (last-writer-wins by delta position —
-    * re-crawled pages, edited docs), and drop tombstoned ids
-    * (takedowns, retention). The maintenance half of the incremental
-    * story: [[minHashLshIncremental]] keeps ingestion O(batch), this
-    * keeps the index itself from accreting stale/duplicate entries —
-    * without it every probe pays for dead rows and a re-ingested doc
-    * collides with its own ghost.
+  /** Compact a delta-store index lineage: union any number of
+    * per-batch index deltas, resolve ids re-ingested in a later delta
+    * to their LATEST rows (last-writer-wins by delta position —
+    * re-crawled pages, edited docs, re-embedded vectors), and drop
+    * tombstoned ids (takedowns, retention). The maintenance half of
+    * the incremental story: [[minHashLshIncremental]] and the IVF
+    * probes keep ingestion O(batch), this keeps the index itself from
+    * accreting stale/duplicate entries — without it every probe pays
+    * for dead rows and a re-ingested id collides with its own ghost.
+    *
+    * `valueCols` are the index's columns beside `id`:
+    * (ngrams, bands) for a [[minHashIndex]] lineage (the default),
+    * (v, cell) for a [[Similarity.ivfIndex]] / [[Similarity.ivfAssign]]
+    * lineage.
     *
     * Scale shape: one row_number window keyed by id (the LWW resolve
     * — per-id partitions, parallel), one left-anti join against the
     * tombstone set (broadcast when small). Deltas are parquet-backed
-    * DataFrames in production; nothing is collected. Output: the same
-    * (id, ngrams, bands) schema [[minHashIndex]] emits, so compacted
-    * indexes feed [[minHashLshPairsFromIndex]] / incremental probes
-    * unchanged. */
+    * DataFrames in production; nothing is collected. Output: the
+    * (id, valueCols...) schema the index emits, so compacted indexes
+    * feed [[minHashLshPairsFromIndex]] / incremental probes /
+    * [[Similarity.ivfProbe]] unchanged. */
   def compactIndex(
       deltas: Seq[DataFrame],
       tombstones: Option[DataFrame] = None,
-      tombstoneIdCol: String = "id"): DataFrame = {
+      tombstoneIdCol: String = "id",
+      valueCols: Seq[String] = Seq("ngrams", "bands")): DataFrame = {
     require(deltas.nonEmpty, "compactIndex needs at least one delta")
+    val cols = "id" +: valueCols
     val tagged = deltas.zipWithIndex.map { case (d, i) =>
-      d.select(col("id"), col("ngrams"), col("bands"))
-        .withColumn("_delta", lit(i))
+      d.select(cols.map(col): _*).withColumn("_delta", lit(i))
     }.reduce(_ unionByName _)
-    // minHashIndex deltas carry one row per id, but arbitrary caller
+    // index builders emit one row per id, but arbitrary caller
     // DataFrames may not — a duplicate id WITHIN one delta must still
     // resolve deterministically, so the LWW window tiebreaks on a
     // content hash (identical-content ties are harmless by identity;
@@ -540,9 +546,9 @@ object Dedup {
     val lww = tagged
       .withColumn("_rk", row_number().over(
         Window.partitionBy("id").orderBy(
-          col("_delta").desc, xxhash64(col("ngrams"), col("bands")).asc)))
+          col("_delta").desc, xxhash64(valueCols.map(col): _*).asc)))
       .filter(col("_rk") === 1)
-      .select("id", "ngrams", "bands")
+      .select(cols.map(col): _*)
     tombstones match {
       case Some(t) =>
         lww.join(t.select(col(tombstoneIdCol).as("id")).distinct(),
@@ -920,7 +926,7 @@ object Dedup {
     * invalidates every derived artifact keyed on it, and a fully
     * deleted cluster (n_survivors = 0) must propagate the delete
     * into indexes rather than re-elect — demonstrated end to end by
-    * q274 (this report driving [[compactIndex]]/ivfCompact, then a
+    * q274 (this report driving [[compactIndex]] on both indexes, then a
     * probe proving no tombstoned id is ever returned), with the
     * packed layer covered by [[Pack.deleteBlastRadius]] (q275), the
     * k-NN list layer by [[Similarity.listInvalidation]] (q276), and

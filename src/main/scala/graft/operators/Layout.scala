@@ -86,16 +86,6 @@ object Layout {
       .drop(cols.flatMap(c => Seq(s"_mn_$c", s"_mx_$c")): _*)
   }
 
-  /** The layout write: range-partition on z and sort within
-    * partitions, so downstream parquet files carry tight min/max
-    * footer stats on every clustered column. Partition COUNT comes
-    * from Spark's range sampler; file CONTENT order is the
-    * deterministic z order. */
-  def zOrderWrite(df: DataFrame, cols: Seq[String], bits: Int = 16): DataFrame =
-    zOrdered(df, cols, bits)
-      .repartitionByRange(col("z"))
-      .sortWithinPartitions("z")
-
   /** Spec hook: mean span of distinct cells touched per narrow
     * predicate on `probeCol` — the pruning-benefit measurement
     * (z-order's reason to exist): how many of the 2^cellBits cells

@@ -135,151 +135,4 @@ object Quantize {
     val proj = randomProjector(inDim, outDim, salt)
     df.select(col(idCol).as("id"), proj(col(vecCol)).as("proj"))
   }
-
-  // -------------------------------------------------------------------
-  // Product quantization — the THIRD compression axis: int8 shrinks
-  // bytes PER dimension (4x), JL shrinks the dimension COUNT; PQ
-  // replaces the vector with m sub-space codebook indices (Jégou,
-  // Douze, Schmid, "Product Quantization for Nearest Neighbor
-  // Search", TPAMI 2011) — a 64-dim float32 vector becomes m=8 bytes,
-  // 32x fewer candidate-join bytes, with the codebook (m·k·subDim
-  // floats, a few KB) broadcast instead of shuffled.
-  // -------------------------------------------------------------------
-
-  /** A trained PQ codebook: `cents(s)(c)` is sub-space `s`'s code-`c`
-    * centroid (subDim floats). Driver-sized by construction
-    * (m · codes · subDim floats — KBs), so it broadcasts with the
-    * scoring closures the way the IVF centroid array does. */
-  case class PqCodebook(
-      m: Int, subDim: Int, cents: Array[Array[Array[Float]]]) {
-    def codes: Int = cents(0).length
-  }
-
-  /** Train per-sub-space codebooks with Lloyd k-means (L2 on
-    * sub-vectors) over a BOUNDED in-memory sample — the same
-    * training contract as IVF's `trainCentroids`: deterministic
-    * (init = the first `codes` sample sub-vectors of a hash-ordered
-    * sample, sequential driver fold), and O(sample · dim) memory
-    * regardless of corpus size. Callers score cosine, so pass
-    * unit-normalized sample vectors — PQ itself is metric-neutral.
-    *
-    * `dim % m == 0` is required loudly: a ragged split would silently
-    * give the last sub-space a different resolution. */
-  def pqTrain(
-      sample: Array[Array[Float]],
-      m: Int,
-      codes: Int = 16,
-      iters: Int = 5): PqCodebook = {
-    require(sample.nonEmpty, "pqTrain needs a non-empty sample")
-    require(m >= 1, s"m must be >= 1, got $m")
-    require(codes >= 1 && codes <= 256,
-      s"codes must be in [1, 256] (one byte per sub-space), got $codes")
-    val dim = sample(0).length
-    require(dim % m == 0,
-      s"vector dim $dim is not divisible by m=$m sub-spaces — a ragged " +
-        "split would quantize the tail at a different resolution; pick " +
-        "m dividing the dimension")
-    val subDim = dim / m
-    val cents = Array.tabulate(m) { s =>
-      val off = s * subDim
-      val subs = sample.map(v => java.util.Arrays.copyOfRange(v, off, off + subDim))
-      val k = math.min(codes, subs.length)
-      var cs = subs.take(k).map(_.clone)
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(k)(new Array[Double](subDim))
-        val counts = new Array[Int](k)
-        subs.foreach { x =>
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            var d = 0.0; var i = 0
-            val cent = cs(c)
-            while (i < subDim) {
-              val diff = x(i).toDouble - cent(i); d += diff * diff; i += 1
-            }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          val acc = sums(best)
-          var i = 0
-          while (i < subDim) { acc(i) += x(i); i += 1 }
-          counts(best) += 1
-        }
-        cs = Array.tabulate(k) { c =>
-          if (counts(c) == 0) cs(c) // keep empty codes stable
-          else Array.tabulate(subDim)(i => (sums(c)(i) / counts(c)).toFloat)
-        }
-        it += 1
-      }
-      cs
-    }
-    PqCodebook(m, subDim, cents)
-  }
-
-  /** Map-side PQ encoder: array<float> → array<tinyint> of m nearest
-    * sub-space codes (L2 argmin, ties to the lower code). The corpus
-    * side of an ANN candidate join carries these m bytes instead of
-    * dim floats. Vectors must have exactly m·subDim components —
-    * anything else fails loudly (a short vector would silently
-    * quantize garbage for its missing tail). */
-  def pqEncoder(cb: PqCodebook): Column => Column = {
-    val m = cb.m; val subDim = cb.subDim; val cents = cb.cents
-    val u = udf((v: scala.collection.Seq[Float]) =>
-      if (v == null) null
-      else {
-        require(v.length == m * subDim,
-          s"vector dim ${v.length} != codebook dim ${m * subDim}")
-        val out = new Array[Byte](m)
-        var s = 0
-        while (s < m) {
-          val cs = cents(s)
-          val off = s * subDim
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < cs.length) {
-            var d = 0.0; var i = 0
-            val cent = cs(c)
-            while (i < subDim) {
-              val diff = v(off + i).toDouble - cent(i); d += diff * diff
-              i += 1
-            }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          out(s) = best.toByte
-          s += 1
-        }
-        out
-      })
-    (c: Column) => u(c)
-  }
-
-  /** Asymmetric-distance score of a raw query against PQ codes:
-    * dot(q, x̂) = Σ_s dot(q_s, cents(s)(code_s)), sub-spaces folded in
-    * ascending order, components ascending within each — one fixed
-    * IEEE summation order, deterministic across partitionings and
-    * retries. Over unit-normalized inputs this approximates cosine;
-    * the candidate join that feeds it moves m BYTES per corpus row. */
-  def pqScorer(cb: PqCodebook): (Column, Column) => Column = {
-    val m = cb.m; val subDim = cb.subDim; val cents = cb.cents
-    val u = udf((q: scala.collection.Seq[Float], codes: Array[Byte]) =>
-      if (q == null || codes == null) null.asInstanceOf[java.lang.Double]
-      else {
-        require(codes.length == m, s"code width ${codes.length} != m=$m")
-        var acc = 0.0
-        var s = 0
-        while (s < m) {
-          val cent = cents(s)(codes(s) & 0xff)
-          val off = s * subDim
-          var i = 0
-          while (i < subDim && off + i < q.length) {
-            acc += q(off + i).toDouble * cent(i); i += 1
-          }
-          s += 1
-        }
-        java.lang.Double.valueOf(acc)
-      })
-    (q: Column, codes: Column) => u(q, codes)
-  }
 }

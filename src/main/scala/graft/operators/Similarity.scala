@@ -882,7 +882,7 @@ object Similarity {
     * corpus is never re-scanned), each batch vector simply routes to
     * its nearest existing cell in one map pass. Output is a schema
     * drop-in for the index's `assignments` half (id, v, cell), written
-    * as `indexDir/delta=N` in production — the layout [[ivfCompact]]
+    * as `indexDir/delta=N` in production — the layout [[Dedup.compactIndex]]
     * consumes. As deltas accumulate the centroids go STALE (the data
     * distribution drifts from what they were trained on); gate every
     * maintenance cycle with [[ivfStalenessGate]] and retrain
@@ -897,47 +897,6 @@ object Similarity {
       probeCells(x, cents, 1)(0))
     batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("cell", assignUdf(col("v")))
-  }
-
-  /** Compact an [[ivfIndex]] assignment lineage — the ANN twin of
-    * [[Dedup.compactIndex]]: union any number of per-batch assignment
-    * deltas ([[ivfIndex]]'s base + [[ivfAssign]] appends), resolve
-    * vec ids re-ingested in a later delta to their LATEST rows
-    * (last-writer-wins by delta position — re-embedded docs, model
-    * upgrades, re-crawls), and drop tombstoned ids (takedowns,
-    * retention). The maintenance half of the ANN index story: without
-    * it every probe pays for dead rows and a re-embedded vector
-    * collides with its own ghost.
-    *
-    * Scale shape: one row_number window keyed by id (per-id
-    * partitions, parallel) + one left-anti join against the tombstone
-    * set (broadcast when small). Deltas are parquet-backed DataFrames
-    * in production; nothing is collected. A duplicate id WITHIN one
-    * delta resolves deterministically via a content-hash tiebreak
-    * (same contract as [[Dedup.compactIndex]]). Output: the same
-    * (id, v, cell) schema — a drop-in for [[ivfProbe]] and
-    * [[ivfStalenessGate]]. */
-  def ivfCompact(
-      deltas: Seq[DataFrame],
-      tombstones: Option[DataFrame] = None,
-      tombstoneIdCol: String = "id"): DataFrame = {
-    require(deltas.nonEmpty, "ivfCompact needs at least one delta")
-    val tagged = deltas.zipWithIndex.map { case (d, i) =>
-      d.select(col("id"), col("v"), col("cell"))
-        .withColumn("_delta", lit(i))
-    }.reduce(_ unionByName _)
-    val lww = tagged
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("id").orderBy(
-          col("_delta").desc, xxhash64(col("v"), col("cell")).asc)))
-      .filter(col("_rk") === 1)
-      .select("id", "v", "cell")
-    tombstones match {
-      case Some(t) =>
-        lww.join(t.select(col(tombstoneIdCol).as("id")).distinct(),
-          Seq("id"), "left_anti")
-      case None => lww
-    }
   }
 
   /** Centroid-staleness gate — the recall-drift alarm for a
@@ -1059,7 +1018,7 @@ object Similarity {
   /** Tombstone blast radius through maintained k-NN LIST state — the
     * fourth derived artifact the right-to-be-forgotten story touches
     * (clusters: [[Dedup.deletePropagation]]; indexes:
-    * [[Dedup.compactIndex]]/[[ivfCompact]]; packed chunks:
+    * [[Dedup.compactIndex]]; packed chunks:
     * [[Pack.deleteBlastRadius]]; and here the per-query neighbor
     * lists a [[graft.streaming.Streams.ingestCrossLingualStream]]-
     * style pipeline maintains). Deleting a vector does two distinct
@@ -1181,7 +1140,7 @@ object Similarity {
     require(ghost.isEmpty,
       s"listRepair: survivor index still contains tombstoned id " +
         s"${ghost.headOption.map(_.getLong(0)).getOrElse(-1L)} — " +
-        "compact the index first (ivfCompact / compactIndex); " +
+        "compact the index first (Dedup.compactIndex); " +
         "repairing against a ghost-bearing index would re-insert " +
         "deleted vectors as neighbors.")
     // radius appears in both union branches — a pure lazy plan, so one

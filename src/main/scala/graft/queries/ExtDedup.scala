@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Par
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.queries.Catalog.{Q, table, events}
@@ -1158,7 +1159,7 @@ private[graft] object ExtDedup {
     // fail-fast gates (limit-1, never corpus-sized collects) assert no
     // tombstoned id survives in the compacted index or appears on
     // either side of a probe pair. The same no-ghost contract runs on
-    // the ANN leg: embeddings tombstones (vec_id % 97) → ivfCompact →
+    // the ANN leg: embeddings tombstones (vec_id % 97) → compactIndex →
     // ivfProbe over the q92 sampled queries must return zero
     // tombstoned neighbors (DedupSpec pins both legs on a planted
     // fixture). Scale shape: every step is the operators' own (LSH
@@ -1210,19 +1211,18 @@ private[graft] object ExtDedup {
           "left_semi")
         .join(postRepIds, docs("doc_id") === postRepIds("id"),
           "left_anti")
-      // ANN leg: the identical contract through ivfCompact + ivfProbe.
-      // It shares NOTHING with the doc leg (embeddings vs documents),
-      // so its gate runs on a pool thread and overlaps the doc leg's
-      // probe + ghost gate (guide §2.6 — independent eager jobs;
-      // jobs submitted from the thread back-fill the doc jobs' tails)
-      val annGate: Runnable = () => {
+      // ANN leg: the identical contract through compactIndex +
+      // ivfProbe. It shares NOTHING with the doc leg (embeddings vs
+      // documents), so its gate overlaps the doc leg's probe + ghost
+      // gate
+      val (post, _) = Par.overlap {
         val e = table(s, dir, "embeddings").select("vec_id", "embedding")
         val (assign0, cents) = Similarity.ivfIndex(
           e, "vec_id", "embedding", nlist = 16)
         val tombV = e.select(col("vec_id"))
           .filter(col("vec_id") % 97 === 0)
-        val compactedV = Similarity.ivfCompact(
-          Seq(assign0), Some(tombV), "vec_id")
+        val compactedV = Dedup.compactIndex(
+          Seq(assign0), Some(tombV), "vec_id", Seq("v", "cell"))
         val annPost = Similarity.ivfProbe(
           e.filter(col("vec_id") % 10 === 1), "vec_id", "embedding",
           compactedV, cents, k = 10, nprobe = 4)
@@ -1230,10 +1230,7 @@ private[graft] object ExtDedup {
             annPost("nn_id") === tombV("vec_id"), "left_semi")
             .limit(1).isEmpty,
           "post-delete IVF probe returned a tombstoned vec_id")
-      }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      try {
-        val annFut = pool.submit(annGate)
+      } {
         val post = Dedup.minHashLshIncremental(
           probeDocs, "doc_id", "text", compacted, minJ = 0.5)
           .localCheckpoint(true) // pair-set-sized; gate + emit consume it
@@ -1242,9 +1239,9 @@ private[graft] object ExtDedup {
             post("id_b") === tomb("doc_id"), "left_semi")
         require(ghost.limit(1).isEmpty,
           "post-delete probe returned a tombstoned id")
-        annFut.get() // propagate an ANN-leg gate failure loudly
-        post.orderBy("id_a", "id_b")
-      } finally pool.shutdownNow()
+        post
+      }
+      post.orderBy("id_a", "id_b")
     },
     Some(s"""WITH RECURSIVE gg AS (SELECT doc_id, ${ngrams3(W)} AS s
         FROM documents),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Par
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.queries.Catalog.{Q, table, events}
@@ -644,42 +645,32 @@ private[queries] object ExtGovernance {
       val eb = e.filter(col("vec_id") % 2 =!= 0)
       // the LIST layer (embeddings: dual k-NN supplier + two tiny
       // checkpointed aggregates) shares nothing with the CLUSTER
-      // layer (documents: LSH + closure) — run it on a pool thread so
-      // its eager checkpoints overlap the LSH leg's jobs (guide §2.6)
-      val listsLeg = new java.util.concurrent.Callable[
-          (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] {
-        def call() = {
-          // persisted for the two list aggregates below; both are
-          // checkpointed (tiny), so the supplier runs once and the
-          // cache is dropped before the query returns
-          val lists = Similarity.bruteForceTopK(
-              eb, "vec_id", "embedding", ea, "vec_id", "embedding", k = 4)
-            .unionByName(Similarity.bruteForceTopK(
-              ea, "vec_id", "embedding", eb, "vec_id", "embedding", k = 4))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val lo = lists.select(col("query_id").as("_lqid")).distinct()
-              .localCheckpoint(true)
-            val rb = lists.filter(col("query_id") % 97 =!= 0)
-              .groupBy(col("nn_id").as("_lnn"))
-              .agg(count(lit(1)).as("_nrescore"))
-              .localCheckpoint(true)
-            (lo, rb)
-          } finally lists.unpersist(blocking = false)
-        }
-      }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      val (listOwners, rescoreByNn, clusters) =
+      // layer (documents: LSH + closure)
+      val (clusters, (listOwners, rescoreByNn)) = Par.overlap {
+        // persisted for the two list aggregates below; both are
+        // checkpointed (tiny), so the supplier runs once and the
+        // cache is dropped before the query returns
+        val lists = Similarity.bruteForceTopK(
+            eb, "vec_id", "embedding", ea, "vec_id", "embedding", k = 4)
+          .unionByName(Similarity.bruteForceTopK(
+            ea, "vec_id", "embedding", eb, "vec_id", "embedding", k = 4))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val listsFut = pool.submit(listsLeg)
-          val pairs = Dedup.minHashLshPairs(
-            docs, "doc_id", "text", n = 3, bands = 32, rowsPerBand = 4,
-            minJ = 0.5)
-          val c = Dedup.duplicateClusters(docs.select("doc_id"), pairs)
-            .localCheckpoint(true) // consumed by the report AND the join
-          val (lo, rb) = listsFut.get()
-          (lo, rb, c)
-        } finally pool.shutdownNow()
+          val lo = lists.select(col("query_id").as("_lqid")).distinct()
+            .localCheckpoint(true)
+          val rb = lists.filter(col("query_id") % 97 =!= 0)
+            .groupBy(col("nn_id").as("_lnn"))
+            .agg(count(lit(1)).as("_nrescore"))
+            .localCheckpoint(true)
+          (lo, rb)
+        } finally lists.unpersist(blocking = false)
+      } {
+        val pairs = Dedup.minHashLshPairs(
+          docs, "doc_id", "text", n = 3, bands = 32, rowsPerBand = 4,
+          minJ = 0.5)
+        Dedup.duplicateClusters(docs.select("doc_id"), pairs)
+          .localCheckpoint(true) // consumed by the report AND the join
+      }
       val tomb = docs.select(col("doc_id"))
         .filter(col("doc_id") % 97 === 0)
         .unionByName(s.range(1).select(lit(999999L).as("doc_id")))

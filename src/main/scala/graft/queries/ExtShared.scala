@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Par
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.queries.Catalog.{Q, table, events}
@@ -222,31 +223,10 @@ private[queries] object ExtShared {
       .orderBy("query_id", "rank")
     // The exact-reference collect and the ANN construction (whose
     // candidate stage is EAGER — annCandidates materializes its pair
-    // set at build) share no input but the scan: run the ANN build on
-    // a pool thread so its candidate jobs back-fill the exact
-    // reference's n·|sample| scoring tail instead of queuing behind
-    // it (§2.6 — the q274/q277 overlap pattern). The recall compare
-    // below still orders after BOTH (future.get + the collect).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val (emitted, annLists) =
-      try {
-        val annFut = pool.submit(
-          new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-            override def call(): org.apache.spark.sql.DataFrame =
-              ann(effMod)
-          })
-        val em = collectToLocal(exactRows,
-          "sampled exact reference (raise sampleMod)")
-        val lists =
-          try annFut.get()
-          catch {
-            // keep the ANN build's own require/raise message as the
-            // surfaced failure, not an ExecutionException wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        (em, lists)
-      } finally pool.shutdownNow()
+    // set at build) share no input but the scan
+    val (emitted, annLists) = Par.overlap(ann(effMod)) {
+      collectToLocal(exactRows, "sampled exact reference (raise sampleMod)")
+    }
     val recall = graft.operators.Gates.pairRecall(
       annLists.filter(col("query_id") % effMod === 0), emitted)
     graft.operators.Gates.requireFloor(recall, floor,
@@ -271,33 +251,6 @@ private[queries] object ExtShared {
           ORDER BY cos DESC, nn_id) AS BIGINT) AS rank FROM s)
       SELECT query_id, rank, nn_id, cos FROM r
       WHERE rank <= 10 ORDER BY query_id, rank"""
-
-  /** Run an independent EAGER DataFrame leg on a pool thread while
-    * the calling thread computes `main` (guide §2.6 — the
-    * q274/q277/recallGatedSampled/q278 overlap pattern): the leg's
-    * jobs back-fill the main leg's scheduling gaps instead of queuing
-    * behind it. The leg must be eager (end in a localCheckpoint /
-    * collect / its own gate) or nothing overlaps. Returns
-    * (main, leg); an ExecutionException is unwrapped so the leg's own
-    * require/raise message surfaces. */
-  def overlap[A](leg: => org.apache.spark.sql.DataFrame)(main: => A)
-      : (A, org.apache.spark.sql.DataFrame) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    try {
-      val fut = pool.submit(
-        new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-          override def call(): org.apache.spark.sql.DataFrame = leg
-        })
-      val m = main
-      val l =
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      (m, l)
-    } finally pool.shutdownNow()
-  }
 
   /** q121's fixed merge table — plays the `merges.txt` a tokenizer
     * ships; cascading ranks build "table"/"hash"/"scan" from chars. */

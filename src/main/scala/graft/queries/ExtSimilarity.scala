@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Par
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.queries.Catalog.{Q, table, events}
@@ -13,22 +14,6 @@ import graft.queries.ExtShared._
   * navigability — zero behavior change; [[Extensions.all]] still
   * concatenates every family. */
 private[queries] object ExtSimilarity {
-
-  /** Materialize two INDEPENDENT eager frames concurrently (guide
-    * §2.6): the dual-kNN suppliers' localCheckpoints are separate
-    * actions over disjoint inputs, and running them sequentially
-    * leaves the first one's task tail idle. Failures propagate
-    * loudly through get(). */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fu = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = fa })
-      val fv = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = fb })
-      (fu.get(), fv.get())
-    } finally pool.shutdownNow()
-  }
 
   private val q39_sim_bruteforce_topk = Q(
     "q39_sim_bruteforce_topk",
@@ -252,11 +237,9 @@ private[queries] object ExtSimilarity {
       val exactRows = graft.operators.Similarity.bruteForceTopK(
         corpus, "vec_id", "embedding", sampleQ, "vec_id", "embedding",
         k = 10).orderBy("query_id", "rank")
-      // the ANN leg (IVF train → probe → the gate's sampled lists) is
-      // independent of the exact-reference collect: run it on a pool
-      // thread, eagerly (localCheckpoint), so its training/probe jobs
-      // back-fill the reference's scoring tail (§2.6 overlap)
-      val (collected, annSampled) = overlap {
+      // the ANN leg (IVF train → probe → the gate's sampled lists)
+      // reads only the corpus and batch the exact reference scans
+      val (collected, annSampled) = Par.overlap {
         val (assignments, centroids) = graft.operators.Similarity
           .ivfIndex(corpus, "vec_id", "embedding", nlist = 16)
         graft.operators.Similarity.ivfProbe(
@@ -303,7 +286,7 @@ private[queries] object ExtSimilarity {
     // vectors (ivfAssign — assigned to the existing centroids, never
     // retrained), a RE-INGESTION delta re-embedding every 8th vector
     // (negated — LWW must keep the new rows and drop the ghosts),
-    // takedown tombstones (every 10th id), compacted with ivfCompact,
+    // takedown tombstones (every 10th id), compacted with compactIndex,
     // then the compacted index passes the centroid-STALENESS gate
     // (probe recall on a sampled query subset vs the exact sampled
     // reference must hold — the retrain-now alarm) and the exact
@@ -330,8 +313,8 @@ private[queries] object ExtSimilarity {
       val delta2 = graft.operators.Similarity.ivfAssign(
         reEmbedded, "vec_id", "embedding", cents)
       val tombs = e.filter(col("vec_id") % 10 === 0).select("vec_id")
-      val compacted = graft.operators.Similarity.ivfCompact(
-        Seq(assign0, delta1, delta2), Some(tombs), "vec_id")
+      val compacted = Dedup.compactIndex(
+        Seq(assign0, delta1, delta2), Some(tombs), "vec_id", Seq("v", "cell"))
       val (_, exact) = graft.operators.Similarity.ivfStalenessGate(
         compacted, cents, k = 10, nprobe = 4, floor = 0.3,
         sampleMod = 10L, sampleResidue = 1L, what = "ivf-compaction")
@@ -375,9 +358,9 @@ private[queries] object ExtSimilarity {
       val exactRows = graft.operators.Similarity.bruteForceTopK(
         corpus, "vec_id", "embedding", sampleQ, "vec_id", "embedding",
         k = 10).orderBy("query_id", "rank")
-      // same §2.6 overlap as q92: the int8 probe leg is independent
-      // of the exact-reference collect
-      val (emitted, annSampled) = overlap {
+      // as in q92, the int8 probe leg reads only the corpus and batch
+      // the exact reference scans
+      val (emitted, annSampled) = Par.overlap {
         val (assignments, centroids) = graft.operators.Similarity
           .ivfIndex(corpus, "vec_id", "embedding", nlist = 16)
         graft.operators.Similarity.ivfProbeInt8(
@@ -583,15 +566,16 @@ private[queries] object ExtSimilarity {
       // the work ran 1.5x SLOWER at sf0.1 (3.5 s vs 2.3 s — eager
       // materialization costs more than re-running the cheap
       // broadcast scan); recompute wins, so no truncation here.
-      // The two checkpoints are independent actions — overlapped
-      // (par2, guide §2.6).
-      val (fwd, bwd) = par2(
-        Similarity.bruteForceTopK(
-          b, "vec_id", "embedding", a, "vec_id", "embedding", k = 4)
-          .localCheckpoint(true),
+      // The two directions' checkpoints share only the scan.
+      val (fwd, bwd) = Par.overlap {
         Similarity.bruteForceTopK(
           a, "vec_id", "embedding", b, "vec_id", "embedding", k = 4)
-          .localCheckpoint(true))
+          .localCheckpoint(true)
+      } {
+        Similarity.bruteForceTopK(
+          b, "vec_id", "embedding", a, "vec_id", "embedding", k = 4)
+          .localCheckpoint(true)
+      }
       graft.operators.Align.marginScore(fwd, bwd, k = 4,
         minMargin = 1.05).orderBy("src_id")
     },
@@ -1150,14 +1134,16 @@ private[queries] object ExtSimilarity {
           "swap).")
       val a = e.filter(col("vec_id") % 2 === 0)
       val b = e.filter(col("vec_id") % 2 === 1)
-      // independent checkpoints, overlapped (par2, guide §2.6)
-      val (fwd, bwd) = par2(
-        Similarity.bruteForceTopK(
-          b, "vec_id", "embedding", a, "vec_id", "embedding", k = 4)
-          .localCheckpoint(true),
+      // the two directions' checkpoints share only the scan
+      val (fwd, bwd) = Par.overlap {
         Similarity.bruteForceTopK(
           a, "vec_id", "embedding", b, "vec_id", "embedding", k = 4)
-          .localCheckpoint(true))
+          .localCheckpoint(true)
+      } {
+        Similarity.bruteForceTopK(
+          b, "vec_id", "embedding", a, "vec_id", "embedding", k = 4)
+          .localCheckpoint(true)
+      }
       // at-scale candidate stage, gated in-job: IVF self-search
       // candidates restricted to cross-parity pairs must recover the
       // exact cross-side top-4 for the sampled query population
@@ -1334,50 +1320,29 @@ private[queries] object ExtSimilarity {
       // the healed leg (survivor-IVF train → listRepair → the gate's
       // sampled lists) shares nothing with the exact-reference collect
       // but the persisted supplier (block-level cache locking computes
-      // it once): run it on a pool thread, materializing its sampled
-      // lists eagerly (localCheckpoint), so its training/candidate jobs
-      // back-fill the reference's scoring tail instead of queuing
-      // behind it (§2.6 — the q274/q277/recallGatedSampled overlap
-      // pattern). The recall gate below still orders after BOTH.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+      // it once)
       try {
-        val healedFut = pool.submit(
-          new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-            override def call(): org.apache.spark.sql.DataFrame = {
-              // survivor-trained IVF (deterministic: hash-ordered
-              // bounded sample, fixed-seed k-means — the family's
-              // training rule)
-              val (assign, cents) = Similarity.ivfIndex(
-                survivors, "vec_id", "embedding",
-                nlist = 16, sampleSize = 256)
-              Similarity.listRepair(
-                  lists, e, "vec_id", "embedding", tomb, "vec_id",
-                  assign, cents, k = 4, nprobe = 4,
-                  candidateFilter =
-                    (col("query_id") % 2) =!= (col("nn_id") % 2))
-                .filter(col("query_id") % effMod === 0)
-                .select("query_id", "nn_id")
-                .localCheckpoint()
-            }
-          })
-        val emitted = collectToLocal(exact,
-          "q278 sampled exact rescore reference (raise sampleMod)")
-        val healedSampled =
-          try healedFut.get()
-          catch {
-            // keep the repair leg's own require/raise message as the
-            // surfaced failure, not an ExecutionException wrapper
-            case ex: java.util.concurrent.ExecutionException =>
-              throw ex.getCause
-          }
+        val (emitted, healedSampled) = Par.overlap {
+          // survivor-trained IVF (deterministic: hash-ordered bounded
+          // sample, fixed-seed k-means — the family's training rule)
+          val (assign, cents) = Similarity.ivfIndex(
+            survivors, "vec_id", "embedding", nlist = 16, sampleSize = 256)
+          Similarity.listRepair(
+              lists, e, "vec_id", "embedding", tomb, "vec_id",
+              assign, cents, k = 4, nprobe = 4,
+              candidateFilter = (col("query_id") % 2) =!= (col("nn_id") % 2))
+            .filter(col("query_id") % effMod === 0)
+            .select("query_id", "nn_id")
+            .localCheckpoint()
+        } {
+          collectToLocal(exact,
+            "q278 sampled exact rescore reference (raise sampleMod)")
+        }
         val recall = graft.operators.Gates.pairRecall(healedSampled, emitted)
         graft.operators.Gates.requireFloor(recall, 0.30,
           s"q278 repaired-list recall@4 (every ${effMod}th rescored query)")
         emitted.orderBy("query_id", "rank")
-      } finally {
-        pool.shutdownNow()
-        lists.unpersist(blocking = false)
-      }
+      } finally lists.unpersist(blocking = false)
     },
     Some("""WITH e AS (SELECT vec_id, embedding FROM embeddings),
       a AS (SELECT * FROM e WHERE vec_id % 2 = 0),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Par
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.queries.Catalog.{Q, table, events}
@@ -372,10 +373,9 @@ private[queries] object ExtStreaming {
         }
         // sampled exact reference: ONE corpus scan per direction over
         // the sampled queries (O(n·|sample|)) — never the n²/4 the
-        // exact streamed supplier pays. The reference is independent
-        // of the stream's state, so its collect runs on a pool thread
-        // and overlaps the whole two-batch stream run (§2.6 — the
-        // q274/q277/q278 overlap pattern)
+        // exact streamed supplier pays. It reads only the embeddings
+        // table, never the stream's state, so its collect overlaps the
+        // whole two-batch stream run
         val a = e.filter(col("vec_id") % 2 === 0)
         val b = e.filter(col("vec_id") % 2 =!= 0)
         val exact = Similarity.bruteForceTopK(
@@ -386,7 +386,7 @@ private[queries] object ExtStreaming {
             a, "vec_id", "embedding",
             b.filter(col("vec_id") % effMod === 0), "vec_id",
             "embedding", k = 4))
-        val (st, emitted) = overlap {
+        val (st, emitted) = Par.overlap {
           collectToLocal(exact,
             "q273 sampled exact reference (raise sampleMod)")
         } {

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.Par
+
 /** Structured Streaming surface (SURVEY §2.2 "Streaming"): the
   * reference has no stream semantics at all — its nearest analogs are
   * infrastructure timers (`EventLoop.cpp:152-166`) and incremental
@@ -429,20 +431,14 @@ object Streams {
           } else {
             Dedup.minHashLshPairsFromIndex(newIdx, minJ)
           }
-        // the two writes are INDEPENDENT jobs over the persisted
-        // batch index (block-level cache locking computes it once) —
-        // submit them from two threads so the delta write's tasks
-        // back-fill the pair probe's commit tail (guide §2.6; the
-        // cross-lingual tail's measured pattern)
-        val writePairs: Runnable = () => pairs.write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        val writeIdx: Runnable = () => newIdx.write.mode("overwrite")
-          .parquet(s"$indexDir/delta=$batchId")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val futs = Seq(writePairs, writeIdx).map(pool.submit(_))
-          futs.foreach(_.get()) // propagate the first failure loudly
-        } finally pool.shutdownNow()
+        // the two writes only read the persisted batch index (block-
+        // level cache locking computes it once), and the probe reads
+        // index deltas strictly below N
+        Par.overlap {
+          newIdx.write.mode("overwrite").parquet(s"$indexDir/delta=$batchId")
+        } {
+          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+        }
       } finally newIdx.unpersist(blocking = false)
       // per-batch operator cost, said out loud: an end-to-end timing
       // of the streaming query also pays query startup, trigger
@@ -465,7 +461,7 @@ object Streams {
     * streamed pair sets EQUAL the one-shot probe, not approximate it —
     * StreamsSpec pins it). Pairs land in `pairsDir/batch=N`; the
     * batch's assignments append as `indexDir/delta=N` — exactly the
-    * delta layout [[graft.operators.Similarity.ivfCompact]] consumes
+    * delta layout [[graft.operators.Dedup.compactIndex]] consumes
     * for LWW + tombstone maintenance, with
     * [[graft.operators.Similarity.ivfStalenessGate]] as the
     * retrain-now alarm as deltas accumulate.
@@ -502,7 +498,8 @@ object Streams {
         // pairsDir is append-only published output, not state
         if (compactDue(batchId, compactEvery))
           compactFamilyStore(batch.sparkSession, indexDir, batchId - 1,
-            ds => graft.operators.Similarity.ivfCompact(ds))
+            ds => graft.operators.Dedup.compactIndex(ds,
+              valueCols = Seq("v", "cell")))
       }
       .start()
   }
@@ -563,17 +560,13 @@ object Streams {
         val pairs = Similarity.ivfNearDupPairsAgainst(
           b.select(col(idCol), col(vecCol)), idCol, vecCol,
           index, cents, nprobe, minCos)
-        // independent jobs over the persisted assignments — overlap
-        // them (guide §2.6; see ingestNearDupBatch)
-        val writePairs: Runnable = () => pairs.write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        val writeOwn: Runnable = () => own.write.mode("overwrite")
-          .parquet(s"$indexDir/delta=$batchId")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val futs = Seq(writePairs, writeOwn).map(pool.submit(_))
-          futs.foreach(_.get()) // propagate the first failure loudly
-        } finally pool.shutdownNow()
+        // the two writes only read the persisted assignments, and the
+        // probe reads assignment deltas strictly below N
+        Par.overlap {
+          own.write.mode("overwrite").parquet(s"$indexDir/delta=$batchId")
+        } {
+          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+        }
       } finally own.unpersist(blocking = false)
       // attributable per-batch operator cost (see ingestNearDupBatch)
       System.err.println(f"[graft] ingestVectorBatch batch=$batchId " +
@@ -1190,118 +1183,106 @@ object Streams {
           .filter(col("rank") <= k)
           .select("query_id", "nn_id", "cos", "rank")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // two INDEPENDENT jobs over the persisted frame, submitted from
-        // two threads so the second back-fills the first's commit
-        // tail; each writes one file per non-empty partition of the
-        // batch-shaped merge, whatever StoreBuckets is
-        val writeLists: Runnable = () =>
-          bucketSorted(merged, "qb", "query_id")
-            .write.mode("overwrite").parquet(s"$listsDir/delta=$batchId")
-        // postings mirror: the same replacement lists inverted and
-        // sorted by the NEIGHBOR id's bucket — the key the reverse
-        // lookup below filters on
-        val writePostings: Runnable = () =>
-          bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id")
-            .write.mode("overwrite")
-            .parquet(s"${postingsPath(listsDir)}/delta=$batchId")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         try {
-        // the postings delta=N is consumed only by FUTURE batches —
-        // this batch's reverse lookup reads postings deltas STRICTLY
-        // BELOW N — so its write may span the whole mine phase
-        // (r14: the old barrier held the mine behind both commits).
-        // The lists delta=N IS read back by the mine (the frame
-        // lookup folds deltas <= N), so only that write gates it.
-        val postingsFut = pool.submit(writePostings)
-        val listsFut = pool.submit(writeLists)
-        listsFut.get() // propagate a lists-write failure loudly
-        phase("merge")
-        // 2. mine set M = T ∪ reverse-references (queries whose lists
-        // hold a touched query as neighbor — their margins consume
-        // that neighbor's now-changed mean), looked up in the
-        // POSTINGS mirror filtered to T's nb buckets. Scanning
-        // superseded postings rows over-approximates M: harmless
-        // (bitwise-identical re-mine)
-        val rev =
-          if (hasLists)
-            readDeltas(spark, postingsPath(listsDir), PostingsSchema)
-              .filter(col("delta") < batchId &&
-                bucketPred("nb", touchedBuckets))
-              .join(touched.select(col("query_id").as("nn_id")),
-                Seq("nn_id"), "left_semi")
-              .select("query_id")
-          else touched.limit(0)
-        val m = touched.unionByName(rev).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // 3. re-mine M: frame = current lists of M plus of M's list
-          // members (their means feed M's margins). The member set is
-          // taken from a store scan filtered to M's qb buckets and
-          // semi-joined on M (stale rows over-approximate it — extra
-          // means cost a few folds and change nothing). Margins of
-          // those 2-hop frame queries can drop candidate rows at the
-          // mean join — the M semi-join below discards their outputs,
-          // and every row surviving for q ∈ M consumed complete means
-          // same first-batch rule as touchedBuckets: with no prior
-          // state the collects cannot filter anything. Superset
-          // short-circuit (r14): M ⊇ T, so when T already hit every
-          // bucket (touchedBuckets = None — the exact mode by
-          // construction) M does too and its collect is skipped
-          val mBuckets =
-            if (hasLists && touchedBuckets.isDefined)
-              hitBuckets(m, "query_id", StoreBuckets)
-            else None
-          val nnOfM = readDeltas(spark, listsDir, ListsSchema)
-            .filter(col("delta") <= batchId &&
-              bucketPred("qb", mBuckets))
-            .join(m, Seq("query_id"), "left_semi")
-            .select(col("nn_id").as("query_id"))
-          // the frame is a multi-shuffle lookup consumed several times
-          // by the two marginScore passes — persist it; frameQids too:
-          // its bucket set is collected before the lookup consumes it
-          val frameQids = m.unionByName(nnOfM)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // frameQids ⊇ M: the same superset short-circuit — an
-          // all-buckets M makes the frame collect a no-op too
-          val frame = listsForQueries(spark, listsDir, batchId,
-            frameQids,
-            if (hasLists && mBuckets.isDefined)
-              hitBuckets(frameQids, "query_id", StoreBuckets)
-            else None)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // ONE dual-direction margin pass (bitwise the two-call
-            // spelling — AlignSpec pins it); the M semi-filter
-            // discards the 2-hop frame queries' outputs
-            val marginsM = graft.operators.Align
-              .marginScoreBoth(frame, k, minMargin)
-              .join(m.select(col("query_id").as("src_id")),
-                Seq("src_id"), "left_semi")
-              .select(col("src_id").as("query_id"),
-                col("dst_id").as("partner_id"), col("cos"), col("margin"))
-            // every q ∈ M gets a row: alive, or a tombstone when its
-            // best fell under the floor (left join keeps the nulls).
-            // That row IS the pair publish — mutuality resolves at
-            // read time ([[crossLingualPairs]]), so nothing else to do
-            m.join(marginsM, Seq("query_id"), "left")
-              .select(col("query_id"), col("partner_id"), col("cos"),
-                col("margin"), col("partner_id").isNotNull.as("alive"))
+          // each store write is one file per non-empty partition of
+          // the batch-shaped merge, whatever StoreBuckets is. The
+          // postings delta=N is consumed only by FUTURE batches — this
+          // batch's reverse lookup reads postings deltas STRICTLY
+          // BELOW N — so its write may span the whole mine phase
+          // (r14: the old barrier held the mine behind both commits).
+          // The lists delta=N IS read back by the mine (the frame
+          // lookup folds deltas <= N), so it is written first.
+          Par.overlap {
+            // postings mirror: the same replacement lists inverted and
+            // sorted by the NEIGHBOR id's bucket — the key the reverse
+            // lookup below filters on
+            bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id")
               .write.mode("overwrite")
-              .parquet(s"$pairsDir/delta=$batchId")
-            phase("mine")
-          } finally {
-            frame.unpersist(blocking = false)
-            frameQids.unpersist(blocking = false)
+              .parquet(s"${postingsPath(listsDir)}/delta=$batchId")
+          } {
+            bucketSorted(merged, "qb", "query_id")
+              .write.mode("overwrite").parquet(s"$listsDir/delta=$batchId")
+            phase("merge")
+            // 2. mine set M = T ∪ reverse-references (queries whose lists
+            // hold a touched query as neighbor — their margins consume
+            // that neighbor's now-changed mean), looked up in the
+            // POSTINGS mirror filtered to T's nb buckets. Scanning
+            // superseded postings rows over-approximates M: harmless
+            // (bitwise-identical re-mine)
+            val rev =
+              if (hasLists)
+                readDeltas(spark, postingsPath(listsDir), PostingsSchema)
+                  .filter(col("delta") < batchId &&
+                    bucketPred("nb", touchedBuckets))
+                  .join(touched.select(col("query_id").as("nn_id")),
+                    Seq("nn_id"), "left_semi")
+                  .select("query_id")
+              else touched.limit(0)
+            val m = touched.unionByName(rev).distinct()
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              // 3. re-mine M: frame = current lists of M plus of M's list
+              // members (their means feed M's margins). The member set is
+              // taken from a store scan filtered to M's qb buckets and
+              // semi-joined on M (stale rows over-approximate it — extra
+              // means cost a few folds and change nothing). Margins of
+              // those 2-hop frame queries can drop candidate rows at the
+              // mean join — the M semi-join below discards their outputs,
+              // and every row surviving for q ∈ M consumed complete means
+              // same first-batch rule as touchedBuckets: with no prior
+              // state the collects cannot filter anything. Superset
+              // short-circuit (r14): M ⊇ T, so when T already hit every
+              // bucket (touchedBuckets = None — the exact mode by
+              // construction) M does too and its collect is skipped
+              val mBuckets =
+                if (hasLists && touchedBuckets.isDefined)
+                  hitBuckets(m, "query_id", StoreBuckets)
+                else None
+              val nnOfM = readDeltas(spark, listsDir, ListsSchema)
+                .filter(col("delta") <= batchId &&
+                  bucketPred("qb", mBuckets))
+                .join(m, Seq("query_id"), "left_semi")
+                .select(col("nn_id").as("query_id"))
+              // the frame is a multi-shuffle lookup consumed several times
+              // by the two marginScore passes — persist it; frameQids too:
+              // its bucket set is collected before the lookup consumes it
+              val frameQids = m.unionByName(nnOfM)
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              // frameQids ⊇ M: the same superset short-circuit — an
+              // all-buckets M makes the frame collect a no-op too
+              val frame = listsForQueries(spark, listsDir, batchId,
+                frameQids,
+                if (hasLists && mBuckets.isDefined)
+                  hitBuckets(frameQids, "query_id", StoreBuckets)
+                else None)
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              try {
+                // ONE dual-direction margin pass (bitwise the two-call
+                // spelling — AlignSpec pins it); the M semi-filter
+                // discards the 2-hop frame queries' outputs
+                val marginsM = graft.operators.Align
+                  .marginScoreBoth(frame, k, minMargin)
+                  .join(m.select(col("query_id").as("src_id")),
+                    Seq("src_id"), "left_semi")
+                  .select(col("src_id").as("query_id"),
+                    col("dst_id").as("partner_id"), col("cos"), col("margin"))
+                // every q ∈ M gets a row: alive, or a tombstone when its
+                // best fell under the floor (left join keeps the nulls).
+                // That row IS the pair publish — mutuality resolves at
+                // read time ([[crossLingualPairs]]), so nothing else to do
+                m.join(marginsM, Seq("query_id"), "left")
+                  .select(col("query_id"), col("partner_id"), col("cos"),
+                    col("margin"), col("partner_id").isNotNull.as("alive"))
+                  .write.mode("overwrite")
+                  .parquet(s"$pairsDir/delta=$batchId")
+                phase("mine")
+              } finally {
+                frame.unpersist(blocking = false)
+                frameQids.unpersist(blocking = false)
+              }
+            } finally m.unpersist(blocking = false)
           }
-        } finally m.unpersist(blocking = false)
-        // the batch is not done until the postings mirror landed —
-        // propagate a mirror-write failure loudly (a crash here
-        // replays the batch; both writes are overwrite-idempotent)
-        postingsFut.get()
-        } finally {
-          pool.shutdownNow()
-          merged.unpersist(blocking = false)
-        }
+        } finally merged.unpersist(blocking = false)
       }
     } finally o.unpersist(blocking = false)
   }
@@ -1331,7 +1312,7 @@ object Streams {
         // fold: bitwise read-equivalent always (the family's prior
         // reads are row unions, never a fold), so compaction here can
         // never change a score; LWW/tombstone maintenance stays the
-        // deliberate out-of-band ivfCompact job
+        // deliberate out-of-band compactIndex job
         if (compactDue(batchId, compactEvery))
           compactFamilyStore(batch.sparkSession, vecsDir, batchId - 1,
             ds => ds.reduce(_ unionByName _))
@@ -1364,18 +1345,16 @@ object Streams {
 
   /** In-stream compaction of ONE `dir/delta=N` store through a
     * batch-side compactor ([[graft.operators.Dedup.compactIndex]],
-    * [[graft.operators.Similarity.ivfCompact]] — both take the
-    * deltas as a Seq in delta ORDER for their last-writer-wins
-    * resolve): lists the delta directories ≤ upTo, folds them, and
-    * replaces `delta=upTo` via [[stagedReplaceDelta]] (superseded
-    * directories deleted, crash-safe). Observable-equality note the
-    * per-family specs pin: with append-only unique ids — the
+    * which takes the deltas as a Seq in delta ORDER for its
+    * last-writer-wins resolve): lists the delta directories ≤ upTo,
+    * folds them, and replaces `delta=upTo` via [[stagedReplaceDelta]]
+    * (superseded directories deleted, crash-safe). Observable-equality
+    * note the per-family specs pin: with append-only unique ids — the
     * streaming-source norm, and what every spec fixture is — the LWW
-    * fold IS the plain union, so every later batch's output is
-    * bitwise unchanged; when ids RE-INGEST across deltas, the fold
-    * resolves them latest-wins and later probes stop seeing the
-    * superseded rows (ghost pairs) — the compactor's documented job,
-    * not drift. */
+    * fold IS the plain union, so every later batch's output is bitwise
+    * unchanged; when ids RE-INGEST across deltas, the fold resolves
+    * them latest-wins and later probes stop seeing the superseded rows
+    * (ghost pairs) — the compactor's documented job, not drift. */
   private def compactFamilyStore(
       spark: SparkSession,
       dir: String,
@@ -1470,17 +1449,14 @@ object Streams {
           col("cos"))
         .unionByName(newPairs.select(col("qb").as("query_id"),
           col("qa").as("nn_id"), col("cos")))
-      // the vector-delta write is INDEPENDENT of the list tail (the
-      // tail reads lists/postings/pairs only; replay reads vecs
-      // deltas strictly below N, so a delta=N from a crashed attempt
-      // is invisible until overwritten) — overlap it with the tail
-      // from a thread so its commit wall back-fills the tail's jobs
-      val vecsPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      try {
-        val vecsWrite = vecsPool.submit(new Runnable {
-          def run(): Unit = b.select(col("id"), col("v"))
-            .write.mode("overwrite").parquet(s"$vecsDir/delta=$batchId")
-        })
+      // the list tail reads lists/postings/pairs only, and replay
+      // reads vecs deltas strictly below N (a delta=N from a crashed
+      // attempt is invisible until overwritten), so the vector-delta
+      // write's commit wall can back-fill the tail's jobs
+      try Par.overlap {
+        b.select(col("id"), col("v"))
+          .write.mode("overwrite").parquet(s"$vecsDir/delta=$batchId")
+      } {
         // exact incremental top-k merge + mine + publish — the shared
         // family tail ([[mergeListsAndMine]]): prior lists and new
         // pairs are disjoint by construction (every new pair involves
@@ -1491,9 +1467,7 @@ object Streams {
         // mode keeps pruning; its touched set is candidate-bounded)
         mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
           k, minMargin, pruneLookups = false)
-        vecsWrite.get() // propagate a write failure loudly
       } finally {
-        vecsPool.shutdownNow()
         // the tail materialized its own persist of `oriented`; the
         // pair cache has no consumer left
         newPairs.unpersist(blocking = false)
@@ -1653,25 +1627,18 @@ object Streams {
           .unionByName(cand.select(col("nn_id").as("query_id"),
             col("query_id").as("nn_id"), col("cos")))
           .distinct()
-        // the assignment-delta write is independent of the list tail
-        // (same argument as the exact mode: the tail never reads
-        // vecsDir, and replay reads deltas strictly below N) —
-        // overlap it with the tail from a thread
-        val vecsPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        try {
-          val vecsWrite = vecsPool.submit(new Runnable {
-            def run(): Unit = own.write.mode("overwrite")
-              .parquet(s"$vecsDir/delta=$batchId")
-          })
+        // the tail never reads vecsDir, and replay reads assignment
+        // deltas strictly below N (as in the exact mode)
+        try Par.overlap {
+          own.write.mode("overwrite").parquet(s"$vecsDir/delta=$batchId")
+        } {
           // merge into the k-bounded lists + mine + publish — the
           // shared family tail ([[mergeListsAndMine]]): prior lists and
           // new candidates are disjoint (every new pair involves a
           // batch vector, which no earlier list can reference)
           mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
             k, minMargin)
-          vecsWrite.get() // propagate a write failure loudly
         } finally {
-          vecsPool.shutdownNow()
           // the tail materialized its own persist of `oriented`; the
           // candidate cache has no consumer left
           cand.unpersist(blocking = false)
@@ -1816,19 +1783,14 @@ object Streams {
         .join(broadcast(touched), Seq("cluster_id"), "left_semi")
       val preState = prior.fold(members)(p =>
         members.join(p, Seq("id"), "left_anti"))
-      // the report and the tombstone delta are INDEPENDENT jobs over
-      // the persisted batch id set (the report reads deltas < N only)
-      // — overlap them (guide §2.6; see ingestNearDupBatch)
-      val writeReport: Runnable = () =>
+      // the report reads tombstone deltas strictly below N, so the
+      // batch's own delta write cannot change it
+      Par.overlap {
+        t.write.mode("overwrite").parquet(s"$deltaDir/delta=$batchId")
+      } {
         graft.operators.Dedup.deletePropagation(preState, live)
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
-      val writeDelta: Runnable = () => t.write.mode("overwrite")
-        .parquet(s"$deltaDir/delta=$batchId")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        val futs = Seq(writeReport, writeDelta).map(pool.submit(_))
-        futs.foreach(_.get()) // propagate the first failure loudly
-      } finally pool.shutdownNow()
+      }
       // attributable per-batch operator cost (see ingestNearDupBatch)
       System.err.println(f"[graft] ingestDeleteBatch batch=$batchId " +
         f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")

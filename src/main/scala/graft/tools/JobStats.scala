@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
   * stages and tasks and sums executor run time. The interesting
   * number is the GAP between wall clock and sumTaskTime/cores:
   * a query whose gap dominates its wall is paying driver-side
-  * coordination (many small sequential jobs, collect seams — the §2.6
-  * overlap candidates), while a small gap means the time is genuine
-  * parallel compute (plan work, §2/§3 territory).
+  * coordination (many small sequential jobs, collect seams — the
+  * [[graft.core.Par.overlap]] candidates), while a small gap means
+  * the time is genuine parallel compute (plan work).
   *
   * usage: runMain graft.tools.JobStats <runs> <query>...
   * env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).

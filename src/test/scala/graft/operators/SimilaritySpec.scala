@@ -369,7 +369,7 @@ class SimilaritySpec extends AnyFunSuite {
       Set(("g", 2L, 1L, 3.0), ("g", 2L, 2L, 2.0)))
   }
 
-  test("ivfCompact: LWW + tombstones == fresh rebuild from the surviving latest rows") {
+  test("compactIndex over an IVF lineage (v, cell): LWW + tombstones == fresh rebuild from the surviving latest rows") {
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -382,8 +382,8 @@ class SimilaritySpec extends AnyFunSuite {
         transform(col("embedding"), x => (-x).cast("float")).as("embedding"))
     val delta2 = Similarity.ivfAssign(reEmbedded, "vec_id", "embedding", cents)
     val tombs = e.filter(col("vec_id") % 10 === 0).select("vec_id")
-    val compacted = Similarity.ivfCompact(
-      Seq(assign0, delta1, delta2), Some(tombs), "vec_id")
+    val compacted = Dedup.compactIndex(
+      Seq(assign0, delta1, delta2), Some(tombs), "vec_id", Seq("v", "cell"))
     // the fresh rebuild: assign the surviving LATEST rows directly
     val survivingLatest = e.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id"),
@@ -404,7 +404,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(re.nonEmpty && re.forall(_._2.exists(_ != 0.0f)))
     // compaction is idempotent: compacting the compacted index alone
     // changes nothing
-    assert(key(Similarity.ivfCompact(Seq(compacted))) == c)
+    assert(key(Dedup.compactIndex(Seq(compacted),
+      valueCols = Seq("v", "cell"))) == c)
     // the q274 probe-after-delete contract: a probe over the
     // compacted index never returns a tombstoned neighbor — even for
     // a deleted user's own query vector
@@ -558,9 +559,9 @@ class SimilaritySpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val (assignments, cents) = Similarity.ivfIndex(
       e, "vec_id", "embedding", nlist = 8)
-    // ivfCompact refuses an empty lineage loudly
+    // compaction refuses an empty lineage loudly
     val none = intercept[IllegalArgumentException] {
-      Similarity.ivfCompact(Seq.empty)
+      Dedup.compactIndex(Seq.empty, valueCols = Seq("v", "cell"))
     }
     assert(none.getMessage.contains("at least one delta"))
     // a gate over a residue with no ids passes vacuously (recall 1.0),

@@ -507,15 +507,16 @@ class StreamsSpec extends AnyFunSuite {
     assert(streamed.map(p => (p._1, p._2)) ==
       e.filter($"vec_id" < 100).select("vec_id")
         .as[Long].collect().map(i => (i, i + 10000L)).toSet)
-    // the delta layout is ivfCompact's input format: compacting the
+    // the delta layout is compactIndex's input format: compacting the
     // stream's deltas reproduces a fresh full-corpus assignment
     val deltas = spark.read.parquet(s"$base/index")
     assert(deltas.select("delta").distinct().count() == 2)
     def snapAssign(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "cell").as[(Long, Int)].collect().sortBy(_._1).toSeq
-    val compacted = graft.operators.Similarity.ivfCompact(
+    val compacted = graft.operators.Dedup.compactIndex(
       Seq(deltas.filter($"delta" === 0).select("id", "v", "cell"),
-        deltas.filter($"delta" === 1).select("id", "v", "cell")))
+        deltas.filter($"delta" === 1).select("id", "v", "cell")),
+      valueCols = Seq("v", "cell"))
     assert(snapAssign(compacted) == snapAssign(
       graft.operators.Similarity.ivfAssign(
         corpus, "vec_id", "embedding", cents)))
