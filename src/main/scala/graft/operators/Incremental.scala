@@ -67,7 +67,7 @@ object Incremental {
 
   /** Merge a frame that is a UNION of state rows (any number of
     * deltas stacked — e.g. a partition-discovered read of
-    * `delta=N` parquet subdirs with the partition column dropped)
+    * [[graft.streaming.DeltaStore]] deltas with the `delta` column dropped)
     * into one state row per key. */
   def mergeAll(states: DataFrame): DataFrame = {
     require(StateCols.forall(states.columns.contains),

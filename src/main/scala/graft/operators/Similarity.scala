@@ -882,7 +882,7 @@ object Similarity {
     * corpus is never re-scanned), each batch vector simply routes to
     * its nearest existing cell in one map pass. Output is a schema
     * drop-in for the index's `assignments` half (id, v, cell), written
-    * as `indexDir/delta=N` in production — the layout [[Dedup.compactIndex]]
+    * as a [[graft.streaming.DeltaStore]] delta in production — the layout [[Dedup.compactIndex]]
     * consumes. As deltas accumulate the centroids go STALE (the data
     * distribution drifts from what they were trained on); gate every
     * maintenance cycle with [[ivfStalenessGate]] and retrain

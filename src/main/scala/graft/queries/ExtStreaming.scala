@@ -646,9 +646,9 @@ private[queries] object ExtStreaming {
           stateDir = s"$base/state", checkpointDir = s"$base/ckpt")
         try {
           mem.addData(h1)
-          q.processAllAvailable() // batch 0 -> delta=0
+          q.processAllAvailable() // batch 0 -> state delta 0
           mem.addData(h2)
-          q.processAllAvailable() // batch 1 -> delta=1
+          q.processAllAvailable() // batch 1 -> state delta 1
         } finally q.stop()
         collectToLocal(
           graft.streaming.Streams.aggView(s, s"$base/state"),

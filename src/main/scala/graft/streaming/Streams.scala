@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 import graft.core.Par
 
@@ -276,7 +277,7 @@ object Streams {
       outDir: String,
       checkpointDir: String,
       keepMin: Double = 0.75,
-      reviewMin: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
+      reviewMin: Double = 0.5): StreamingQuery =
     routeByQuality(docs, textCol, keepMin, reviewMin).writeStream
       .format("parquet")
       .partitionBy("route")
@@ -305,13 +306,24 @@ object Streams {
   def writeEventStream(
       events: DataFrame,
       outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     events.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
+  /** The foreachBatch sink every ingest and ledger stream runs on:
+    * `f` gets each micro-batch with its id, in Append mode, under the
+    * checkpoint at `checkpointDir`. */
+  private def eachBatch(df: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => f(batch, batchId))
       .start()
 
   /** Continuous near-dup ingestion — the streaming face of the
@@ -325,10 +337,10 @@ object Streams {
     * ([[graft.operators.Dedup.compactIndex]]) and laid out for the
     * band-bucket join, and batch latency is one index scan + the
     * batch's own work, not a corpus re-computation). Near-dup pairs
-    * land in `pairsDir/batch=N`, and index rows are appended as
-    * `indexDir/delta=N` — exactly the delta layout `compactIndex`
-    * consumes for LWW + tombstone maintenance (the directory's
-    * partition column IS the compaction order).
+    * land in `pairsDir/batch=N`, and index rows are appended as the
+    * index store's delta N ([[DeltaStore]]) — exactly the delta layout
+    * `compactIndex` consumes for LWW + tombstone maintenance (the
+    * store's `delta` column IS the compaction order).
     *
     * Exactly-once by idempotence: every batch's two writes go to
     * batch-id-deterministic subdirectories with `overwrite`, so a
@@ -341,26 +353,6 @@ object Streams {
     * via `minHashLshPairs`. StreamsSpec pins stream == batch: the
     * union of all batches' pairs equals the full-corpus pair set, and
     * the compacted delta index equals a fresh rebuild. */
-  /** The ingest family's one replay-safety probe: does `dir` hold a
-    * state delta STRICTLY BELOW `batchId`? A crash AFTER delta=N
-    * landed but BEFORE the checkpoint committed replays batch N,
-    * which must consume exactly the state the original run saw —
-    * deltas 0..N-1 only; reading the batch's own already-written
-    * delta would double its rows. Every `ingest*Batch` bounds its
-    * prior-state read through this predicate so the rule cannot
-    * drift per family member. */
-  private def hasPriorDeltas(
-      dir: String, batchId: Long,
-      spark: SparkSession): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(path) && fs.listStatus(path).exists { st =>
-      val name = st.getPath.getName
-      name.startsWith("delta=") &&
-        name.stripPrefix("delta=").toLongOption.exists(_ < batchId)
-    }
-  }
-
   def ingestNearDupStream(
       docs: DataFrame,
       idCol: String,
@@ -372,22 +364,23 @@ object Streams {
       n: Int = 3,
       bands: Int = 32,
       rowsPerBand: Int = 4,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestNearDupBatch(batch, batchId, idCol, textCol,
-          indexDir, pairsDir, minJ, n, bands, rowsPerBand)
-        // in-stream index compaction ([[compactDue]]'s committed-only
-        // rule); pairsDir is append-only published OUTPUT, not state,
-        // so only the index store folds
-        if (compactDue(batchId, compactEvery))
-          compactFamilyStore(batch.sparkSession, indexDir, batchId - 1,
-            ds => graft.operators.Dedup.compactIndex(ds))
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      ingestNearDupBatch(batch, batchId, idCol, textCol,
+        indexDir, pairsDir, minJ, n, bands, rowsPerBand)
+      // in-stream index compaction ([[compactDue]]'s committed-only
+      // rule); pairsDir is append-only published OUTPUT, not state,
+      // so only the index store folds. With append-only unique ids
+      // the LWW fold IS the plain union, so later batches are bitwise
+      // unchanged; re-ingested ids resolve latest-wins (no ghost
+      // pairs). Deltas are read under the batch index's schema
+      // (building that plan is analysis only, no job)
+      if (compactDue(batchId, compactEvery))
+        new DeltaStore(batch.sparkSession, indexDir).compact(batchId - 1,
+          graft.operators.Dedup.minHashIndex(batch, idCol, textCol, n,
+            bands, rowsPerBand).schema.toDDL)(
+          graft.operators.Dedup.compactIndex(_))
+    }
 
   /** One [[ingestNearDupStream]] micro-batch — factored out so the
     * crash-replay contract is directly testable (StreamsSpec replays
@@ -405,15 +398,11 @@ object Streams {
       rowsPerBand: Int): Unit = {
     import graft.operators.Dedup
     val t0 = System.nanoTime()
-    val spark = batch.sparkSession
-    // heal any compaction swap a crash left mid-flight (read-side
-    // half of [[stagedReplaceDelta]]'s contract; no-op when clean)
-    recoverStores(spark, indexDir)
+    val index = new DeltaStore(batch.sparkSession, indexDir)
+    // heal any compaction swap a crash left mid-flight (no-op when clean)
+    index.recover()
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // replay safety: probe deltas 0..N-1 only ([[hasPriorDeltas]];
-      // a replayed batch 0 correctly takes the self-pair branch again)
-      val hasIndex = hasPriorDeltas(indexDir, batchId, spark)
       // the batch index feeds BOTH outputs (the probe and the delta
       // write) — build it once and persist, so the batch is shingled
       // and minhashed once per cycle, not once per consumer (measured
@@ -422,20 +411,18 @@ object Streams {
           rowsPerBand)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val pairs =
-          if (hasIndex) {
-            val idx = spark.read.parquet(indexDir)
-              .filter(col("delta") < batchId)
-              .select("id", "ngrams", "bands")
-            Dedup.minHashLshIncrementalFromIndex(newIdx, idx, minJ)
-          } else {
-            Dedup.minHashLshPairsFromIndex(newIdx, minJ)
-          }
+        // replay safety: probe deltas 0..N-1 only, under the batch
+        // index's schema (a replayed batch 0 takes the self-pair
+        // branch again)
+        val pairs = index.below(batchId, newIdx.schema.toDDL)
+          .map(idx => Dedup.minHashLshIncrementalFromIndex(newIdx,
+            idx.select("id", "ngrams", "bands"), minJ))
+          .getOrElse(Dedup.minHashLshPairsFromIndex(newIdx, minJ))
         // the two writes only read the persisted batch index (block-
         // level cache locking computes it once), and the probe reads
         // index deltas strictly below N
         Par.overlap {
-          newIdx.write.mode("overwrite").parquet(s"$indexDir/delta=$batchId")
+          index.write(batchId, newIdx)
         } {
           pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         }
@@ -460,8 +447,8 @@ object Streams {
     * ingestion-order candidate rule, which is what makes the union of
     * streamed pair sets EQUAL the one-shot probe, not approximate it —
     * StreamsSpec pins it). Pairs land in `pairsDir/batch=N`; the
-    * batch's assignments append as `indexDir/delta=N` — exactly the
-    * delta layout [[graft.operators.Dedup.compactIndex]] consumes
+    * batch's assignments append as the index store's delta N —
+    * exactly the delta layout [[graft.operators.Dedup.compactIndex]] consumes
     * for LWW + tombstone maintenance, with
     * [[graft.operators.Similarity.ivfStalenessGate]] as the
     * retrain-now alarm as deltas accumulate.
@@ -486,23 +473,18 @@ object Streams {
       nlist: Int = 16,
       nprobe: Int = 4,
       sampleSize: Int = 256,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestVectorBatch(batch, batchId, idCol, vecCol,
-          indexDir, pairsDir, centroidsDir, minCos, nlist, nprobe,
-          sampleSize)
-        // in-stream assignment-store compaction (committed-only);
-        // pairsDir is append-only published output, not state
-        if (compactDue(batchId, compactEvery))
-          compactFamilyStore(batch.sparkSession, indexDir, batchId - 1,
-            ds => graft.operators.Dedup.compactIndex(ds,
-              valueCols = Seq("v", "cell")))
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      ingestVectorBatch(batch, batchId, idCol, vecCol,
+        indexDir, pairsDir, centroidsDir, minCos, nlist, nprobe,
+        sampleSize)
+      // in-stream assignment-store compaction (committed-only);
+      // pairsDir is append-only published output, not state
+      if (compactDue(batchId, compactEvery))
+        new DeltaStore(batch.sparkSession, indexDir).compact(batchId - 1,
+          vecsSchema(batch, idCol, vecCol, cells = true))(
+          graft.operators.Dedup.compactIndex(_, valueCols = Seq("v", "cell")))
+    }
 
   /** One [[ingestVectorStream]] micro-batch — factored out so the
     * crash-replay contract is directly testable (StreamsSpec replays
@@ -523,9 +505,9 @@ object Streams {
     import graft.operators.Similarity
     val t0 = System.nanoTime()
     val spark = batch.sparkSession
-    // heal any compaction swap a crash left mid-flight (no-op when
-    // clean — [[stagedReplaceDelta]]'s read-side contract)
-    recoverStores(spark, indexDir)
+    val index = new DeltaStore(spark, indexDir)
+    // heal any compaction swap a crash left mid-flight (no-op when clean)
+    index.recover()
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // batch 0 trains; every later batch reads. The rule keys on
@@ -548,22 +530,17 @@ object Streams {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // replay safety: probe deltas 0..N-1 plus the batch's own
-        // assignments (the same-batch pairs) — [[hasPriorDeltas]]
-        val hasPrior = hasPriorDeltas(indexDir, batchId, spark)
-        val index =
-          if (hasPrior)
-            spark.read.parquet(indexDir)
-              .filter(col("delta") < batchId)
-              .select("id", "v", "cell")
-              .unionByName(own)
-          else own
+        // assignments (the same-batch pairs)
+        val probed = index.below(batchId, own.schema.toDDL)
+          .map(_.select("id", "v", "cell").unionByName(own))
+          .getOrElse(own)
         val pairs = Similarity.ivfNearDupPairsAgainst(
           b.select(col(idCol), col(vecCol)), idCol, vecCol,
-          index, cents, nprobe, minCos)
+          probed, cents, nprobe, minCos)
         // the two writes only read the persisted assignments, and the
         // probe reads assignment deltas strictly below N
         Par.overlap {
-          own.write.mode("overwrite").parquet(s"$indexDir/delta=$batchId")
+          index.write(batchId, own)
         } {
           pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         }
@@ -582,7 +559,7 @@ object Streams {
     * two embedded "languages"
     * (even/odd id parity) arrive as micro-batches, and after each
     * batch the current mutual best-margin pair set is published as
-    * add/del deltas to `pairsDir/delta=N` (fold with
+    * add/del deltas to the pairs store's delta N (fold with
     * [[crossLingualPairs]]).
     *
     * The INCREMENTAL insight is that exact k-NN LISTS are
@@ -624,7 +601,7 @@ object Streams {
     * downtime inherits every backlogged row otherwise. The guard is
     * COUNTED, so an oversized batch fails with the fix in the error
     * text instead of hitting Spark's 8 GB broadcast hard-stop. */
-  /** Latest-delta-wins resolution over a `dir/delta=N` store: keep,
+  /** Latest-delta-wins resolution over a [[DeltaStore]]: keep,
     * per `keys` group, only the rows of that group's highest delta.
     * Every delta writes a group's FULL replacement rows (a whole
     * k-list, one margin row), so max(delta) is a group-local
@@ -702,19 +679,23 @@ object Streams {
     hit.map(bs => col(bucketCol).isin(bs: _*)).getOrElse(lit(true))
 
   /** Declared file schemas (DDL) of the cross-lingual stores (the
-    * vector stores' are the batch's own): no store read starts a
-    * schema-inference job before its action. */
+    * vector stores' are the batch's own, [[vecsSchema]]): no store
+    * read starts a schema-inference job before its action. */
   private val ListsSchema =
     "query_id BIGINT, nn_id BIGINT, cos DOUBLE, rank BIGINT, qb INT"
   private val PostingsSchema = "query_id BIGINT, nn_id BIGINT, nb INT"
   private val PairsSchema = "query_id BIGINT, partner_id BIGINT, " +
     "cos DOUBLE, margin DOUBLE, alive BOOLEAN"
+  private val TombstonesSchema = "id BIGINT"
 
-  /** Every `delta=N` of `dir` under the declared file schema, with
-    * `delta` typed as the batch id it is. */
-  private def readDeltas(
-      spark: SparkSession, dir: String, ddl: String): DataFrame =
-    spark.read.schema(s"$ddl, delta BIGINT").parquet(dir)
+  /** File schema of a vector store's deltas: the batch's (id, v),
+    * plus the IVF `cell` of the assignment stores
+    * ([[graft.operators.Similarity.ivfAssign]]'s output). */
+  private def vecsSchema(
+      batch: DataFrame, idCol: String, vecCol: String,
+      cells: Boolean): String =
+    batch.select(col(idCol).as("id"), col(vecCol).as("v")).schema.toDDL +
+      (if (cells) ", cell INT" else "")
 
   /** The inverted `nn_id -> query_id` POSTINGS store that rides along
     * with a cross-lingual list store: a SIBLING root (`<listsDir>
@@ -745,7 +726,7 @@ object Streams {
       upTo: Long,
       qids: DataFrame,
       buckets: Option[Seq[Int]] = None): DataFrame = {
-    val hit = readDeltas(spark, listsDir, ListsSchema)
+    val hit = new DeltaStore(spark, listsDir).read(ListsSchema)
       .filter(col("delta") <= upTo && bucketPred("qb", buckets))
       .join(qids.select("query_id"), Seq("query_id"), "left_semi")
     latestDelta(hit, Seq("query_id"))
@@ -754,23 +735,22 @@ object Streams {
 
   /** CURRENT maintained k-NN lists of a cross-lingual ingest run —
     * the consumer-side fold of the delta store [[mergeListsAndMine]]
-    * writes: per query, the rows of its latest `delta=N` (each delta
+    * writes: per query, the rows of its latest delta (each delta
     * holds a touched query's full replacement list, so latest wins).
     * Columns: (query_id, rank, nn_id, cos) — [[graft.operators
     * .Similarity.bruteForceTopK]]'s contract. `upTo` bounds the fold
-    * to deltas <= upTo (replay inspection); default folds everything. */
+    * to deltas <= upTo (replay inspection); default folds everything.
+    * Read-only: a store caught mid-compaction fails loud
+    * ([[DeltaStore.snapshot]]), as do the postings and pairs folds. */
   def crossLingualLists(
       spark: SparkSession,
       listsDir: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    // consumer-facing fold: heal any swap a crashed compaction left
-    // mid-flight before the file listing resolves (no-op when clean)
-    recoverStores(spark, listsDir)
+      upTo: Long = Long.MaxValue): DataFrame =
     latestDelta(
-      readDeltas(spark, listsDir, ListsSchema).filter(col("delta") <= upTo),
+      new DeltaStore(spark, listsDir).snapshot(ListsSchema)
+        .filter(col("delta") <= upTo),
       Seq("query_id"))
       .select("query_id", "rank", "nn_id", "cos")
-  }
 
   /** CURRENT inverted postings of a cross-lingual ingest run — the
     * consumer-side fold of the `nn_id -> query_id` store
@@ -786,14 +766,12 @@ object Streams {
   def crossLingualPostings(
       spark: SparkSession,
       listsDir: String,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    recoverStores(spark, postingsPath(listsDir))
+      upTo: Long = Long.MaxValue): DataFrame =
     latestDelta(
-      readDeltas(spark, postingsPath(listsDir), PostingsSchema)
+      new DeltaStore(spark, postingsPath(listsDir)).snapshot(PostingsSchema)
         .filter(col("delta") <= upTo),
       Seq("query_id"))
       .select("nn_id", "query_id")
-  }
 
   /** CURRENT mutual best-margin pair set of a cross-lingual ingest
     * run — derived from the per-query MARGIN-ROW deltas the tail
@@ -812,9 +790,9 @@ object Streams {
       spark: SparkSession,
       pairsDir: String,
       upTo: Long = Long.MaxValue): DataFrame = {
-    recoverStores(spark, pairsDir)
     val cur = latestDelta(
-        readDeltas(spark, pairsDir, PairsSchema).filter(col("delta") <= upTo),
+        new DeltaStore(spark, pairsDir).snapshot(PairsSchema)
+          .filter(col("delta") <= upTo),
         Seq("query_id"))
       .filter(col("alive"))
       .select("query_id", "partner_id", "cos", "margin")
@@ -830,8 +808,8 @@ object Streams {
   /** COMPACT a cross-lingual delta store pair — the maintenance pass
     * that keeps the tail's lookups from scanning one delta per
     * historical batch forever: the folded state as of `upTo` becomes
-    * the single delta `delta=upTo`, and every superseded `delta<upTo`
-    * directory is deleted. Folds ([[crossLingualLists]],
+    * the single delta upTo, and every superseded delta below it is
+    * deleted. Folds ([[crossLingualLists]],
     * [[crossLingualPairs]]) at any horizon >= upTo are
     * bitwise-unchanged, and a later batch N > upTo runs against the
     * compacted store unchanged — its lookups just stop paying for
@@ -846,15 +824,15 @@ object Streams {
     * alive rows, and a compacted base has nothing left to shadow —
     * an absent query folds identically to a tombstoned one.
     *
-    * Crash safety is [[stagedReplaceDelta]]'s protocol (r12 ADVICE:
-    * the plain Spark overwrite of `delta=upTo` — a fold INPUT —
+    * Crash safety is [[DeltaStore.replace]]'s staged protocol (r12
+    * ADVICE: the plain Spark overwrite of delta upTo — a fold INPUT —
     * deleted the target before writing, so a mid-write crash
     * destroyed the rows it was folding): the fold is made fully
-    * durable in a staging sibling before any store directory is
+    * durable in a marked stage before any store directory is
     * touched, the swap itself is two directory renames, and
-    * [[recoverCompact]] (run by every later batch and compaction on
-    * these stores) rolls an interrupted swap forward — no crash
-    * point loses `delta=upTo`'s rows. The postings mirror
+    * [[DeltaStore.recover]] (run by every later batch and compaction
+    * on these stores) rolls an interrupted swap forward — no crash
+    * point loses delta upTo's rows. The postings mirror
     * ([[crossLingualPostings]]) is rebuilt from the compacted lists
     * delta itself, so the two stores cannot drift across a
     * compaction. Single-writer assumption as everywhere in the
@@ -867,7 +845,7 @@ object Streams {
     * (double-count), which is harmless exactly when N can never
     * replay, i.e. when it is committed. Compacting upTo = N−1 is
     * always safe for a pending batch N (its `delta < N` reads see
-    * the folded `delta=N−1`, value-identical to the uncompacted
+    * the folded delta N−1, value-identical to the uncompacted
     * history). */
   def compactCrossLingualState(
       spark: SparkSession,
@@ -875,182 +853,25 @@ object Streams {
       pairsDir: String,
       upTo: Long): Unit = {
     require(upTo >= 0L, s"upTo must be >= 0, got $upTo")
-    // recovery BEFORE the folds are built: parquet reads resolve
-    // their file listing eagerly, so a fold planned over a mid-swap
-    // store would silently miss the renamed-away delta even though
-    // stagedReplaceDelta heals the directory before writing
-    recoverStores(spark, listsDir, postingsPath(listsDir), pairsDir)
-    stagedReplaceDelta(spark, listsDir, upTo, bucketSorted(
+    val lists = new DeltaStore(spark, listsDir)
+    // each fold is built after its store's recovery (replace's by-name
+    // argument): a fold planned over a mid-swap store would miss the
+    // renamed-away delta
+    lists.replace(upTo)(bucketSorted(
       crossLingualLists(spark, listsDir, upTo)
         .select("query_id", "nn_id", "cos", "rank"), "qb", "query_id"))
     // postings mirror: inverted from the just-compacted lists delta
     // (a materialized directory — no lineage back into the postings
     // deltas about to be replaced), re-sorted by the neighbor id
-    stagedReplaceDelta(spark, postingsPath(listsDir), upTo, bucketSorted(
-      spark.read.schema(ListsSchema).parquet(s"$listsDir/delta=$upTo")
-        .select("query_id", "nn_id"), "nb", "nn_id"))
-    stagedReplaceDelta(spark, pairsDir, upTo,
-      latestDelta(
-        readDeltas(spark, pairsDir, PairsSchema).filter(col("delta") <= upTo),
+    new DeltaStore(spark, postingsPath(listsDir)).replace(upTo)(bucketSorted(
+      lists.read(upTo, ListsSchema).select("query_id", "nn_id"),
+      "nb", "nn_id"))
+    val pairs = new DeltaStore(spark, pairsDir)
+    pairs.replace(upTo)(
+      latestDelta(pairs.read(PairsSchema).filter(col("delta") <= upTo),
         Seq("query_id"))
         .filter(col("alive"))
         .select("query_id", "partner_id", "cos", "margin", "alive"))
-  }
-
-  /** Crash-safe REPLACE of `dir/delta=upTo` with `folded`, then
-    * delete every `delta<upTo` directory — the one write path every
-    * delta-store compaction in this file goes through (r12 ADVICE:
-    * Spark's `overwrite` is delete-then-write, so a crash mid-write
-    * over a directory that is also a fold INPUT permanently
-    * destroyed its rows; localCheckpoint narrowed nothing because
-    * its blocks are not recomputable across executor loss).
-    *
-    * Protocol — the fold is durable before anything existing is
-    * touched; every later step is a directory-metadata op, and the
-    * committed stage itself is the recovery MARKER, so it is
-    * consumed last:
-    *   1. roll forward any interrupted swap left in `dir`
-    *      ([[recoverCompact]] — also run by the ingest batch
-    *      functions, so a reader never consumes a mid-swap store);
-    *   2. write `folded` to the staging sibling `_compact_tmp_upTo`
-    *      (underscore-prefixed: invisible to Spark's file index, so
-    *      concurrent folds never see it); parquet's `_SUCCESS`
-    *      marker commits the stage;
-    *   3. delete every `delta<upTo` — WHILE the stage still exists:
-    *      these stores are read back as plain delta unions (the
-    *      nearDup/IVF index probes have no read-time fold), so a
-    *      superseded delta surviving next to the fold would double
-    *      its rows; doing the deletes under the marker means a crash
-    *      here is resumable;
-    *   4. rename `delta=upTo` -> `_compact_old_upTo`, rename the
-    *      stage -> `delta=upTo`, delete the `_old` dir.
-    * A crash before 2 commits leaves the store untouched (an
-    * uncommitted stage is discarded on recovery); a crash anywhere
-    * after is rolled FORWARD by recovery from the committed stage.
-    * Staging also removes the write-over-own-source lineage hazard
-    * outright, so no localCheckpoint (and none of its
-    * non-recomputable-block caveat) is needed. */
-  private def stagedReplaceDelta(
-      spark: SparkSession,
-      dir: String,
-      upTo: Long,
-      folded: DataFrame): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCompact(fs, root)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"_compact_tmp_$upTo")
-    val old = new org.apache.hadoop.fs.Path(root, s"_compact_old_$upTo")
-    val dst = new org.apache.hadoop.fs.Path(root, s"delta=$upTo")
-    folded.write.mode("overwrite").parquet(tmp.toString)
-    // the stage is committed (_SUCCESS durable); superseded history
-    // goes first, under the marker
-    deleteDeltasBelow(fs, root, upTo)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) renameOrDie(fs, dst, old)
-    renameOrDie(fs, tmp, dst)
-    fs.delete(old, true)
-  }
-
-  /** Hadoop's FileSystem.rename reports failure as a silent boolean;
-    * in a swap protocol a swallowed false IS corruption — fail loud
-    * (the committed stage survives, so recovery completes the swap
-    * on the next entry). */
-  private def renameOrDie(
-      fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit =
-    require(fs.rename(src, dst),
-      s"compaction swap rename failed: $src -> $dst (committed " +
-        "staging survives; re-run the compaction or the next batch " +
-        "to recover)")
-
-  private def deleteDeltasBelow(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      upTo: Long): Unit =
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("delta=") &&
-          name.stripPrefix("delta=").toLongOption.exists(_ < upTo))
-        fs.delete(st.getPath, true)
-    }
-
-  /** Roll FORWARD an interrupted [[stagedReplaceDelta]] swap in
-    * `dir`: a COMMITTED stage (`_compact_tmp_u` containing parquet's
-    * `_SUCCESS`) is the durable truth for `delta=u` — the remaining
-    * `delta<u` deletes re-run and the stage becomes the delta (any
-    * original still present is superseded: the stage folded it); an
-    * UNCOMMITTED stage is discarded (nothing existing was touched
-    * before its commit, by the protocol's ordering); an orphan
-    * `_compact_old_u` (crash between the forward rename and its
-    * delete) is removed. Idempotent; a no-op on a clean store — one
-    * directory listing, which is why every ingest batch function
-    * affords to run it before reading its store. */
-  private def recoverCompact(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_compact_tmp_")) {
-        val u = name.stripPrefix("_compact_tmp_").toLongOption
-        val committed = u.isDefined && fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-        if (!committed) fs.delete(st.getPath, true)
-        else {
-          deleteDeltasBelow(fs, root, u.get)
-          val dst = new org.apache.hadoop.fs.Path(root, s"delta=${u.get}")
-          val old = new org.apache.hadoop.fs.Path(root,
-            s"_compact_old_${u.get}")
-          if (fs.exists(old)) fs.delete(old, true)
-          if (fs.exists(dst)) renameOrDie(fs, dst, old)
-          renameOrDie(fs, st.getPath, dst)
-          fs.delete(old, true)
-        }
-      }
-    }
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_compact_old_")) {
-        val dst = name.stripPrefix("_compact_old_").toLongOption
-          .map(u => new org.apache.hadoop.fs.Path(root, s"delta=$u"))
-        // an orphan _old whose delta=u is ABSENT is the ONLY copy of
-        // those rows (a swap was interrupted between the away-rename
-        // and the install, and no committed stage survived to roll
-        // forward — e.g. a reader's recovery consumed the stage while
-        // a live writer was mid-swap): restore it rather than delete
-        // the last copy. With delta=u present the _old is superseded
-        // history and deleting it is the protocol's normal cleanup.
-        if (dst.isDefined && !fs.exists(dst.get))
-          renameOrDie(fs, st.getPath, dst.get)
-        else fs.delete(st.getPath, true)
-      }
-    }
-  }
-
-  /** Recovery sweep over the compactable stores an ingest batch is
-    * about to read — the read-side half of [[stagedReplaceDelta]]'s
-    * crash contract: a stream restarted after a crash MID-SWAP must
-    * not fold a store whose `delta=u` is momentarily renamed away.
-    * A delta still holding `qb=`/`nb=` bucket DIRECTORIES (the
-    * retired list/postings layout) fails loud here, naming the store:
-    * there is no in-place migration. One listing per store and per
-    * delta; a no-op on clean stores. */
-  private def recoverStores(spark: SparkSession, dirs: String*): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    dirs.foreach { d =>
-      val root = new org.apache.hadoop.fs.Path(d)
-      val fs = root.getFileSystem(conf)
-      recoverCompact(fs, root)
-      if (fs.exists(root)) fs.listStatus(root)
-        .filter(_.getPath.getName.startsWith("delta="))
-        .flatMap(st => fs.listStatus(st.getPath)).map(_.getPath)
-        .find(p => p.getName.startsWith("qb=") || p.getName.startsWith("nb="))
-        .foreach(p => throw new IllegalStateException(s"delta store $d " +
-          s"is in the retired bucket-directory layout ($p), which this " +
-          "version cannot read or extend — re-ingest the stream into " +
-          "a fresh store"))
-    }
   }
 
   /** The ONE list-merge + margin/mutual-mine + publish tail of the
@@ -1067,15 +888,15 @@ object Streams {
     * O(corpus·k) state rewrite or a global re-mine. State is two
     * delta stores, both latest-wins per query:
     *
-    *   - `listsDir/delta=N` — full replacement k-lists for the
+    *   - lists delta N — full replacement k-lists for the
     *     TOUCHED queries T (query_ids in `oriented`; lists of
     *     untouched queries are bitwise inert — cos(x,y) never
     *     changes — so their files are never rewritten), sorted by
     *     `qb` = hash(query_id) ([[StoreBuckets]]); plus the inverted
-    *     POSTINGS mirror `<listsDir>_postings/delta=N` (the same
+    *     POSTINGS mirror, delta N of `<listsDir>_postings` (the same
     *     lists as (nn_id, query_id) rows sorted by `nb` =
     *     hash(nn_id)) serving the nn_id-keyed reverse lookup;
-    *   - `pairsDir/delta=N` — re-mined best-margin rows
+    *   - pairs delta N — re-mined best-margin rows
     *     (query_id, partner_id, cos, margin, alive) for the MINE set
     *     M = T ∪ {queries whose current lists reference T}: a
     *     query's margins consume its own neighborhood mean (changes
@@ -1132,7 +953,12 @@ object Streams {
       // deduping m-union below — a distinct here is a wasted shuffle
       val touched = o.select("query_id")
       locally {
-        val hasLists = hasPriorDeltas(listsDir, batchId, spark)
+        val lists = new DeltaStore(spark, listsDir)
+        val postings = new DeltaStore(spark, postingsPath(listsDir))
+        // replay safety: the merge and the reverse lookup read deltas
+        // strictly below N
+        val priorLists = lists.below(batchId, ListsSchema)
+        val hasLists = priorLists.isDefined
         // the touched queries' bucket set — prunes the carried-list
         // read (qb: keyed on query_id) AND the postings reverse lookup
         // (nb: keyed on nn_id ∈ T — same ids, same hash). Collected
@@ -1152,22 +978,19 @@ object Streams {
           else None
         // 1. merge: prior lists of TOUCHED queries only, plus the new
         // scored pairs; k-bound with the exact tie-break; write the
-        // touched queries' replacement lists as delta=N. The prior
+        // touched queries' replacement lists as delta N. The prior
         // side's latest-wins fold and the merge rank run as two
         // Window operators over ONE query_id exchange (the fold keeps
         // a prior row only when its delta is the query's max PRIOR
         // delta; new rows always pass), instead of folding in a
         // separate shuffle before the union
         val newRows = o.withColumn("delta", lit(batchId))
-        val carried =
-          if (hasLists)
-            readDeltas(spark, listsDir, ListsSchema)
-              .filter(col("delta") < batchId &&
-                bucketPred("qb", touchedBuckets))
-              .join(touched, Seq("query_id"), "left_semi")
-              .select("query_id", "nn_id", "cos", "delta")
-              .unionByName(newRows)
-          else newRows
+        val carried = priorLists
+          .map(_.filter(bucketPred("qb", touchedBuckets))
+            .join(touched, Seq("query_id"), "left_semi")
+            .select("query_id", "nn_id", "cos", "delta")
+            .unionByName(newRows))
+          .getOrElse(newRows)
         val wMax = Window.partitionBy("query_id")
         val wRank = Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("nn_id"))
@@ -1186,22 +1009,20 @@ object Streams {
         try {
           // each store write is one file per non-empty partition of
           // the batch-shaped merge, whatever StoreBuckets is. The
-          // postings delta=N is consumed only by FUTURE batches — this
+          // postings delta N is consumed only by FUTURE batches — this
           // batch's reverse lookup reads postings deltas STRICTLY
           // BELOW N — so its write may span the whole mine phase
           // (r14: the old barrier held the mine behind both commits).
-          // The lists delta=N IS read back by the mine (the frame
+          // The lists delta N IS read back by the mine (the frame
           // lookup folds deltas <= N), so it is written first.
           Par.overlap {
             // postings mirror: the same replacement lists inverted and
             // sorted by the NEIGHBOR id's bucket — the key the reverse
             // lookup below filters on
-            bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id")
-              .write.mode("overwrite")
-              .parquet(s"${postingsPath(listsDir)}/delta=$batchId")
+            postings.write(batchId,
+              bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id"))
           } {
-            bucketSorted(merged, "qb", "query_id")
-              .write.mode("overwrite").parquet(s"$listsDir/delta=$batchId")
+            lists.write(batchId, bucketSorted(merged, "qb", "query_id"))
             phase("merge")
             // 2. mine set M = T ∪ reverse-references (queries whose lists
             // hold a touched query as neighbor — their margins consume
@@ -1209,15 +1030,12 @@ object Streams {
             // POSTINGS mirror filtered to T's nb buckets. Scanning
             // superseded postings rows over-approximates M: harmless
             // (bitwise-identical re-mine)
-            val rev =
-              if (hasLists)
-                readDeltas(spark, postingsPath(listsDir), PostingsSchema)
-                  .filter(col("delta") < batchId &&
-                    bucketPred("nb", touchedBuckets))
-                  .join(touched.select(col("query_id").as("nn_id")),
-                    Seq("nn_id"), "left_semi")
-                  .select("query_id")
-              else touched.limit(0)
+            val rev = postings.below(batchId, PostingsSchema)
+              .map(_.filter(bucketPred("nb", touchedBuckets))
+                .join(touched.select(col("query_id").as("nn_id")),
+                  Seq("nn_id"), "left_semi")
+                .select("query_id"))
+              .getOrElse(touched.limit(0))
             val m = touched.unionByName(rev).distinct()
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
@@ -1238,7 +1056,7 @@ object Streams {
                 if (hasLists && touchedBuckets.isDefined)
                   hitBuckets(m, "query_id", StoreBuckets)
                 else None
-              val nnOfM = readDeltas(spark, listsDir, ListsSchema)
+              val nnOfM = lists.read(ListsSchema)
                 .filter(col("delta") <= batchId &&
                   bucketPred("qb", mBuckets))
                 .join(m, Seq("query_id"), "left_semi")
@@ -1270,11 +1088,10 @@ object Streams {
                 // best fell under the floor (left join keeps the nulls).
                 // That row IS the pair publish — mutuality resolves at
                 // read time ([[crossLingualPairs]]), so nothing else to do
-                m.join(marginsM, Seq("query_id"), "left")
-                  .select(col("query_id"), col("partner_id"), col("cos"),
-                    col("margin"), col("partner_id").isNotNull.as("alive"))
-                  .write.mode("overwrite")
-                  .parquet(s"$pairsDir/delta=$batchId")
+                new DeltaStore(spark, pairsDir).write(batchId,
+                  m.join(marginsM, Seq("query_id"), "left")
+                    .select(col("query_id"), col("partner_id"), col("cos"),
+                      col("margin"), col("partner_id").isNotNull.as("alive")))
                 phase("mine")
               } finally {
                 frame.unpersist(blocking = false)
@@ -1298,27 +1115,24 @@ object Streams {
       k: Int = 4,
       minMargin: Double = 1.05,
       maxBatchRows: Long = 65536L,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestCrossLingualBatch(batch, batchId, idCol, vecCol,
-          vecsDir, listsDir, pairsDir, k, minMargin, maxBatchRows)
-        maybeCompact(batch.sparkSession, listsDir, pairsDir,
-          batchId, compactEvery)
+      compactEvery: Int = 0): StreamingQuery =
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      ingestCrossLingualBatch(batch, batchId, idCol, vecCol,
+        vecsDir, listsDir, pairsDir, k, minMargin, maxBatchRows)
+      if (compactDue(batchId, compactEvery)) {
+        val spark = batch.sparkSession
+        compactCrossLingualState(spark, listsDir, pairsDir, batchId - 1)
         // the VECTOR delta store is state too (every batch scores
         // against it) — bound it with the same cadence. Plain union
         // fold: bitwise read-equivalent always (the family's prior
         // reads are row unions, never a fold), so compaction here can
         // never change a score; LWW/tombstone maintenance stays the
         // deliberate out-of-band compactIndex job
-        if (compactDue(batchId, compactEvery))
-          compactFamilyStore(batch.sparkSession, vecsDir, batchId - 1,
-            ds => ds.reduce(_ unionByName _))
+        new DeltaStore(spark, vecsDir).compact(batchId - 1,
+          vecsSchema(batch, idCol, vecCol, cells = false))(
+          _.reduce(_ unionByName _))
       }
-      .start()
-  }
+    }
 
   /** Opt-in in-stream compaction (`compactEvery` on every ingest
     * wrapper with a growing delta store — the two cross-lingual
@@ -1327,52 +1141,22 @@ object Streams {
     * construction checkpoint-COMMITTED (N only runs after N−1
     * committed), so folding up to N−1 is always replay-safe — a
     * crash before N's own commit replays N against the folded
-    * `delta=N−1`, value-identical to the uncompacted history, and a
+    * delta N−1, value-identical to the uncompacted history, and a
     * replayed compaction is idempotent. This bounds every lookup's
     * delta-directory count to O(compactEvery) without any
     * out-of-band maintenance job. */
-  private def compactDue(batchId: Long, compactEvery: Int): Boolean =
+  private[graft] def compactDue(batchId: Long, compactEvery: Int): Boolean =
     compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
 
-  private def maybeCompact(
-      spark: SparkSession,
-      listsDir: String,
-      pairsDir: String,
-      batchId: Long,
-      compactEvery: Int): Unit =
-    if (compactDue(batchId, compactEvery))
-      compactCrossLingualState(spark, listsDir, pairsDir, batchId - 1)
-
-  /** In-stream compaction of ONE `dir/delta=N` store through a
-    * batch-side compactor ([[graft.operators.Dedup.compactIndex]],
-    * which takes the deltas as a Seq in delta ORDER for its
-    * last-writer-wins resolve): lists the delta directories ≤ upTo,
-    * folds them, and replaces `delta=upTo` via [[stagedReplaceDelta]]
-    * (superseded directories deleted, crash-safe). Observable-equality
-    * note the per-family specs pin: with append-only unique ids — the
-    * streaming-source norm, and what every spec fixture is — the LWW
-    * fold IS the plain union, so every later batch's output is bitwise
-    * unchanged; when ids RE-INGEST across deltas, the fold resolves
-    * them latest-wins and later probes stop seeing the superseded rows
-    * (ghost pairs) — the compactor's documented job, not drift. */
-  private def compactFamilyStore(
-      spark: SparkSession,
-      dir: String,
-      upTo: Long,
-      fold: Seq[DataFrame] => DataFrame): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCompact(fs, root)
-    val ids =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("delta="))
-        .flatMap(_.stripPrefix("delta=").toLongOption)
-        .filter(_ <= upTo).sorted
-    if (ids.nonEmpty)
-      stagedReplaceDelta(spark, dir, upTo,
-        fold(ids.map(i => spark.read.parquet(s"$dir/delta=$i"))))
-  }
+  /** The cross-lingual batches' recovery sweep over all four of their
+    * stores (vectors, lists, postings, pairs), run before a batch
+    * reads or writes anything — so a retired-layout store fails
+    * before a vector delta is written. */
+  private def recoverCrossLingual(
+      spark: SparkSession, vecsDir: String, listsDir: String,
+      pairsDir: String): Unit =
+    Seq(vecsDir, listsDir, postingsPath(listsDir), pairsDir)
+      .foreach(new DeltaStore(spark, _).recover())
 
   /** One [[ingestCrossLingualStream]] micro-batch — factored out so
     * the crash-replay contract is directly testable (StreamsSpec
@@ -1392,10 +1176,11 @@ object Streams {
     val t0 = System.nanoTime()
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    // read-side crash contract: heal any compaction swap a crash left
-    // mid-flight, and refuse a retired-layout store, before this batch
-    // reads or writes anything
-    recoverStores(spark, vecsDir, listsDir, postingsPath(listsDir), pairsDir)
+    // writer-side crash contract: heal any compaction swap a crash
+    // left mid-flight, and refuse a retired-layout store, before this
+    // batch reads or writes anything
+    recoverCrossLingual(spark, vecsDir, listsDir, pairsDir)
+    val vecStore = new DeltaStore(spark, vecsDir)
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1415,9 +1200,8 @@ object Streams {
           "or swap to the recall-gated ANN candidate mode " +
           "(ingestCrossLingualAnnStream) at this scale.")
       // replay safety: score against vector deltas 0..N-1 ONLY
-      // ([[hasPriorDeltas]] — scoring the batch's own delta would
-      // double its pairs)
-      val hasPrior = hasPriorDeltas(vecsDir, batchId, spark)
+      // (scoring the batch's own delta would double its pairs)
+      val prior = vecStore.below(batchId, b.schema.toDDL)
       // every NEW unordered cross-parity pair exactly once:
       // batch×prior (disjoint id sets) + batch×batch (id_a < id_b);
       // the batch side broadcasts — it is the micro-batch, bounded by
@@ -1431,13 +1215,10 @@ object Streams {
             call_function("graft_cosine", col("x.v"), col("y.v"))
               .as("cos"))
       }
-      val newPairs =
-        (if (hasPrior) {
-          val prior = readDeltas(spark, vecsDir, b.schema.toDDL)
-            .filter(col("delta") < batchId).select("id", "v")
-          crossParity(b, prior, dedupe = false)
-            .unionByName(crossParity(b, b, dedupe = true))
-        } else crossParity(b, b, dedupe = true))
+      val newPairs = prior
+        .map(p => crossParity(b, p.select("id", "v"), dedupe = false)
+          .unionByName(crossParity(b, b, dedupe = true)))
+        .getOrElse(crossParity(b, b, dedupe = true))
           // the two-orientation union below duplicates this subtree
           // in ONE plan, and there is no exchange between the scoring
           // join and the union for ReuseExchange to dedup — without a
@@ -1450,12 +1231,11 @@ object Streams {
         .unionByName(newPairs.select(col("qb").as("query_id"),
           col("qa").as("nn_id"), col("cos")))
       // the list tail reads lists/postings/pairs only, and replay
-      // reads vecs deltas strictly below N (a delta=N from a crashed
+      // reads vecs deltas strictly below N (a delta N from a crashed
       // attempt is invisible until overwritten), so the vector-delta
       // write's commit wall can back-fill the tail's jobs
       try Par.overlap {
-        b.select(col("id"), col("v"))
-          .write.mode("overwrite").parquet(s"$vecsDir/delta=$batchId")
+        vecStore.write(batchId, b.select(col("id"), col("v")))
       } {
         // exact incremental top-k merge + mine + publish — the shared
         // family tail ([[mergeListsAndMine]]): prior lists and new
@@ -1495,7 +1275,7 @@ object Streams {
     * lists ((cos desc, nn_id) — the exact mode's tie-break), and
     * (4) re-mines margin+mutuality TOUCHED-ONLY over the lists
     * ([[mergeListsAndMine]] — O(touched·k) per batch) and publishes
-    * pair add/del deltas to `pairsDir/delta=N` (fold with
+    * pair add/del deltas to the pairs store's delta N (fold with
     * [[crossLingualPairs]]). Here "touched" is candidate-bounded —
     * |batch| · corpus/nlist · nprobe — which is what makes the
     * maintained-list tail itself batch-shaped, not corpus-shaped.
@@ -1530,24 +1310,21 @@ object Streams {
       nlist: Int = 16,
       nprobe: Int = 4,
       sampleSize: Int = 256,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestCrossLingualAnnBatch(batch, batchId, idCol, vecCol,
-          vecsDir, centroidsDir, listsDir, pairsDir, k, minMargin,
-          nlist, nprobe, sampleSize)
-        maybeCompact(batch.sparkSession, listsDir, pairsDir,
-          batchId, compactEvery)
+      compactEvery: Int = 0): StreamingQuery =
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      ingestCrossLingualAnnBatch(batch, batchId, idCol, vecCol,
+        vecsDir, centroidsDir, listsDir, pairsDir, k, minMargin,
+        nlist, nprobe, sampleSize)
+      if (compactDue(batchId, compactEvery)) {
+        val spark = batch.sparkSession
+        compactCrossLingualState(spark, listsDir, pairsDir, batchId - 1)
         // assignment-store cadence — plain union fold, bitwise
         // read-equivalent (see the exact wrapper's note)
-        if (compactDue(batchId, compactEvery))
-          compactFamilyStore(batch.sparkSession, vecsDir, batchId - 1,
-            ds => ds.reduce(_ unionByName _))
+        new DeltaStore(spark, vecsDir).compact(batchId - 1,
+          vecsSchema(batch, idCol, vecCol, cells = true))(
+          _.reduce(_ unionByName _))
       }
-      .start()
-  }
+    }
 
   /** One [[ingestCrossLingualAnnStream]] micro-batch — factored out
     * so the crash-replay contract is directly testable (StreamsSpec
@@ -1573,7 +1350,8 @@ object Streams {
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
     // the same sweep as the exact mode, before anything is touched
-    recoverStores(spark, vecsDir, listsDir, postingsPath(listsDir), pairsDir)
+    recoverCrossLingual(spark, vecsDir, listsDir, pairsDir)
+    val vecStore = new DeltaStore(spark, vecsDir)
     val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1599,15 +1377,10 @@ object Streams {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // replay safety: probe deltas 0..N-1 plus the batch's own
-        // assignments (the within-batch pairs) — [[hasPriorDeltas]]
-        val hasPrior = hasPriorDeltas(vecsDir, batchId, spark)
-        val index =
-          if (hasPrior)
-            readDeltas(spark, vecsDir, own.schema.toDDL)
-              .filter(col("delta") < batchId)
-              .select("id", "v", "cell")
-              .unionByName(own)
-          else own
+        // assignments (the within-batch pairs)
+        val index = vecStore.below(batchId, own.schema.toDDL)
+          .map(_.select("id", "v", "cell").unionByName(own))
+          .getOrElse(own)
         // candidate stage: raw IVF candidates, cross-parity only —
         // the filter runs BEFORE any ranking so same-parity
         // neighbors cannot evict the cross-parity ones
@@ -1630,7 +1403,7 @@ object Streams {
         // the tail never reads vecsDir, and replay reads assignment
         // deltas strictly below N (as in the exact mode)
         try Par.overlap {
-          own.write.mode("overwrite").parquet(s"$vecsDir/delta=$batchId")
+          vecStore.write(batchId, own)
         } {
           // merge into the k-bounded lists + mine + publish — the
           // shared family tail ([[mergeListsAndMine]]): prior lists and
@@ -1663,7 +1436,7 @@ object Streams {
     * [[ingestNearDupStream]] lesson): the base cluster map
     * (`clustersDir`, a one-time [[graft.operators.Dedup
     * .duplicateClusters]] product) is never rewritten, and each
-    * batch appends only its own tombstone ids as `deltaDir/delta=N`
+    * batch appends only its own tombstone ids as delta N of `deltaDir`
     * — a full-snapshot survivor state would rewrite O(corpus) per
     * batch, while the delta spelling writes O(batch).
     *
@@ -1680,7 +1453,7 @@ object Streams {
     * and the pre-batch survivor view subtracts the accumulated
     * tombstone deltas STRICTLY BELOW the batch id — the family's
     * replay rule, which also makes a crash-replay of batch N (its
-    * own delta=N already on disk but excluded by the bound)
+    * own delta N already on disk but excluded by the bound)
     * byte-identical. Both writes are batch-keyed `overwrite`:
     * exactly-once by idempotence. The per-batch I/O term, said out
     * loud: TWO scans of the base cluster map (the touched lookup
@@ -1710,32 +1483,22 @@ object Streams {
       deltaDir: String,
       reportDir: String,
       checkpointDir: String,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    tombstones.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestDeleteBatch(batch, batchId, clustersDir, deltaDir, reportDir)
-        // in-stream tombstone compaction (committed-only): the fold
-        // is [[compactTombstoneDeltas]]' distinct id set — the
-        // anti-join is set-semantics, so later batches are bitwise
-        // unchanged unconditionally (no re-ingest caveat here);
-        // reportDir is append-only published output, not state. The
-        // directory swap the batch operator leaves to its caller is
-        // [[stagedReplaceDelta]] here — crash-safe, not the bare
-        // overwrite its scaladoc warns about
-        if (compactDue(batchId, compactEvery)) {
-          val s = batch.sparkSession
-          // recovery before the fold materializes (file listings
-          // resolve eagerly — same ordering rule as
-          // compactCrossLingualState)
-          recoverStores(s, deltaDir)
-          stagedReplaceDelta(s, deltaDir, batchId - 1,
-            compactTombstoneDeltas(s, deltaDir, batchId - 1))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    eachBatch(tombstones, checkpointDir) { (batch, batchId) =>
+      ingestDeleteBatch(batch, batchId, clustersDir, deltaDir, reportDir)
+      // in-stream tombstone compaction (committed-only): the fold
+      // is [[compactTombstoneDeltas]]' distinct id set — the
+      // anti-join is set-semantics, so later batches are bitwise
+      // unchanged unconditionally (no re-ingest caveat here);
+      // reportDir is append-only published output, not state. The
+      // directory swap the batch operator leaves to its caller is
+      // [[DeltaStore.replace]] here — crash-safe, not the bare
+      // overwrite its scaladoc warns about; the fold materializes
+      // only after the store's recovery (by-name argument)
+      if (compactDue(batchId, compactEvery))
+        new DeltaStore(batch.sparkSession, deltaDir).replace(batchId - 1)(
+          compactTombstoneDeltas(batch.sparkSession, deltaDir, batchId - 1))
+    }
 
   /** One [[ingestDeleteStream]] micro-batch — factored out so the
     * crash-replay contract is directly testable (StreamsSpec replays
@@ -1748,9 +1511,9 @@ object Streams {
       reportDir: String): Unit = {
     val t0 = System.nanoTime()
     val spark = batch.sparkSession
-    // heal any compaction swap a crash left mid-flight (no-op when
-    // clean — [[stagedReplaceDelta]]'s read-side contract)
-    recoverStores(spark, deltaDir)
+    val deltas = new DeltaStore(spark, deltaDir)
+    // heal any compaction swap a crash left mid-flight (no-op when clean)
+    deltas.recover()
     val idName = batch.columns.head
     val t = batch.select(col(idName).cast("long").as("id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1758,14 +1521,9 @@ object Streams {
       val clusters = spark.read.parquet(clustersDir)
         .select(col("id"), col("cluster_id"))
       // replay safety: subtract tombstone deltas 0..N-1 ONLY
-      // ([[hasPriorDeltas]] — subtracting the batch's own
-      // already-written delta on a replay would empty its report)
-      val hasPrior = hasPriorDeltas(deltaDir, batchId, spark)
-      val prior =
-        if (hasPrior)
-          Some(spark.read.parquet(deltaDir)
-            .filter(col("delta") < batchId).select("id"))
-        else None
+      // (subtracting the batch's own already-written delta on a
+      // replay would empty its report)
+      val prior = deltas.below(batchId, TombstonesSchema).map(_.select("id"))
       // LIVE batch ids = the batch minus deletes already honored (an
       // anti-join of the batch-sized frame against the delta history
       // — batch-scaled, cheap). Without it a re-sent id still pulls
@@ -1786,7 +1544,7 @@ object Streams {
       // the report reads tombstone deltas strictly below N, so the
       // batch's own delta write cannot change it
       Par.overlap {
-        t.write.mode("overwrite").parquet(s"$deltaDir/delta=$batchId")
+        deltas.write(batchId, t)
       } {
         graft.operators.Dedup.deletePropagation(preState, live)
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
@@ -1801,20 +1559,20 @@ object Streams {
     * [[ingestDeleteBatch]]'s scaladoc promises: the delta history
     * grows with TOTAL deletes ever honored, and this folds deltas
     * 0..upTo into ONE distinct id set — the replacement content for
-    * `delta=upTo` once every lower delta directory is removed.
+    * delta upTo once every lower delta is removed.
     *
     * SAFE BY CONSTRUCTION against the read-while-overwrite trap (r10
     * advisor): the distinct id set is eagerly localCheckpoint'ed
     * INSIDE this function, so the returned frame's lineage no longer
     * reads the delta directories — a caller may write it straight
-    * back over `delta=upTo` and delete the lower dirs without a
+    * back over delta upTo and delete the lower deltas without a
     * manual collect-first step (StreamsSpec performs exactly that
     * direct write-back). The set is delete-history-sized, not
     * corpus-sized; on a multi-executor cluster prefer writing it to a
     * fresh sibling path before the swap if executor loss during the
     * maintenance window is a concern (localCheckpoint blocks are not
     * recomputable). The CALLER still owns the directory swap —
-    * overwrite `delta=upTo` and delete the lower delta dirs with the
+    * overwrite delta upTo and delete the lower deltas with the
     * stream STOPPED and only over batches the checkpoint has
     * committed. The
     * strictly-below replay bound survives compaction: a future
@@ -1830,7 +1588,7 @@ object Streams {
       deltaDir: String,
       upTo: Long): DataFrame = {
     require(upTo >= 0L, s"upTo must be >= 0, got $upTo")
-    spark.read.parquet(deltaDir)
+    new DeltaStore(spark, deltaDir).read(TombstonesSchema)
       .filter(col("delta") <= upTo)
       .select("id").distinct()
       // eager: sever the lineage from the directories the caller is
@@ -1840,7 +1598,7 @@ object Streams {
 
   /** Continuous AGGREGATE-VIEW maintenance — the streaming spelling
     * of [[graft.operators.Incremental]]: each micro-batch folds into
-    * its own state delta (`stateDir/delta=N`, one
+    * its own state delta (delta N of `stateDir`, one
     * [[graft.operators.Incremental.buildState]] pass over the NEW
     * rows only), and the live view is [[aggView]] — a state-sized
     * merge of the deltas, never a rescan of the event history. This
@@ -1849,7 +1607,7 @@ object Streams {
     * per-batch step reads NO prior state at all: exactly-once falls
     * out of `buildState` being deterministic over the replayed batch
     * and the write being batch-keyed `overwrite` — a crash-replay
-    * rewrites delta=N byte-identically (StreamsSpec pins it).
+    * rewrites delta N byte-identically (StreamsSpec pins it).
     *
     * Delta accretion is the same maintenance problem the LSH/IVF
     * indexes have; here the compaction operator is `aggView` ITSELF
@@ -1860,15 +1618,10 @@ object Streams {
       keyCols: Seq[String],
       valueCol: String,
       stateDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestAggBatch(batch, batchId, keyCols, valueCol, stateDir)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    eachBatch(events, checkpointDir) { (batch, batchId) =>
+      ingestAggBatch(batch, batchId, keyCols, valueCol, stateDir)
+    }
 
   /** One [[ingestAggStream]] micro-batch, factored out so the
     * crash-replay contract is directly testable. */
@@ -1879,8 +1632,8 @@ object Streams {
       valueCol: String,
       stateDir: String): Unit = {
     val t0 = System.nanoTime()
-    graft.operators.Incremental.buildState(batch, keyCols, valueCol)
-      .write.mode("overwrite").parquet(s"$stateDir/delta=$batchId")
+    new DeltaStore(batch.sparkSession, stateDir).write(batchId,
+      graft.operators.Incremental.buildState(batch, keyCols, valueCol))
     // attributable per-batch operator cost (see ingestNearDupBatch)
     System.err.println(f"[graft] ingestAggBatch batch=$batchId " +
       f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
@@ -1901,15 +1654,11 @@ object Streams {
       rows: DataFrame,
       checks: Seq[(String, org.apache.spark.sql.Column)],
       ledgerDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(checks.nonEmpty, "at least one rule required")
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        expectationsBatch(batch, batchId, checks, ledgerDir)
-      }
-      .start()
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      expectationsBatch(batch, batchId, checks, ledgerDir)
+    }
   }
 
   /** One [[expectationsStream]] micro-batch, factored out so the
@@ -1951,16 +1700,11 @@ object Streams {
       valueCol: String,
       ledgerDir: String,
       checkpointDir: String,
-      bins: Int = 10): org.apache.spark.sql.streaming.StreamingQuery = {
+      bins: Int = 10): StreamingQuery = {
     val ref = reference.localCheckpoint(true)
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        psiBatch(batch, batchId, ref, keyCols, valueCol, ledgerDir,
-          bins)
-      }
-      .start()
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      psiBatch(batch, batchId, ref, keyCols, valueCol, ledgerDir, bins)
+    }
   }
 
   /** One [[psiStream]] micro-batch, factored out so the replay
@@ -1998,15 +1742,11 @@ object Streams {
       ledgerDir: String,
       checkpointDir: String,
       ciPct: Int = 95,
-      scale: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ratioCiBatch(batch, batchId, keyCols, numCol, denCol,
-          ledgerDir, ciPct, scale)
-      }
-      .start()
+      scale: Int = 2): StreamingQuery =
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      ratioCiBatch(batch, batchId, keyCols, numCol, denCol,
+        ledgerDir, ciPct, scale)
+    }
 
   /** One [[ratioCiStream]] micro-batch, factored out so the replay
     * contract is directly testable. */
@@ -2037,14 +1777,10 @@ object Streams {
       labelCol: String,
       scoreCol: String,
       ledgerDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        aucBatch(batch, batchId, labelCol, scoreCol, ledgerDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    eachBatch(rows, checkpointDir) { (batch, batchId) =>
+      aucBatch(batch, batchId, labelCol, scoreCol, ledgerDir)
+    }
 
   /** One [[aucStream]] micro-batch, factored out so the replay
     * contract is directly testable. */
@@ -2066,5 +1802,5 @@ object Streams {
       spark: SparkSession,
       stateDir: String): DataFrame =
     graft.operators.Incremental.mergeAll(
-      spark.read.parquet(stateDir).drop("delta"))
+      new DeltaStore(spark, stateDir).readInferred().drop("delta"))
 }

@@ -240,13 +240,13 @@ object Probe {
             i.toLong, "vec_id", "embedding",
             s"$base/vecs", s"$base/cents", s"$base/lists", s"$base/pairs",
             4, 1.05, nlist, 4, 256)
-          // the in-stream cadence (maybeCompact's committed-only rule)
-          if (compactEvery > 0 && i > 0 && i % compactEvery == 0)
+          // the in-stream cadence (committed-only)
+          if (graft.streaming.Streams.compactDue(i.toLong, compactEvery))
             graft.streaming.Streams.compactCrossLingualState(
               spark, s"$base/lists", s"$base/pairs", i - 1L)
         }
-        val dirCount = new java.io.File(s"$base/lists").listFiles()
-          .count(_.getName.startsWith("delta="))
+        val dirCount =
+          new graft.streaming.DeltaStore(spark, s"$base/lists").ids.size
         val t0 = System.nanoTime()
         graft.streaming.Streams.ingestCrossLingualAnnBatch(
           e.filter(col("vec_id") >= cut), priorDeltas.toLong,

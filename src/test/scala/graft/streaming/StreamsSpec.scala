@@ -10,6 +10,23 @@ import graft.TestSpark
 import graft.streaming.Streams._
 
 class StreamsSpec extends AnyFunSuite {
+
+  /** Every file under `dir`: (relative path, MD5 of its bytes), sorted
+    * — equal before and after exactly when nothing under `dir` was
+    * created, deleted, renamed or rewritten. */
+  private def listing(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(
+            java.nio.file.Files.readAllBytes(f)))
+        .toSeq.sorted
+    } finally files.close()
+  }
+
   private lazy val spark = TestSpark.spark
 
   test("splitOnGaps: closed sessions vs open tail") {
@@ -1326,8 +1343,9 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("staged compaction crash points roll FORWARD: a committed stage " +
-      "with its target renamed away is healed by the consumer fold and " +
-      "by the next batch; an uncommitted stage is discarded") {
+      "with its target renamed away fails the consumer folds loud without " +
+      "touching the store, and is healed by the next batch; an " +
+      "uncommitted stage is discarded") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
@@ -1377,18 +1395,24 @@ class StreamsSpec extends AnyFunSuite {
       java.nio.file.Files.write(
         new java.io.File(junk, "part-junk.parquet").toPath,
         Array[Byte](1, 2, 3))
-      // consumer folds heal the swap on their own (recoverStores runs
-      // before the file listing resolves) and equal the control's
-      val ctlLists1 = rows(
-        Streams.crossLingualLists(spark, s"$b/lists"), lc)
-      assert(rows(Streams.crossLingualLists(spark, s"$a/lists"), lc)
-        == ctlLists1, "fold over the crash state diverged")
+      // consumer folds are read-only: over the crash state they fail
+      // loud, naming the store, and leave the directory listing as it
+      // was (recovery is the writer's)
+      val before = listing(a)
+      for ((store, fold) <- Seq(
+          "lists" -> (() => Streams.crossLingualLists(spark, s"$a/lists")),
+          "pairs" -> (() => Streams.crossLingualPairs(spark, s"$a/pairs")))) {
+        val err = intercept[IllegalStateException](fold()).getMessage
+        assert(err.contains(s"delta store $a/$store ") &&
+          err.contains("mid-compaction"), err)
+      }
+      assert(listing(a) == before, "a consumer fold changed the store")
+      // a later batch heals both stores and the run stays bitwise
+      // equal to the never-crashed control
+      for (base <- Seq(a, b)) ingest(base, part($"vec_id" > c2), 2L)
       assert(new java.io.File(s"$a/lists/delta=1").exists() &&
         !new java.io.File(s"$a/lists/_compact_tmp_1").exists(),
         "the committed stage was not rolled forward")
-      // a later batch heals the pairs store the same way and the run
-      // stays bitwise equal to the never-crashed control
-      for (base <- Seq(a, b)) ingest(base, part($"vec_id" > c2), 2L)
       assert(rows(Streams.crossLingualLists(spark, s"$a/lists"), lc)
         == rows(Streams.crossLingualLists(spark, s"$b/lists"), lc))
       val pa = rows(Streams.crossLingualPairs(spark, s"$a/pairs"), pc)
@@ -1396,6 +1420,69 @@ class StreamsSpec extends AnyFunSuite {
         pa == rows(Streams.crossLingualPairs(spark, s"$b/pairs"), pc))
       assert(!junk.exists(), "uncommitted stage must be discarded")
     } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(a))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b))
+    }
+  }
+
+  test("the compaction commit marker is the store's own: with parquet's " +
+      "_SUCCESS switched off, a crash between the history delete and the " +
+      "forward rename still rolls FORWARD to the never-crashed folds") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val maxId = e.agg(max($"vec_id")).first().getLong(0)
+    val (c1, c2) = (maxId / 3, 2 * maxId / 3)
+    def part(p: org.apache.spark.sql.Column) =
+      e.filter(p).as[(Long, Seq[Float])].collect().toSeq
+        .toDF("vec_id", "embedding")
+    def ingest(base: String, bdf: org.apache.spark.sql.DataFrame, n: Long) =
+      Streams.ingestCrossLingualAnnBatch(bdf, n, "vec_id", "embedding",
+        s"$base/vecs", s"$base/cents", s"$base/lists", s"$base/pairs",
+        4, 1.05, 8, 2, 256)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val lc = Seq("query_id", "rank", "nn_id", "cos")
+    val pc = Seq("keep_id", "drop_id", "cos", "margin")
+    val noSuccess = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val a = java.nio.file.Files
+      .createTempDirectory("graft_xling_marker_").toString
+    val b = java.nio.file.Files
+      .createTempDirectory("graft_xling_marker_ctl_").toString
+    spark.conf.set(noSuccess, "false")
+    try {
+      for (base <- Seq(a, b)) {
+        ingest(base, part($"vec_id" <= c1), 0L)
+        ingest(base, part($"vec_id" > c1 && $"vec_id" <= c2), 1L)
+      }
+      // a real compaction rewound to the crash state between the
+      // history delete and the forward rename: stage committed, lower
+      // deltas gone, target missing
+      Streams.compactCrossLingualState(spark, s"$a/lists", s"$a/pairs",
+        upTo = 1L)
+      for (store <- Seq("lists", "pairs")) {
+        assert(!new java.io.File(s"$a/$store/delta=0").exists())
+        assert(new java.io.File(s"$a/$store/delta=1").renameTo(
+          new java.io.File(s"$a/$store/_compact_tmp_1")))
+      }
+      assert(listing(a).forall(!_._1.endsWith("_SUCCESS")),
+        "the fixture must run without parquet's _SUCCESS marker")
+      // the writer's next batch rolls both stages forward: no folded
+      // row is lost, the run equals the never-crashed control
+      for (base <- Seq(a, b)) ingest(base, part($"vec_id" > c2), 2L)
+      for (store <- Seq("lists", "pairs"))
+        assert(new java.io.File(s"$a/$store/delta=1").exists() &&
+          !new java.io.File(s"$a/$store/_compact_tmp_1").exists(),
+          s"the committed $store stage was not rolled forward")
+      assert(rows(Streams.crossLingualLists(spark, s"$a/lists"), lc)
+        == rows(Streams.crossLingualLists(spark, s"$b/lists"), lc))
+      val pa = rows(Streams.crossLingualPairs(spark, s"$a/pairs"), pc)
+      assert(pa.nonEmpty &&
+        pa == rows(Streams.crossLingualPairs(spark, s"$b/pairs"), pc))
+    } finally {
+      spark.conf.unset(noSuccess)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(a))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b))
     }
@@ -1436,7 +1523,11 @@ class StreamsSpec extends AnyFunSuite {
       // no committed stage, no delta=1; _compact_old_1 is the only copy
       assert(new java.io.File(s"$a/lists/delta=1").renameTo(
         new java.io.File(s"$a/lists/_compact_old_1")))
+      // recovery is the writer's: the next compaction runs it (and
+      // re-folds delta=1 idempotently)
       val ctl = rows(Streams.crossLingualLists(spark, s"$b/lists"))
+      Streams.compactCrossLingualState(spark, s"$a/lists", s"$a/pairs",
+        upTo = 1L)
       assert(rows(Streams.crossLingualLists(spark, s"$a/lists")) == ctl,
         "recovery must restore the orphan _old dir, not delete it")
       assert(new java.io.File(s"$a/lists/delta=1").exists() &&
@@ -1445,7 +1536,8 @@ class StreamsSpec extends AnyFunSuite {
       // and a SUPERSEDED _old (delta=u present) still gets cleaned up
       val sup = new java.io.File(s"$a/lists/_compact_old_1")
       sup.mkdirs()
-      rows(Streams.crossLingualLists(spark, s"$a/lists"))
+      Streams.compactCrossLingualState(spark, s"$a/lists", s"$a/pairs",
+        upTo = 1L)
       assert(!sup.exists(), "a superseded _old dir must still be deleted")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(a))
