@@ -137,7 +137,6 @@ object Bench {
     val t0Wall = System.nanoTime()
     def wallS: Double = (System.nanoTime() - t0Wall) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // total interleaved passes INCLUDING the pass-1 warmup (so the
     // default 3 = 1 warmup + 2 measured — the r8 suite's separate
     // warmup pass cost a third of the wall for samples it threw away)
@@ -198,23 +197,7 @@ object Bench {
           b.result()
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // interleaving side effect, measured: with the suite's ~266
-      // queries per pass, the default 100-entry codegen cache evicts
-      // every compiled class between one query's samples, so every
-      // interleaved sample re-compiles and re-JITs what a
-      // consecutive-runs bench measured hot — a systematic ~1.5–2×
-      // on sub-second queries (the first interleaved capture read
-      // 2.5× on q219-class queries with zero plan change). Size the
-      // cache to the suite so interleaved samples measure the same
-      // warm code consecutive samples did.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     def timeOnce(
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)

@@ -25,4 +25,29 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The one session every main runs on: `local[cpus]` with `cpus`
+    * shuffle partitions, `cpus` from `SPARK_GRAFT_CPUS` (default 4),
+    * UTC session time zone, no UI, log level WARN. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // interleaving side effect, measured: with the suite's ~266
+      // queries per pass, the default 100-entry codegen cache evicts
+      // every compiled class between one query's samples, so every
+      // interleaved sample re-compiles and re-JITs what a
+      // consecutive-runs bench measured hot — a systematic ~1.5–2×
+      // on sub-second queries (the first interleaved capture read
+      // 2.5× on q219-class queries with zero plan change). Size the
+      // cache to the suite so interleaved samples measure the same
+      // warm code consecutive samples did.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

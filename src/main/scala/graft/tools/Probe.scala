@@ -1,8 +1,12 @@
 package graft.tools
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.BenchStats.median
 import graft.operators.{Dedup, Similarity}
 
 /** The one dev measurement harness (not part of the driver
@@ -14,7 +18,13 @@ import graft.operators.{Dedup, Similarity}
   *   queries [runs] [name...]  per-catalog-query isolated timing,
   *                             median of `runs` (default 3) after one
   *                             warm-up, cache cleared per run
-  *                             (default names: the ANN trio)
+  *                             (default names: the ANN trio); columns
+  *                             are medians over the runs: wall_s,
+  *                             jobs, stages, tasks, taskSum_s (summed
+  *                             executor run time), par (taskSum/wall)
+  *                             and gap_s (wall − taskSum/cores, the
+  *                             driver-side share), then every run's
+  *                             wall; a failing query throws
   *   ann-stages [rounds]       stage breakdown of the q40/q63 ANN
   *                             paths: candidates, full annTopK,
   *                             annTopKInt8, sampled exact reference
@@ -46,19 +56,13 @@ import graft.operators.{Dedup, Similarity}
   *                             (rescore) stage over persisted lists —
   *                             attributes the whole-query slope
   *
-  * env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
+  * env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
+  * 4, [[graft.SparkEntry.localSession]]).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession()
     val mode = args.headOption.getOrElse("queries")
     val rest = args.drop(1).toSeq
     mode match {
@@ -87,8 +91,31 @@ object Probe {
   private def emb(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
 
+  /** Counts jobs, stages and tasks and sums executor run time. */
+  private object JobCounts extends SparkListener {
+    private val jobs, stages, tasks, taskMs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) taskMs.addAndGet(m.executorRunTime)
+    }
+    def reset(): Unit = Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+    /** (jobs, stages, tasks, taskSum seconds) since the last reset. */
+    def snap: Seq[Double] =
+      Seq(jobs.get.toDouble, stages.get.toDouble, tasks.get.toDouble,
+        taskMs.get / 1e3)
+  }
+
   /** Isolated per-query timing with the Bench discipline (clearCache
-    * per run, one warm-up, median + spread printed). */
+    * per run, one warm-up, median + spread printed) and the
+    * scheduling-vs-compute attribution: a query whose gap dominates
+    * its wall pays driver-side coordination (many small sequential
+    * jobs, collect seams — the [[graft.core.Par.overlap]] candidates),
+    * while a small gap means genuine parallel compute. */
   private def queriesMode(
       spark: SparkSession, sfDir: String, rest: Seq[String]): Unit = {
     val (runs, names0) = rest.headOption.flatMap(_.toIntOption) match {
@@ -97,21 +124,33 @@ object Probe {
     }
     val names = if (names0.nonEmpty) names0
       else Seq("q40_sim_ann_lsh", "q48_sim_ann_ivf", "q63_sim_ann_int8")
+    val cores = spark.sparkContext.defaultParallelism
+    spark.sparkContext.addSparkListener(JobCounts)
+    println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%6s ${"stages"}%6s " +
+      f"${"tasks"}%7s ${"taskSum_s"}%9s ${"par"}%5s ${"gap_s"}%7s  runs")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       spark.catalog.clearCache()
       fn(spark, sfDir).count() // warm
-      val ts = (1 to runs).map { _ =>
+      val samples = (1 to runs).map { _ =>
         spark.catalog.clearCache()
+        // the listener bus is async with no public drain — a short
+        // settle attributes >99% of events to the right run
+        Thread.sleep(250)
+        JobCounts.reset()
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val med =
-        if (ts.length % 2 == 1) ts(ts.length / 2)
-        else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
-      println(f"$name%-32s median ${med}%7.3f s  " +
-        ts.map(x => f"$x%.3f").mkString("[", ", ", "]"))
+        val wall = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(250)
+        wall +: JobCounts.snap
+      }
+      val Seq(wall, jobs, stages, tasks, taskS) =
+        samples.transpose.map(median)
+      val par = if (wall > 0) taskS / wall else 0.0
+      val gap = wall - taskS / cores
+      println(f"$name%-32s $wall%8.3f $jobs%6.1f $stages%6.1f $tasks%7.1f " +
+        f"$taskS%9.2f $par%5.1f $gap%7.3f  " +
+        samples.map(_.head).sorted.map(x => f"$x%.3f").mkString("[", ", ", "]"))
     }
   }
 
@@ -126,13 +165,6 @@ object Probe {
     val runs = rest.headOption.flatMap(_.toIntOption).getOrElse(3)
     val bound = rest.drop(1).headOption.flatMap(_.toLongOption)
       .getOrElse(2000L)
-    // one median for both timing lines (r11 review: the supplier line
-    // upper-middled even-length runs while the eval line averaged —
-    // incomparable statistics in the probe whose whole point is the
-    // supplier-vs-scorer attribution)
-    def med(ts: Seq[Double]): Double =
-      if (ts.length % 2 == 1) ts(ts.length / 2)
-      else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
     println(s"embeddings: ${emb(spark, sfDir).count()} rows, " +
       s"queries pinned to vec_id < $bound (mod 10)")
     // the banded-drop SUPPLIER alone (since r12 the shipped supplier
@@ -155,7 +187,7 @@ object Probe {
       (System.nanoTime() - t0) / 1e9
     }.sorted
     println(f"drops supplier alone        median " +
-      f"${med(supplierTs)}%7.3f s  " +
+      f"${median(supplierTs)}%7.3f s  " +
       supplierTs.map(x => f"$x%.3f").mkString("[", ", ", "]"))
     spark.catalog.clearCache()
     graft.queries.ExtDedup.dedupSweepEval(spark, sfDir, Some(bound))
@@ -167,7 +199,7 @@ object Probe {
         .count()
       (System.nanoTime() - t0) / 1e9
     }.sorted
-    println(f"dedup-knee(pinned<$bound) median ${med(ts)}%7.3f s  " +
+    println(f"dedup-knee(pinned<$bound) median ${median(ts)}%7.3f s  " +
       ts.map(x => f"$x%.3f").mkString("[", ", ", "]"))
   }
 
@@ -193,9 +225,6 @@ object Probe {
     * usage: stream-tail [runs] [batchRows] [priorDeltas] [compactEvery] */
   private def streamTail(
       spark: SparkSession, sfDir: String, rest: Seq[String]): Unit = {
-    def med(ts: Seq[Double]): Double =
-      if (ts.length % 2 == 1) ts(ts.length / 2)
-      else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
     val runs = rest.headOption.flatMap(_.toIntOption).getOrElse(3)
     val batchRows = rest.drop(1).headOption.flatMap(_.toIntOption)
       .getOrElse(256)
@@ -262,7 +291,7 @@ object Probe {
           new java.io.File(base))
       }
     }.sorted
-    println(f"stream-tail timed batch     median ${med(ts)}%7.3f s  " +
+    println(f"stream-tail timed batch     median ${median(ts)}%7.3f s  " +
       ts.map(x => f"$x%.3f").mkString("[", ", ", "]"))
   }
 
@@ -276,9 +305,6 @@ object Probe {
   private def repairStages(
       spark: SparkSession, sfDir: String, rest: Seq[String]): Unit = {
     import org.apache.spark.storage.StorageLevel
-    def med(ts: Seq[Double]): Double =
-      if (ts.length % 2 == 1) ts(ts.length / 2)
-      else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
     val runs = rest.headOption.flatMap(_.toIntOption).getOrElse(3)
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
     println(s"embeddings: ${e.count()} rows; request = vec_id % 97")
@@ -298,7 +324,7 @@ object Probe {
         if (clear) spark.catalog.clearCache()
         val t0 = System.nanoTime(); body(); (System.nanoTime() - t0) / 1e9
       }.sorted
-      println(f"$what%-27s median ${med(ts)}%7.3f s  " +
+      println(f"$what%-27s median ${median(ts)}%7.3f s  " +
         ts.map(x => f"$x%.3f").mkString("[", ", ", "]"))
     }
     timed("exact dual-kNN supplier", clear = true)(() => lists().count())
@@ -419,7 +445,7 @@ object Probe {
     }
     once() // warm
     val ts = (1 to runs).map(_ => once()).sorted
-    println(f"semdedup k=$k%-4d median ${ts(ts.length / 2)}%7.3f s  " +
+    println(f"semdedup k=$k%-4d median ${median(ts)}%7.3f s  " +
       ts.map(x => f"$x%.3f").mkString("[", ", ", "]"))
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger benchmark fixture from an existing sf dir by
@@ -37,14 +36,7 @@ object ScaleUp {
     val Array(src, dst, copiesS) = args.take(3)
     val copies = copiesS.toInt
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     new java.io.File(dst).mkdirs()
 
     def shifted(df: org.apache.spark.sql.DataFrame,

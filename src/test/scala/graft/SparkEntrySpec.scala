@@ -1,9 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the driver contract itself: entry() smoke, key consistency
-  * between queries and oracleSql, and name hygiene. */
+  * between queries and oracleSql, name hygiene, and one session
+  * factory for every main. */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -31,5 +34,19 @@ class SparkEntrySpec extends AnyFunSuite {
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("no SparkSession builder in main outside SparkEntry.localSession") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val files = java.nio.file.Files.walk(root.toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50)
+    val hits = for {
+      f <- files
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield (f.getFileName.toString, s"$f:${n + 1}: ${line.trim}")
+    assert(hits.map(_._1) == Seq("SparkEntry.scala"), hits.map(_._2).mkString("\n"))
   }
 }
