@@ -105,6 +105,45 @@ import scala.jdk.CollectionConverters._
   *    shed prior is rejected by the parser, so warmup-quality
   *    medians never become the next round's reference. */
 object Bench {
+
+  /** The per-query medians of a prior artifact line, for the
+    * one-sided divergence cross-check. Parsed with the Jackson shipped
+    * in Spark; any failure (schema drift, a partial/shed prior)
+    * degrades to "no prior" — the cross-check is an extra defense,
+    * never a gate.
+    *
+    * Medians are only comparable at the same scale factor (a prior
+    * captured at another sf would mass-flag or mass-mask divergence)
+    * and only from a COMPLETE capture whose QUOTED medians were not
+    * degraded — a partial line's medians may be warmup samples, and
+    * (the r9 advisor catch) a run that COMPLETED but shed
+    * measured-pass work quotes warmup-only samples (~1.5×
+    * overestimates) for the shed tail, which would one-sidedly mask
+    * the 3× cross-check. Only QUOTE-AFFECTING sheds (`pass_*` entries)
+    * void the prior: a shed bucket diagnostic or escalation tail
+    * degraded no quoted median, and voiding the prior over them would
+    * silently disable the whole cross-check for the next run (r10
+    * review). Individual RESCUED medians are warmup-quality by
+    * construction — those names drop from the map while the clean
+    * rest still serves. */
+  def priorMedians(json: String, sfDir: String): Map[String, Double] =
+    try {
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      // path() gives a missing node: no elements, "" and false
+      def names(field: String): Iterator[String] =
+        root.path(field).elements().asScala.map(_.asText())
+      if (root.path("sf").asText() != sfDir || root.path("partial").asBoolean() ||
+          names("shed").exists(_.startsWith("pass_")))
+        Map.empty
+      else {
+        val rescued = names("rescued").toSet
+        root.get("queries").properties().asScala
+          .collect { case e if !rescued.contains(e.getKey) =>
+            e.getKey -> e.getValue.asDouble() }
+          .toMap
+      }
+    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
   def main(args: Array[String]): Unit = {
     def loadavg: String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -148,55 +187,14 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_SECS", "1380").toDouble
     val loadStart = loadavg
     // Prior artifact medians, read BEFORE this run overwrites the
-    // default output path. Parsed with the Jackson shipped in Spark;
-    // any failure (missing file, schema drift, a partial/shed prior)
-    // degrades to "no prior" — the cross-check is an extra defense,
-    // never a gate.
+    // default output path; a missing or unreadable file is "no prior".
     val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json"))
     val prior: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
+      try priorMedians(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(priorPath)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        // medians are only comparable at the same scale factor (a
-        // prior captured at another sf would mass-flag or mass-mask
-        // divergence) and only from a COMPLETE capture whose QUOTED
-        // medians were not degraded — a partial line's medians may
-        // be warmup samples, and (the r9 advisor catch) a run that
-        // COMPLETED but shed measured-pass work quotes warmup-only
-        // samples (~1.5× overestimates) for the shed tail, which
-        // would one-sidedly mask the 3× cross-check. Only
-        // QUOTE-AFFECTING sheds (`pass_*` entries) void the prior:
-        // a shed bucket diagnostic or escalation tail degraded no
-        // quoted median, and voiding the prior over them would
-        // silently disable the whole cross-check for the next run
-        // (r10 review). Individual RESCUED medians are warmup-
-        // quality by construction — those names drop from the map
-        // while the clean rest still serves.
-        if (root.get("sf") == null || root.get("sf").asText() != sfDir ||
-            (root.get("partial") != null && root.get("partial").asBoolean()) ||
-            (root.get("shed") != null &&
-              root.get("shed").elements().asScala
-                .exists(_.asText().startsWith("pass_"))))
-          Map.empty
-        else {
-          val rescuedNames: Set[String] =
-            if (root.get("rescued") == null) Set.empty
-            else root.get("rescued").elements().asScala
-              .map(_.asText()).toSet
-          val qs = root.get("queries")
-          val it = qs.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) {
-            val e = it.next()
-            if (!rescuedNames.contains(e.getKey))
-              b += e.getKey -> e.getValue.asDouble()
-          }
-          b.result()
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+          java.nio.charset.StandardCharsets.UTF_8), sfDir)
+      catch { case scala.util.control.NonFatal(_) => Map.empty }
     val spark = SparkEntry.localSession()
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     def timeOnce(

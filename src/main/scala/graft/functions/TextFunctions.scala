@@ -4,10 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for large-scale training-data pipelines,
-  * built entirely from codegen'd `org.apache.spark.sql.functions`
-  * (no UDFs — SURVEY §7.3 "functions, not UDFs"): every expression
-  * stays inside whole-stage codegen, so the hot path over a 100 TB
-  * `documents` table is a single scan with no serialization fence.
+  * built from codegen'd `org.apache.spark.sql.functions` (SURVEY §7.3
+  * "functions, not UDFs"): those expressions stay inside whole-stage
+  * codegen, so the hot path over a 100 TB `documents` table is a
+  * single scan with no serialization fence. The one exception is
+  * [[fingerprint]]: spelled as a higher-order function, its per-gram
+  * md5 chain is interpreted element by element, so it is one compiled
+  * [[graft.operators.Kernels]] call per document instead.
   *
   * The reference's only text machinery is `\r\n`/space tokenization
   * inside its reduce (`MapReduceUtil.cpp:114-135`) and string↔int
@@ -99,19 +102,11 @@ object TextFunctions {
       .otherwise(when(best === 0, "und").otherwise(pick))
   }
 
-  /** Word n-grams (space-joined), distinct. Empty array when the doc
-    * has fewer than n words — guards `sequence`'s negative range. */
-  def wordNgrams(c: Column, n: Int): Column = {
-    val w = words(c)
-    when(size(w) < n, array().cast("array<string>")).otherwise(
-      array_distinct(transform(
-        sequence(lit(0), size(w) - lit(n)),
-        i => concat_ws(" ", slice(w, i + 1, lit(n))))))
-  }
-
   /** Word n-grams with multiplicity (no dedup) — the frequency-
-    * weighted face wordNgrams' distinct set hides; heavy-hitter
-    * phrase mining needs every occurrence to count. */
+    * weighted face [[graft.operators.Kernels.wordNgrams]]' distinct set
+    * hides; heavy-hitter phrase mining needs every occurrence to count.
+    * Empty array when the doc has fewer than n words — guards
+    * `sequence`'s negative range. */
   def wordNgramsAll(c: Column, n: Int): Column = {
     val w = words(c)
     when(size(w) < n, array().cast("array<string>")).otherwise(
@@ -124,11 +119,12 @@ object TextFunctions {
     * 1-permutation MinHash usable as a cheap near-dup bucket key (the
     * rolling-hash winnowing idea with md5 as the mixer; md5 is chosen
     * because every SQL engine computes the identical hex digest). Falls
-    * back to md5 of the whole text for very short docs. */
+    * back to md5 of the whole text for very short docs; null text
+    * gives null. One [[graft.operators.Kernels.fingerprint]] call per
+    * document. */
   def fingerprint(c: Column, n: Int = 3): Column = {
-    val g = wordNgrams(c, n)
-    when(size(g) === 0, md5(c))
-      .otherwise(array_min(transform(g, x => md5(x))))
+    val kernel = udf((t: String) => graft.operators.Kernels.fingerprint(t, n))
+    kernel(c)
   }
 
   // -------------------------------------------------------------------

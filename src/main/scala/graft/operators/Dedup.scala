@@ -73,8 +73,7 @@ object Dedup {
   }
 
   /** Distinct word-n-gram sets per document: (id, ngrams, set size).
-    * One kernel call per doc ([[Kernels.wordNgrams]]); semantically
-    * identical to the TextFunctions HOF spelling. */
+    * One kernel call per doc ([[Kernels.wordNgrams]]). */
   private def ngramSets(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     // null text -> empty set (filtered by the set_size > 0 guard every
@@ -101,8 +100,10 @@ object Dedup {
     * |A| − ceil(minC·|A|) + 1 grams must hit B's FULL gram set — so
     * candidates come from prefix(A) ⋈ posting(B), one-sided pruning
     * (the contained side prunes; the container side must stay
-    * whole). Exact verify: one HashSet intersection per candidate,
-    * containment = inter/|A| (one IEEE division of exact integers).
+    * whole), joined on xxhash64 of the gram ([[prefixFilter]]: a
+    * collision adds a candidate, never loses one). Exact verify: one
+    * HashSet intersection per candidate, containment = inter/|A| (one
+    * IEEE division of exact integers).
     *
     * `maxDf` is the PPJoin boilerplate guard — without it, a
     * corpus-frequent gram joins contained-side prefixes against an
@@ -129,37 +130,15 @@ object Dedup {
       s"maxDf must be >= 1 when set, got $cap"))
     val setsFull =
       ngramSets(df, idCol, textCol, n).filter(col("set_size") > 0)
-    val (sets, posting) = maxDf match {
-      case None =>
-        (setsFull, setsFull.select(col("id"), col("set_size"),
-          explode(col("ngrams")).as("g")))
-      case Some(cap) =>
-        // ngramSets are distinct-per-doc, so count-per-gram IS the
-        // document frequency; drop boilerplate grams, then rebuild
-        // the per-doc sets so verification uses the same vocabulary
-        val p0 = setsFull.select(col("id"),
-          explode(col("ngrams")).as("g"))
-        val wdf = Window.partitionBy("g")
-        val capped = p0.withColumn("_df", count(lit(1)).over(wdf))
-          .filter(col("_df") <= cap).drop("_df")
-        val cappedSets = capped.groupBy("id")
-          .agg(sort_array(collect_list(col("g"))).as("ngrams"))
-          .withColumn("set_size", size(col("ngrams")))
-          .filter(col("set_size") > 0)
-        (cappedSets,
-          capped.join(cappedSets.select("id", "set_size"), "id"))
-    }
-    val dfreq = posting.groupBy("g").agg(count(lit(1)).as("gdf"))
-    val wDoc = Window.partitionBy("id").orderBy("gdf", "g")
-    val prefix = posting.join(dfreq, "g")
-      .withColumn("_rk", row_number().over(wDoc))
-      .filter(col("_rk") <=
-        (col("set_size") - ceil(lit(minC) * col("set_size")) + 1)
-          .cast("int"))
-      .select("id", "g")
+    val (posting, prefix) = prefixFilter(
+      setsFull.select(col("id"), explode(col("ngrams")).as("g")),
+      minC, maxDf, sizeAfterCap = true)
+    // verification scores over the same capped vocabulary
+    val sets = if (maxDf.isEmpty) setsFull
+      else posting.groupBy("id").agg(collect_list(col("g")).as("ngrams"))
     val candidates = prefix.as("l")
-      .join(posting.select("id", "g").as("r"),
-        col("l.g") === col("r.g") && col("l.id") =!= col("r.id"))
+      .join(posting.select("id", "h").as("r"),
+        col("l.h") === col("r.h") && col("l.id") =!= col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
     val cUdf = udf((a: scala.collection.Seq[String],
@@ -179,6 +158,54 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         cUdf(col("ga.ngrams"), col("gb.ngrams")).as("containment"))
       .filter(col("containment") >= minC)
+  }
+
+  /** The AllPairs/PPJoin prefix filter of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]. `posting` holds one (id, g) row per distinct
+    * gram of a doc, plus the doc's `set_size` unless `sizeAfterCap`.
+    *
+    * Grams are ordered rarest first by (gdf, g), where gdf is the
+    * gram's exact document frequency, a window count over the posting;
+    * `maxDf` drops the grams with gdf > maxDf. Each doc keeps the
+    * prefix of its first |s| − ceil(minSim·|s|) + 1 grams, where |s| is
+    * `set_size`, or with `sizeAfterCap` the number of grams the cap
+    * left (containment measures over the capped vocabulary).
+    *
+    * Returns (kept, prefix): `kept` is the capped posting with
+    * h = xxhash64(g), `prefix` is (id, h) of every prefix gram. Callers
+    * join on the 64-bit h, not the string g: a broadcast of a string
+    * key builds an `UnsafeHashedRelation` whose map takes one whole
+    * `spark.buffer.pageSize` page (64 MiB on a 7 GiB heap), a long key
+    * a `LongHashedRelation` sized to its rows. Results stay exact:
+    *   - gdf counts the exact gram and the order (gdf, g) is the
+    *     string order, so every prefix is the same set of grams a join
+    *     on g would use;
+    *   - by the AllPairs argument in each caller's scaladoc, every
+    *     true pair shares a prefix gram, hence its h;
+    *   - a hash collision can only add a candidate pair;
+    *   - the callers score every candidate exactly over the n-gram
+    *     sets, which drops the added ones. */
+  private def prefixFilter(
+      posting: DataFrame,
+      minSim: Double,
+      maxDf: Option[Int],
+      sizeAfterCap: Boolean): (DataFrame, DataFrame) = {
+    val withDf = posting
+      .withColumn("gdf", count(lit(1)).over(Window.partitionBy("g")))
+    val kept = maxDf.fold(withDf)(cap => withDf.filter(col("gdf") <= cap))
+      .withColumn("h", xxhash64(col("g")))
+    // rank and capped size share one window, so one sort-shuffle
+    val wDoc = Window.partitionBy("id").orderBy("gdf", "g")
+    val size =
+      if (sizeAfterCap) count(lit(1)).over(wDoc.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing))
+      else col("set_size")
+    val prefix = kept
+      .withColumns(Map("_rk" -> row_number().over(wDoc), "_n" -> size))
+      .filter(col("_rk") <=
+        (col("_n") - ceil(lit(minSim) * col("_n")) + 1).cast("int"))
+      .select("id", "h")
+    (kept, prefix)
   }
 
   /** Exact-Jaccard verification of candidate pairs against the full
@@ -206,13 +233,15 @@ object Dedup {
   /** Exact n-gram Jaccard similarity for every pair with J >= minJ,
     * via a prefix-filtered inverted index (the AllPairs/PPJoin family):
     *
-    *  1. global n-gram document frequencies, rarest-first total order
-    *     (df, gram);
+    *  1. global n-gram document frequencies (a window count per
+    *     gram), rarest-first total order (df, gram);
     *  2. each doc keeps only its PREFIX — the |s| - ceil(minJ*|s|) + 1
     *     rarest n-grams. If two docs have J >= minJ their prefixes
     *     must share a gram (a pair overlapping only outside both
     *     prefixes has intersection < minJ*|s| on each side), so the
-    *     prefix-prefix equi-join loses no true pair;
+    *     prefix-prefix equi-join loses no true pair. The join keys
+    *     on xxhash64 of the gram (see [[prefixFilter]]): a collision
+    *     adds a candidate, never loses one;
     *  3. candidates verified with exact Jaccard over the full sets.
     *
     * The prefix keeps only low-df grams, collapsing the join fan-out
@@ -234,29 +263,11 @@ object Dedup {
     // more than re-running the shingle kernel per branch — string-
     // array caching is the rare case where recompute wins.
     val sets = ngramSets(df, idCol, textCol, n).filter(col("set_size") > 0)
-    val posting0 = sets.select(col("id"), col("set_size"),
-      explode(col("ngrams")).as("g"))
-    val posting = maxDf match {
-      case Some(cap) =>
-        val wdf = Window.partitionBy("g")
-        posting0.withColumn("_df", count(lit(1)).over(wdf))
-          .filter(col("_df") <= cap).drop("_df")
-      case None => posting0
-    }
-    val dfreq = posting.groupBy("g").agg(count(lit(1)).as("gdf"))
-    // rarest-first prefix per doc: rank grams by (df, gram) within
-    // each doc, keep the first |s| - ceil(minJ*|s|) + 1. A window
-    // row_number is one sort-shuffle entirely inside codegen; the
-    // collect_list + array_sort spelling it replaces built a 400-
-    // element struct array per doc and sorted it interpreted.
-    val wDoc = Window.partitionBy("id").orderBy("gdf", "g")
-    val prefix = posting.join(dfreq, "g")
-      .withColumn("_rk", row_number().over(wDoc))
-      .filter(col("_rk") <=
-        (col("set_size") - ceil(lit(minJ) * col("set_size")) + 1).cast("int"))
-      .select("id", "g")
+    val (_, prefix) = prefixFilter(
+      sets.select(col("id"), col("set_size"), explode(col("ngrams")).as("g")),
+      minJ, maxDf, sizeAfterCap = false)
     val candidates = prefix.as("l")
-      .join(prefix.as("r"), col("l.g") === col("r.g") &&
+      .join(prefix.as("r"), col("l.h") === col("r.h") &&
         col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()

@@ -231,10 +231,10 @@ object Kernels extends Serializable {
     if (d == 0.0) 0.0 else dot.toDouble / d
   }
 
-  /** Distinct word n-grams (space-joined), first-occurrence order —
-    * the same string set as [[graft.functions.TextFunctions.wordNgrams]]
-    * (whose HOF spelling is kept for column-level use and the SQL
-    * oracle twin), produced by one tight pass. */
+  /** Distinct word n-grams (space-joined), first-occurrence order,
+    * produced by one tight pass: tokens are the non-empty pieces of a
+    * split on ' ', and a text with fewer than n tokens has no gram —
+    * the same string set as the DuckDB oracles' `ExtShared.ngrams3`. */
   def wordNgrams(text: String, n: Int): Array[String] = {
     val words = new scala.collection.mutable.ArrayBuffer[String]()
     var i = 0
@@ -262,6 +262,29 @@ object Kernels extends Serializable {
     }
     seen.toArray(new Array[String](seen.size))
   }
+
+  /** Document fingerprint: the least [[md5Hex]] over the distinct
+    * word n-grams ([[wordNgrams]]), or `md5Hex(text)` for a text with
+    * no gram; null text gives null. One call per document: bitwise
+    * Spark's and DuckDB's `md5` over UTF-8 bytes, lowercase hex, and
+    * the lexicographic minimum, which the grams' order and dedup do
+    * not change. */
+  def fingerprint(text: String, n: Int): String =
+    if (text == null) null
+    else {
+      val grams = wordNgrams(text, n)
+      if (grams.isEmpty) md5Hex(text)
+      else {
+        var best = md5Hex(grams(0))
+        var i = 1
+        while (i < grams.length) {
+          val h = md5Hex(grams(i))
+          if (h.compareTo(best) < 0) best = h
+          i += 1
+        }
+        best
+      }
+    }
 
   /** POSITIONAL md5 fingerprints of every word n-gram: element `i` is
     * [[md5Lower64]] of the space-joined gram starting at token `i+1`

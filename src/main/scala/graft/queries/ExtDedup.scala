@@ -882,19 +882,23 @@ private[graft] object ExtDedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // COUNTED band-safety guard (r12 ADVICE): the bitwise-oracle
       // claim above was a fixture PROPERTY pinned only in DedupSpec;
-      // this makes it a run-time precondition. An emitted pair below
-      // J = 0.7 means the corpus left the regime where the miss bound
-      // holds (a 32-band × 4-row LSH misses a true pair at p ≈ 1.5e-4
-      // at J = 0.7, ~13% at 0.5, ~44% at 0.4) — the pairs LSH DID
-      // emit stay exact either way, but pairs it may have MISSED
-      // would silently diverge from the exact-Jaccard DuckDB oracle.
-      // Fail loud with the fix instead. Probe mode (pinnedQidBound)
-      // skips the guard for the same reason it skips the
-      // derivedSampleMod fail-fast: it aligns with no oracle, so
-      // there is no bitwise claim to protect — and the ScaleUp ×3
-      // fixture DOES trip it (2 true pairs in [0.4, 0.7) from the
-      // perturbed copies), which is the guard catching a real
-      // regime break, not a probe defect.
+      // this guard is a statistical canary for it, not a
+      // precondition. An emitted pair below J = 0.7 means the corpus
+      // left the regime where the miss bound holds (a 32-band × 4-row
+      // LSH misses a true pair at p = (1 − J^4)^32: ≈ 1.5e-4 at
+      // J = 0.7, ~13% at 0.5, ~44% at 0.4) — the pairs LSH DID emit
+      // stay exact either way, but pairs it MISSED would silently
+      // diverge from the exact-Jaccard DuckDB oracle, so it fails
+      // loud with the fix. It sees only emitted pairs: a corpus whose
+      // true pairs in [0.4, 0.7) LSH all missed passes it, with
+      // probability the product of their miss probabilities — up to
+      // 0.44 for a lone pair at J = 0.4, 0.44^k for k such pairs.
+      // Probe mode (pinnedQidBound) skips the guard for the same
+      // reason it skips the derivedSampleMod fail-fast: it aligns
+      // with no oracle, so there is no bitwise claim to protect —
+      // and the ScaleUp ×3 fixture DOES trip it (2 true pairs in
+      // [0.4, 0.7) from the perturbed copies), which is the guard
+      // catching a real regime break, not a probe defect.
       val nRisk =
         if (pinnedQidBound.isDefined) 0L
         else lsh.filter(col("jaccard") < 0.7).count()

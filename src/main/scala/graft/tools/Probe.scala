@@ -15,7 +15,9 @@ import graft.operators.{Dedup, Similarity}
   * COVERAGE.md come from here.
   *
   * usage: runMain graft.tools.Probe <mode> [args]
-  *   queries [runs] [name...]  per-catalog-query isolated timing,
+  *   queries [runs] [name...]  per-catalog-query isolated timing
+  *                             through a `noop` sink (every output
+  *                             column computed, unlike `.count()`),
   *                             median of `runs` (default 3) after one
   *                             warm-up, cache cleared per run
   *                             (default names: the ANN trio); columns
@@ -110,8 +112,15 @@ object Probe {
         taskMs.get / 1e3)
   }
 
+  /** Writes every row and column of `df` to Spark's `noop` sink. A
+    * `.count()` would let Catalyst prune the projections the query
+    * computes (q33's `fp` column, say), so it would time less work. */
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** Isolated per-query timing with the Bench discipline (clearCache
-    * per run, one warm-up, median + spread printed) and the
+    * per run, one warm-up, median + spread printed), through a `noop`
+    * sink so every output column is computed, and the
     * scheduling-vs-compute attribution: a query whose gap dominates
     * its wall pays driver-side coordination (many small sequential
     * jobs, collect seams — the [[graft.core.Par.overlap]] candidates),
@@ -131,7 +140,7 @@ object Probe {
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       spark.catalog.clearCache()
-      fn(spark, sfDir).count() // warm
+      noop(fn(spark, sfDir)) // warm
       val samples = (1 to runs).map { _ =>
         spark.catalog.clearCache()
         // the listener bus is async with no public drain — a short
@@ -139,7 +148,7 @@ object Probe {
         Thread.sleep(250)
         JobCounts.reset()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        noop(fn(spark, sfDir))
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(250)
         wall +: JobCounts.snap

@@ -135,4 +135,28 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(!quoteRescued(None, Seq(9.0), Some(1.0)))
     assert(!partiallyFiltered(None, Seq(9.0), Some(1.0)))
   }
+
+  test("priorMedians: a complete prior's medians minus the rescued names") {
+    val sf = "/data/sf0.1"
+    def line(extra: String) =
+      s"""{"metric":"total","queries":{"q01":1.5,"q02":0.25,"q03":2.0},""" +
+        s""""sf":"$sf"$extra}"""
+    assert(Bench.priorMedians(line(""","partial":false,"shed":[],"rescued":["q02"]"""), sf) ==
+      Map("q01" -> 1.5, "q03" -> 2.0))
+    // a shed that degraded no quoted median keeps the prior
+    assert(Bench.priorMedians(line(""","shed":["escalation_tail","bucket_diag"]"""), sf) ==
+      Map("q01" -> 1.5, "q02" -> 0.25, "q03" -> 2.0))
+  }
+
+  test("priorMedians: an sf mismatch, a partial prior or a pass_* shed gives none") {
+    val sf = "/data/sf0.1"
+    def line(extra: String) =
+      s"""{"queries":{"q01":1.5},"sf":"$sf"$extra}"""
+    assert(Bench.priorMedians(line(""), "/data/sf0.01").isEmpty)
+    assert(Bench.priorMedians(line(""), sf).nonEmpty)
+    assert(Bench.priorMedians(line(""","partial":true"""), sf).isEmpty)
+    assert(Bench.priorMedians(line(""","shed":["pass_3_wall_from_q01"]"""), sf).isEmpty)
+    assert(Bench.priorMedians("""{"queries":{"q01":1.5}}""", sf).isEmpty)
+    assert(Bench.priorMedians("not json", sf).isEmpty)
+  }
 }

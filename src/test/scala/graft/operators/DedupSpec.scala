@@ -139,6 +139,50 @@ class DedupSpec extends AnyFunSuite {
     assert(capped.count() == 0)
   }
 
+  /** (doc_id, distinct 3-gram set) of every fixture doc with a gram. */
+  private lazy val fixtureSets: Seq[(Long, Seq[String])] =
+    docs.select("doc_id", "text").as[(Long, String)].collect().toSeq
+      .map { case (id, t) =>
+        id -> (if (t == null) Seq.empty[String] else Kernels.wordNgrams(t, 3).toSeq)
+      }
+      .filter(_._2.nonEmpty)
+
+  test("ngramJaccardPairs == brute-force all-pairs Jaccard on the fixture") {
+    for (minJ <- Seq(0.4, 0.5)) {
+      val brute = (for {
+        (a, sa) <- fixtureSets; (b, sb) <- fixtureSets if a < b
+        j = Kernels.jaccard(sa, sb) if j >= minJ
+      } yield (a, b, j)).toSet
+      val got = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, minJ)
+        .as[(Long, Long, Double)].collect()
+      assert(got.length == got.toSet.size)
+      assert(got.toSet == brute, s"minJ $minJ")
+      assert(brute.nonEmpty)
+    }
+  }
+
+  test("containmentPairs == brute-force all-pairs containment on the fixture") {
+    // maxDf 20 is q176's cap (no fixture gram reaches it); 3 bites
+    for (cap <- Seq(20, 3)) {
+      val df = fixtureSets.flatMap(_._2).groupBy(identity)
+        .map { case (g, xs) => g -> xs.size }
+      val capped = fixtureSets
+        .map { case (id, s) => (id, s.filter(df(_) <= cap)) }
+        .filter(_._2.nonEmpty)
+        .map { case (id, s) => (id, s, s.toSet) }
+      val brute = (for {
+        (a, sa, _) <- capped; (b, _, setB) <- capped if a != b
+        c = sa.count(setB).toDouble / sa.length if c >= 0.8
+      } yield (a, b, c)).toSet
+      val got = Dedup.containmentPairs(docs, "doc_id", "text",
+        n = 3, minC = 0.8, maxDf = Some(cap))
+        .as[(Long, Long, Double)].collect()
+      assert(got.length == got.toSet.size)
+      assert(got.toSet == brute, s"maxDf $cap")
+      assert(brute.nonEmpty)
+    }
+  }
+
   test("exactDedupIncremental: batch-internal dups AND known content dropped") {
     val known = Seq((100L, "already seen"), (101L, "also known"))
       .toDF("doc_id", "text")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +11,17 @@ import graft.functions.TextFunctions
   * oracle correctness of q33/q35/q36 rests on the twins agreeing.
   * This suite pins that equivalence on the real fixture corpus. */
 class KernelsSpec extends AnyFunSuite {
+  import KernelsSpec._
   private lazy val spark = TestSpark.spark
 
-  test("Kernels.wordNgrams == TextFunctions.wordNgrams on every fixture doc") {
+  test("Kernels.wordNgrams == the HOF column spelling on every fixture doc") {
     import spark.implicits._
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val kernelUdf = udf((t: String) => Kernels.wordNgrams(t, 3))
     val mismatches = docs.select(
       col("doc_id"),
       kernelUdf(col("text")).as("k"),
-      TextFunctions.wordNgrams(col("text"), 3).as("c"))
+      wordNgramsColumn(col("text"), 3).as("c"))
       .filter(col("k") =!= col("c"))
       .count()
     assert(mismatches == 0)
@@ -27,10 +29,34 @@ class KernelsSpec extends AnyFunSuite {
     for (t <- Seq("", "a", "a b", "a b c", "a  b   c d", "x y x y x y")) {
       val viaKernel = Kernels.wordNgrams(t, 3).toSeq
       val viaColumn = Seq(t).toDF("text")
-        .select(TextFunctions.wordNgrams(col("text"), 3))
+        .select(wordNgramsColumn(col("text"), 3))
         .head().getSeq[String](0).toSeq
       assert(viaKernel == viaColumn, s"text '$t'")
     }
+  }
+
+  test("Kernels.fingerprint == the HOF column spelling, fixture and hand cases") {
+    import spark.implicits._
+    def mismatches(docs: org.apache.spark.sql.DataFrame): Array[(String, String, String)] =
+      docs.select(col("text"),
+        TextFunctions.fingerprint(col("text")).as("k"),
+        fingerprintColumn(col("text")).as("c"))
+        .filter(!(col("k") <=> col("c")))
+        .as[(String, String, String)].collect()
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+    assert(docs.count() > 0)
+    assert(mismatches(docs).isEmpty)
+    val hand = Seq[String](null, "", "a", "a b", "a b c", " a b c d",
+      "a b c d ", "a  b   c  d", "a\tb c d", "x y x y x y",
+      "你好 世界 和平 快乐", "a \uD83D\uDE00 b c", "\uD83D\uDE00")
+    val handDf = hand.toDF("text")
+    assert(mismatches(handDf).isEmpty)
+    // the column is the kernel, row for row
+    val viaColumn = handDf.select(TextFunctions.fingerprint(col("text")))
+      .as[String].collect().toSeq
+    assert(viaColumn == hand.map(Kernels.fingerprint(_, 3)))
+    assert(Kernels.fingerprint(null, 3) == null)
+    assert(Kernels.fingerprint("a b", 3) == Kernels.md5Hex("a b"))
   }
 
   test("Kernels.jaccard == array_intersect/union counts") {
@@ -176,5 +202,30 @@ class KernelsSpec extends AnyFunSuite {
         }
       }
     }
+  }
+}
+
+object KernelsSpec {
+
+  /** The Catalyst higher-order-function spelling of
+    * [[Kernels.wordNgrams]]: word n-grams (space-joined), distinct, and
+    * an empty array when the doc has fewer than n words (which guards
+    * `sequence`'s negative range). The column reference the kernel is
+    * pinned against. */
+  def wordNgramsColumn(c: Column, n: Int): Column = {
+    val w = TextFunctions.words(c)
+    when(size(w) < n, array().cast("array<string>")).otherwise(
+      array_distinct(transform(
+        sequence(lit(0), size(w) - lit(n)),
+        i => concat_ws(" ", slice(w, i + 1, lit(n))))))
+  }
+
+  /** The higher-order-function spelling of
+    * [[graft.functions.TextFunctions.fingerprint]]: the least md5 over
+    * the word n-grams, md5 of the whole text when there is none. */
+  def fingerprintColumn(c: Column, n: Int = 3): Column = {
+    val g = wordNgramsColumn(c, n)
+    when(size(g) === 0, md5(c))
+      .otherwise(array_min(transform(g, x => md5(x))))
   }
 }

@@ -460,4 +460,27 @@ class PlanHygieneSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"no cartesian stage:\n${p.take(2000)}")
   }
+
+  test("q35/q176: no hash or sort-merge join keys on a string") {
+    // a broadcast string key builds an UnsafeHashedRelation holding
+    // one whole spark.buffer.pageSize page (64 MiB on a large heap)
+    // per relation; the prefix filter joins on xxhash64 of the gram
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.types.StringType
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("q35_dedup_ngram_jaccard", "q176_containment")) {
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf0001)
+      df.collect() // the adaptive plan below is now the final one
+      val p = df.queryExecution.executedPlan
+      val keys = Plans.collect(p) {
+        case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+      }.flatten
+      assert(keys.nonEmpty, s"$q plans no equi-join:\n${p.toString.take(2000)}")
+      assert(!keys.exists(_.dataType == StringType),
+        s"$q joins on a string key:\n${p.toString.take(4000)}")
+    }
+  }
 }
