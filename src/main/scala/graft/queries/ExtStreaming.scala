@@ -246,9 +246,12 @@ private[queries] object ExtStreaming {
     // both parities) through ingestCrossLingualStream. Exact k-NN
     // LISTS are the maintained state — cos(x, y) never changes, so
     // batch N scores only batch×prior + batch×batch cross-parity
-    // pairs and merges them into the k-bounded per-query lists; the
-    // margin+mutual stage re-mines TOUCHED-ONLY (O(touched·k), r12)
-    // and publishes pair add/del deltas folded by crossLingualPairs.
+    // pairs and merges them into the k-bounded per-query lists. Its
+    // touched set is the whole corpus by construction, so each batch
+    // writes the whole list state as its lists delta, re-mines
+    // margin+mutuality over that delta (bitwise the touched-only
+    // re-mine, see Streams.mergeListsAndMine) and publishes per-query
+    // margin rows folded by crossLingualPairs.
     // After the final batch the lists equal the one-shot exact dual
     // k-NN bitwise (same (cos desc, id) tie-break, cos bitwise
     // direction-symmetric), so the streamed pair set equals q267's

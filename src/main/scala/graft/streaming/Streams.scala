@@ -570,11 +570,13 @@ object Streams {
     * (every unordered pair exactly once; cos is bitwise symmetric,
     * the dot/norm folds run in index order regardless of
     * orientation), merges them into the k-bounded per-query lists,
-    * and re-mines margin+mutuality TOUCHED-ONLY (see
-    * [[mergeListsAndMine]] — O(touched·k) per batch, never a full
-    * state rewrite or a global re-mine; state and the published pair
-    * set live in latest-wins delta stores folded by
-    * [[crossLingualLists]] / [[crossLingualPairs]]). After the final
+    * and re-mines margin+mutuality. Its touched set is the whole
+    * corpus by construction, so each batch writes the whole current
+    * list state as its lists delta and mines that delta (see
+    * [[mergeListsAndMine]]'s exact mode, and why that equals the
+    * touched-only re-mine); state and the published pair set live in
+    * latest-wins delta stores folded by [[crossLingualLists]] /
+    * [[crossLingualPairs]]. After the final
     * batch the folded lists equal the one-shot exact dual k-NN
     * bitwise (same (cos desc, id) tie-break), so the folded pair set
     * equals q267's batch result and the same oracle applies
@@ -587,11 +589,12 @@ object Streams {
     * runs in streaming form.
     *
     * Replay safety follows the family contract: the batch reads
-    * vector, list, margin, and pair deltas strictly below its
-    * batchId, and all four writes (vector delta, list delta, margin
-    * delta, pair delta) go to batch-id-deterministic subdirectories
-    * with `overwrite` — exactly-once by idempotence; a crash-replay
-    * rewrites every output value-identically.
+    * vector and list deltas strictly below its batchId (the mine
+    * then reads back the lists delta it has just rewritten), and all
+    * four writes (vector, list, postings and pair deltas) go to
+    * batch-id-deterministic subdirectories with `overwrite` —
+    * exactly-once by idempotence; a crash-replay rewrites every
+    * output value-identically.
     *
     * TRIGGER-SIZING CONTRACT (the whole ingest family, loudest here
     * because the batch side is broadcast AND exactly scored): size
@@ -708,16 +711,15 @@ object Streams {
     s"${listsDir.stripSuffix("/")}_postings"
 
   /** Current k-NN lists for a BOUNDED query set out of the
-    * cross-lingual delta store — the lookup the touched-only tail
-    * lives on: the store is bucket-sorted by query_id hash (`qb`,
-    * [[StoreBuckets]]), so `buckets` — the qids' [[hitBuckets]] —
-    * becomes a pushed scan filter; then one semi-join of the scan (no
-    * shuffle of the store, no hint — the qids side is batch-shaped
-    * in the ANN mode and AQE broadcasts it when it is genuinely
-    * small; in the exact mode it is corpus-shaped, the bucket filter
-    * degenerates to all-buckets, and the join must degrade to a
-    * shuffle semi-join, the listInvalidation hub lesson), then
-    * latest-wins over only the matched groups. Compaction
+    * cross-lingual delta store — the lookup the ANN mode's
+    * touched-only tail lives on: the store is bucket-sorted by
+    * query_id hash (`qb`, [[StoreBuckets]]), so `buckets` — the qids'
+    * [[hitBuckets]] — becomes a pushed scan filter; then one
+    * semi-join of the scan (no shuffle of the store, no hint — the
+    * qids side is batch-shaped and AQE broadcasts it when it is
+    * genuinely small; a hub batch degrades it to a shuffle semi-join,
+    * the listInvalidation hub lesson), then latest-wins over only the
+    * matched groups. Compaction
     * ([[compactCrossLingualState]]) bounds the delta count the scan
     * pays. */
   private def listsForQueries(
@@ -754,12 +756,12 @@ object Streams {
 
   /** CURRENT inverted postings of a cross-lingual ingest run — the
     * consumer-side fold of the `nn_id -> query_id` store
-    * [[mergeListsAndMine]] maintains next to the lists (written
-    * touched-only: a replacement list's postings are its k rows, so
-    * latest-wins PER QUERY is the same fold as the lists' and the
-    * two stores cannot disagree after any batch — StreamsSpec pins
-    * folded postings == folded lists inverted). The store exists for
-    * the tail's reverse-reference lookup ("which queries hold a
+    * [[mergeListsAndMine]] maintains next to the lists (each delta
+    * inverts that batch's lists delta: a list's postings are its k
+    * rows, so latest-wins PER QUERY is the same fold as the lists'
+    * and the two stores cannot disagree after any batch — StreamsSpec
+    * pins folded postings == folded lists inverted). The store exists for
+    * the ANN tail's reverse-reference lookup ("which queries hold a
     * touched id as neighbor"), which is nn_id-keyed and therefore
     * unservable by the lists' query_id bucketing; this fold is the
     * inspection face. Columns: (nn_id, query_id). */
@@ -796,14 +798,21 @@ object Streams {
         Seq("query_id"))
       .filter(col("alive"))
       .select("query_id", "partner_id", "cos", "margin")
-    val g = cur.filter(col("query_id") % 2 === 1)
+    val g = cur.filter(side(col("query_id")) === 1)
       .select(col("query_id").as("_gq"), col("partner_id").as("_gp"))
-    cur.filter(col("query_id") % 2 === 0)
+    cur.filter(side(col("query_id")) === 0)
       .join(g, col("query_id") === col("_gp") &&
         col("partner_id") === col("_gq"))
       .select(col("query_id").as("keep_id"),
         col("partner_id").as("drop_id"), col("cos"), col("margin"))
   }
+
+  /** The language side of a cross-lingual id: its parity, 0 (keep
+    * side) or 1. `pmod`, not `%`: Spark's `%` keeps the dividend's
+    * sign (-3 % 2 = -1), which would drop a negative odd id from the
+    * pair join and count -3 and 3 as opposite sides. For ids >= 0 it
+    * equals `id % 2`. */
+  private def side(id: Column): Column = pmod(id, lit(2))
 
   /** COMPACT a cross-lingual delta store pair — the maintenance pass
     * that keeps the tail's lookups from scanning one delta per
@@ -876,60 +885,94 @@ object Streams {
 
   /** The ONE list-merge + margin/mutual-mine + publish tail of the
     * cross-lingual ingest family, shared by the exact mode
-    * ([[ingestCrossLingualBatch]]) and the ANN candidate mode
-    * ([[ingestCrossLingualAnnBatch]]) — r11 review: this block
-    * existed twice near-verbatim, and a one-sided edit to the
-    * (cos desc, nn_id) tie-break, the k-bound, or the mutual-join
-    * condition would have silently broken the bitwise
-    * exact-degeneration contract StreamsSpec pins.
+    * ([[ingestCrossLingualBatch]], `exact = true`) and the ANN
+    * candidate mode ([[ingestCrossLingualAnnBatch]], `exact = false`)
+    * — r11 review: this block existed twice near-verbatim, and a
+    * one-sided edit to the (cos desc, nn_id) tie-break, the k-bound,
+    * or the mutual-join condition would have silently broken the
+    * bitwise exact-degeneration contract StreamsSpec pins.
     *
-    * TOUCHED-ONLY since r12 (the r11 verdict's one scale-killer): a
-    * micro-batch costs O(touched·k) compute, never a full
-    * O(corpus·k) state rewrite or a global re-mine. State is two
-    * delta stores, both latest-wins per query:
+    * State is two delta stores, both latest-wins per query:
     *
-    *   - lists delta N — full replacement k-lists for the
-    *     TOUCHED queries T (query_ids in `oriented`; lists of
-    *     untouched queries are bitwise inert — cos(x,y) never
-    *     changes — so their files are never rewritten), sorted by
-    *     `qb` = hash(query_id) ([[StoreBuckets]]); plus the inverted
+    *   - lists delta N — full replacement k-lists, sorted by `qb` =
+    *     hash(query_id) ([[StoreBuckets]]); plus the inverted
     *     POSTINGS mirror, delta N of `<listsDir>_postings` (the same
     *     lists as (nn_id, query_id) rows sorted by `nb` =
-    *     hash(nn_id)) serving the nn_id-keyed reverse lookup;
+    *     hash(nn_id)) serving the ANN mode's nn_id-keyed reverse
+    *     lookup;
     *   - pairs delta N — re-mined best-margin rows
-    *     (query_id, partner_id, cos, margin, alive) for the MINE set
-    *     M = T ∪ {queries whose current lists reference T}: a
-    *     query's margins consume its own neighborhood mean (changes
-    *     only when its list changes ⇒ q ∈ T) and its list members'
-    *     means (change only when THAT list changes ⇒ member ∈ T), so
-    *     every query outside M keeps bitwise-identical margins and
-    *     needs no re-mine. `alive = false` tombstones a query whose
-    *     best fell under minMargin. The PAIR set is not materialized
-    *     per batch at all: mutuality is a read-time equi-join over
-    *     the folded margin rows ([[crossLingualPairs]]), so a batch
-    *     never pays a partner lookup, a prior-pair scan, or a pair
+    *     (query_id, partner_id, cos, margin, alive) for the batch's
+    *     MINE set M; `alive = false` tombstones a query whose best
+    *     fell under minMargin. The PAIR set is not materialized per
+    *     batch at all: mutuality is a read-time equi-join over the
+    *     folded margin rows ([[crossLingualPairs]]), so a batch never
+    *     pays a partner lookup, a prior-pair scan, or a pair
     *     tombstone diff — the margin rows ARE the pair deltas.
     *
-    * The published view is [[crossLingualPairs]] / [[crossLingualLists]]
-    * (consumer-side folds). Mine-set lookups filter on their key
-    * sets' buckets ([[hitBuckets]] — a bounded collect of at most
-    * [[StoreBuckets]] ints per lookup; when that skips I/O is stated
-    * on [[StoreBuckets]]) and then semi-join the scan, unhinted (no
-    * store shuffle; hub batches degrade to shuffle semi-joins
-    * instead of a broadcast hard-stop). The
-    * reverse-reference lookup for M reads the postings mirror and
-    * over-approximates by scanning superseded delta rows too —
-    * re-mining an unaffected query rewrites bitwise-identical
-    * values, so correctness is unaffected and the skipped global
-    * latest-wins pass is the point.
+    * MERGE RULE (both modes): each query's latest prior delta plus the
+    * new rows of `oriented` (disjoint by the family's construction —
+    * every new pair involves a batch vector no earlier list can
+    * reference), row_number over (cos desc, nn_id) bounded at k
+    * (bruteForceTopK's exact tie-break — what keeps the final lists
+    * bitwise-equal to the one-shot dual k-NN). Deltas are written and
+    * READ BACK before the mine so it consumes exactly what a restart
+    * would; replay reads only deltas strictly below N.
     *
-    * Merge rule unchanged: prior lists of T ∪ `oriented` (disjoint by
-    * the family's construction — every new pair involves a batch
-    * vector no earlier list can reference), row_number over
-    * (cos desc, nn_id) bounded at k (bruteForceTopK's exact
-    * tie-break — what keeps the final lists bitwise-equal to the
-    * one-shot dual k-NN). Deltas are written and READ BACK before the
-    * mine so it consumes exactly what a restart would. */
+    * ANN MODE — TOUCHED-ONLY (r12): a micro-batch costs O(touched·k)
+    * compute, never an O(corpus·k) state rewrite or a global re-mine.
+    * The touched queries T are the query_ids of `oriented`, bounded
+    * by the candidate stage. Lists delta N holds T's replacement
+    * lists only (untouched lists are bitwise inert — cos(x,y) never
+    * changes — so their files are never rewritten). M = T ∪ {queries
+    * whose current lists reference T}: a query's margins consume its
+    * own neighborhood mean (changes only when its list changes ⇒
+    * q ∈ T) and its list members' means (change only when THAT list
+    * changes ⇒ member ∈ T), so every query outside M keeps
+    * bitwise-identical margins and needs no re-mine. The lookups
+    * filter on their key sets' buckets ([[hitBuckets]] — a bounded
+    * collect of at most [[StoreBuckets]] ints per lookup; when that
+    * skips I/O is stated on [[StoreBuckets]]) and then semi-join the
+    * scan, unhinted (no store shuffle; hub batches degrade to shuffle
+    * semi-joins instead of a broadcast hard-stop). The
+    * reverse-reference lookup reads the postings mirror and
+    * over-approximates M by scanning superseded rows too — re-mining
+    * an unaffected query rewrites bitwise-identical values.
+    *
+    * EXACT MODE — FULL STATE: the batch is scored against every prior
+    * vector, so T covers the corpus by construction and the
+    * touched-only lookups cannot shrink anything. Every listed
+    * query's list is carried into the merge, so lists delta N holds
+    * the whole current list state; the mine reads that one delta back
+    * as its frame, and M is the frame's `rank = 1` rows. The outputs
+    * are the touched-only tail's:
+    *
+    *   - Lists. The merge rule is unchanged, so an untouched query gets
+    *     back exactly the rows and ranks it already had — that same
+    *     rule assigned them. Every fold of the lists store, at every
+    *     horizon, is unchanged.
+    *   - The touched-only M is already every listed query. Take a
+    *     listed query q and a batch that yields at least one new
+    *     pair. If the batch holds a vector of q's opposite side, q is
+    *     touched. Otherwise every batch vector is on q's side and was
+    *     scored against every prior vector of the other side, so q's
+    *     list members are touched and q is in the reverse lookup.
+    *     Either way q ∈ M, so the touched-only frame (M plus M's list
+    *     members, folded as of N) is the whole fold as of N, which is
+    *     exactly delta N.
+    *   - Pairs. Pairs delta N is therefore bitwise what the
+    *     touched-only tail writes. When a batch yields no new pair,
+    *     this path re-mines every listed query to its current values
+    *     (no list changed), so the pairs fold is unchanged.
+    *   - Invariants kept. The frame is lists delta N read back from
+    *     disk (read-back-before-mine). Replay still reads only deltas
+    *     below N. Postings delta N is still written, so
+    *     [[crossLingualPostings]] still equals the folded lists
+    *     inverted.
+    *   - Cost. A one-sided batch rewrites the lists of queries it did
+    *     not touch: O(corpus·k) written per batch, next to the
+    *     O(batch·corpus) cosines the exact mode already scores. The
+    *     exact mode stays the bounded oracle face (32768 rows at
+    *     most). */
   private def mergeListsAndMine(
       spark: SparkSession,
       oriented: DataFrame,
@@ -938,96 +981,121 @@ object Streams {
       pairsDir: String,
       k: Int,
       minMargin: Double,
-      pruneLookups: Boolean = true): Unit = {
+      exact: Boolean): Unit = {
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var tPhase = System.nanoTime()
     def phase(name: String): Unit = {
       val now = System.nanoTime()
       System.err.println(f"[graft]   tail/$name ${(now - tPhase) / 1e9}%.3f s")
       tPhase = now
     }
-    val o = oriented
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // step 3, the mine and its publish: margins over `frame`, one row
+    // per q ∈ m — alive, or a tombstone when its best fell under the
+    // floor (the left join keeps the nulls). That row IS the pair
+    // publish — mutuality resolves at read time
+    // ([[crossLingualPairs]]). `onlyM`: the frame lists m and nothing
+    // else, so no output needs discarding
+    def mine(frame: DataFrame, m: DataFrame, onlyM: Boolean): Unit = {
+      // ONE dual-direction margin pass (bitwise the two-call spelling
+      // — AlignSpec pins it)
+      val margins = graft.operators.Align.marginScoreBoth(frame, k, minMargin)
+      val marginsM = (if (onlyM) margins
+        else margins.join(m.select(col("query_id").as("src_id")),
+          Seq("src_id"), "left_semi"))
+        .select(col("src_id").as("query_id"),
+          col("dst_id").as("partner_id"), col("cos"), col("margin"))
+      new DeltaStore(spark, pairsDir).write(batchId,
+        m.join(marginsM, Seq("query_id"), "left")
+          .select(col("query_id"), col("partner_id"), col("cos"),
+            col("margin"), col("partner_id").isNotNull.as("alive")))
+      phase("mine")
+    }
+    // the ANN mode's touched set feeds three lookups — persist it;
+    // the exact mode's single consumer is the merge below
+    val o = if (exact) oriented else oriented.persist(MEMORY_AND_DISK)
     try {
       // NOT deduped: every consumer is a semi-join right side or the
       // deduping m-union below — a distinct here is a wasted shuffle
       val touched = o.select("query_id")
-      locally {
-        val lists = new DeltaStore(spark, listsDir)
-        val postings = new DeltaStore(spark, postingsPath(listsDir))
-        // replay safety: the merge and the reverse lookup read deltas
-        // strictly below N
-        val priorLists = lists.below(batchId, ListsSchema)
-        val hasLists = priorLists.isDefined
-        // the touched queries' bucket set — prunes the carried-list
-        // read (qb: keyed on query_id) AND the postings reverse lookup
-        // (nb: keyed on nn_id ∈ T — same ids, same hash). Collected
-        // only when there IS prior state to prune: on the first batch
-        // every lookup covers the whole just-written delta by
-        // construction, so the bounded collect would be a pure job
-        // overhead (measured ~2-3 s/batch at probe scale). In the
-        // exact mode T is corpus-shaped and this degenerates to None
-        // (all buckets), which is that face's documented shape — so
-        // the exact-mode CALLER passes pruneLookups=false and skips
-        // the collect job outright (r14): the exact mode's T ⊇ batch ∪
-        // prior covers every stored query. None is always value-safe
-        // (keep-everything; the semi-joins enforce the key sets)
-        val touchedBuckets =
-          if (hasLists && pruneLookups)
-            hitBuckets(touched, "query_id", StoreBuckets)
-          else None
-        // 1. merge: prior lists of TOUCHED queries only, plus the new
-        // scored pairs; k-bound with the exact tie-break; write the
-        // touched queries' replacement lists as delta N. The prior
-        // side's latest-wins fold and the merge rank run as two
-        // Window operators over ONE query_id exchange (the fold keeps
-        // a prior row only when its delta is the query's max PRIOR
-        // delta; new rows always pass), instead of folding in a
-        // separate shuffle before the union
-        val newRows = o.withColumn("delta", lit(batchId))
-        val carried = priorLists
-          .map(_.filter(bucketPred("qb", touchedBuckets))
-            .join(touched, Seq("query_id"), "left_semi")
-            .select("query_id", "nn_id", "cos", "delta")
-            .unionByName(newRows))
-          .getOrElse(newRows)
-        val wMax = Window.partitionBy("query_id")
-        val wRank = Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("nn_id"))
-        // the merged replacement lists feed BOTH store writes —
-        // persist so the fold+rank window runs once. Both writes are
-        // batch-id-deterministic overwrites of a deterministic plan ⇒
-        // replay-idempotent, so the mirror never drifts from the lists
-        val merged = carried
-          .withColumn("_mp",
-            max(when(col("delta") < batchId, col("delta"))).over(wMax))
-          .filter(col("delta") === batchId || col("delta") === col("_mp"))
-          .withColumn("rank", row_number().over(wRank).cast("long"))
-          .filter(col("rank") <= k)
-          .select("query_id", "nn_id", "cos", "rank")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // each store write is one file per non-empty partition of
-          // the batch-shaped merge, whatever StoreBuckets is. The
-          // postings delta N is consumed only by FUTURE batches — this
-          // batch's reverse lookup reads postings deltas STRICTLY
-          // BELOW N — so its write may span the whole mine phase
-          // (r14: the old barrier held the mine behind both commits).
-          // The lists delta N IS read back by the mine (the frame
-          // lookup folds deltas <= N), so it is written first.
-          Par.overlap {
-            // postings mirror: the same replacement lists inverted and
-            // sorted by the NEIGHBOR id's bucket — the key the reverse
-            // lookup below filters on
-            postings.write(batchId,
-              bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id"))
-          } {
-            lists.write(batchId, bucketSorted(merged, "qb", "query_id"))
-            phase("merge")
-            // 2. mine set M = T ∪ reverse-references (queries whose lists
-            // hold a touched query as neighbor — their margins consume
-            // that neighbor's now-changed mean), looked up in the
-            // POSTINGS mirror filtered to T's nb buckets. Scanning
+      val lists = new DeltaStore(spark, listsDir)
+      val postings = new DeltaStore(spark, postingsPath(listsDir))
+      // replay safety: the merge and the reverse lookup read deltas
+      // strictly below N
+      val priorLists = lists.below(batchId, ListsSchema)
+      val hasLists = priorLists.isDefined
+      // ANN only: the touched queries' bucket set — prunes the
+      // carried-list read (qb: keyed on query_id) AND the postings
+      // reverse lookup (nb: keyed on nn_id ∈ T — same ids, same hash).
+      // Collected only when there IS prior state to prune: on the
+      // first batch every lookup covers the whole just-written delta
+      // by construction, so the bounded collect would be a pure job
+      // overhead. None is always value-safe (keep-everything; the
+      // semi-joins enforce the key sets)
+      val touchedBuckets =
+        if (hasLists && !exact) hitBuckets(touched, "query_id", StoreBuckets)
+        else None
+      // 1. merge: prior lists (every query's in the exact mode, the
+      // touched queries' in the ANN mode) plus the new scored pairs;
+      // k-bound with the exact tie-break; delta N. The prior side's
+      // latest-wins fold and the merge rank run as two Window
+      // operators over ONE query_id exchange (the fold keeps a prior
+      // row only when its delta is the query's max PRIOR delta; new
+      // rows always pass), instead of folding in a separate shuffle
+      // before the union
+      val newRows = o.withColumn("delta", lit(batchId))
+      val carried = priorLists
+        .map(p => (if (exact) p
+          else p.filter(bucketPred("qb", touchedBuckets))
+            .join(touched, Seq("query_id"), "left_semi"))
+          .select("query_id", "nn_id", "cos", "delta")
+          .unionByName(newRows))
+        .getOrElse(newRows)
+      val wMax = Window.partitionBy("query_id")
+      val wRank = Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("nn_id"))
+      // the merged replacement lists feed BOTH store writes — persist
+      // so the fold+rank window runs once. Both writes are
+      // batch-id-deterministic overwrites of a deterministic plan ⇒
+      // replay-idempotent, so the mirror never drifts from the lists
+      val merged = carried
+        .withColumn("_mp",
+          max(when(col("delta") < batchId, col("delta"))).over(wMax))
+        .filter(col("delta") === batchId || col("delta") === col("_mp"))
+        .withColumn("rank", row_number().over(wRank).cast("long"))
+        .filter(col("rank") <= k)
+        .select("query_id", "nn_id", "cos", "rank")
+        .persist(MEMORY_AND_DISK)
+      try {
+        // each store write is one file per non-empty partition of the
+        // merge, whatever StoreBuckets is. The postings delta N is
+        // consumed only by FUTURE batches (this batch's reverse lookup
+        // reads postings deltas STRICTLY BELOW N), so its write may
+        // span the whole mine phase. The lists delta N IS read back
+        // by the mine, so it is written first.
+        Par.overlap {
+          // postings mirror: the same replacement lists inverted and
+          // sorted by the NEIGHBOR id's bucket — the key the ANN
+          // reverse lookup filters on
+          postings.write(batchId,
+            bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id"))
+        } {
+          lists.write(batchId, bucketSorted(merged, "qb", "query_id"))
+          phase("merge")
+          if (exact) {
+            // 2. the frame is delta N itself — every listed query's
+            // current list, read back from disk; M is every listed
+            // query. Not persisted: its consumers all sit in the one
+            // pairs-write action
+            val frame = lists.read(batchId, ListsSchema)
+              .select("query_id", "rank", "nn_id", "cos")
+            mine(frame, frame.filter(col("rank") === 1L)
+              .select("query_id"), onlyM = true)
+          } else {
+            // 2. mine set M = T ∪ reverse-references (queries whose
+            // lists hold a touched query as neighbor — their margins
+            // consume that neighbor's now-changed mean), looked up in
+            // the POSTINGS mirror filtered to T's nb buckets. Scanning
             // superseded postings rows over-approximates M: harmless
             // (bitwise-identical re-mine)
             val rev = postings.below(batchId, PostingsSchema)
@@ -1037,21 +1105,20 @@ object Streams {
                 .select("query_id"))
               .getOrElse(touched.limit(0))
             val m = touched.unionByName(rev).distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              .persist(MEMORY_AND_DISK)
             try {
-              // 3. re-mine M: frame = current lists of M plus of M's list
-              // members (their means feed M's margins). The member set is
+              // frame = current lists of M plus of M's list members
+              // (their means feed M's margins). The member set is
               // taken from a store scan filtered to M's qb buckets and
-              // semi-joined on M (stale rows over-approximate it — extra
-              // means cost a few folds and change nothing). Margins of
-              // those 2-hop frame queries can drop candidate rows at the
-              // mean join — the M semi-join below discards their outputs,
-              // and every row surviving for q ∈ M consumed complete means
-              // same first-batch rule as touchedBuckets: with no prior
-              // state the collects cannot filter anything. Superset
-              // short-circuit (r14): M ⊇ T, so when T already hit every
-              // bucket (touchedBuckets = None — the exact mode by
-              // construction) M does too and its collect is skipped
+              // semi-joined on M (stale rows over-approximate it —
+              // extra means cost a few folds and change nothing).
+              // Margins of those 2-hop frame queries can drop
+              // candidate rows at the mean join — the mine's M
+              // semi-join discards their outputs, and every row
+              // surviving for q ∈ M consumed complete means. Same
+              // first-batch rule as touchedBuckets; and M ⊇ T, so
+              // when T already hit every bucket (touchedBuckets =
+              // None) M does too and its collect is skipped
               val mBuckets =
                 if (hasLists && touchedBuckets.isDefined)
                   hitBuckets(m, "query_id", StoreBuckets)
@@ -1061,46 +1128,27 @@ object Streams {
                   bucketPred("qb", mBuckets))
                 .join(m, Seq("query_id"), "left_semi")
                 .select(col("nn_id").as("query_id"))
-              // the frame is a multi-shuffle lookup consumed several times
-              // by the two marginScore passes — persist it; frameQids too:
-              // its bucket set is collected before the lookup consumes it
-              val frameQids = m.unionByName(nnOfM)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              // frameQids ⊇ M: the same superset short-circuit — an
-              // all-buckets M makes the frame collect a no-op too
+              // the frame is a multi-shuffle lookup consumed several
+              // times by the two marginScore passes — persist it;
+              // frameQids too: its bucket set is collected before the
+              // lookup consumes it
+              val frameQids = m.unionByName(nnOfM).persist(MEMORY_AND_DISK)
+              // frameQids ⊇ M: the same superset short-circuit
               val frame = listsForQueries(spark, listsDir, batchId,
                 frameQids,
                 if (hasLists && mBuckets.isDefined)
                   hitBuckets(frameQids, "query_id", StoreBuckets)
                 else None)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                // ONE dual-direction margin pass (bitwise the two-call
-                // spelling — AlignSpec pins it); the M semi-filter
-                // discards the 2-hop frame queries' outputs
-                val marginsM = graft.operators.Align
-                  .marginScoreBoth(frame, k, minMargin)
-                  .join(m.select(col("query_id").as("src_id")),
-                    Seq("src_id"), "left_semi")
-                  .select(col("src_id").as("query_id"),
-                    col("dst_id").as("partner_id"), col("cos"), col("margin"))
-                // every q ∈ M gets a row: alive, or a tombstone when its
-                // best fell under the floor (left join keeps the nulls).
-                // That row IS the pair publish — mutuality resolves at
-                // read time ([[crossLingualPairs]]), so nothing else to do
-                new DeltaStore(spark, pairsDir).write(batchId,
-                  m.join(marginsM, Seq("query_id"), "left")
-                    .select(col("query_id"), col("partner_id"), col("cos"),
-                      col("margin"), col("partner_id").isNotNull.as("alive")))
-                phase("mine")
-              } finally {
+                .persist(MEMORY_AND_DISK)
+              try mine(frame, m, onlyM = false)
+              finally {
                 frame.unpersist(blocking = false)
                 frameQids.unpersist(blocking = false)
               }
             } finally m.unpersist(blocking = false)
           }
-        } finally merged.unpersist(blocking = false)
-      }
+        }
+      } finally merged.unpersist(blocking = false)
     } finally o.unpersist(blocking = false)
   }
 
@@ -1208,7 +1256,7 @@ object Streams {
       // the counted maxBatchRows guard above (small by CONTRACT, not
       // by hope)
       def crossParity(x: DataFrame, y: DataFrame, dedupe: Boolean) = {
-        val cond = (col("x.id") % 2 =!= col("y.id") % 2) &&
+        val cond = (side(col("x.id")) =!= side(col("y.id"))) &&
           (if (dedupe) col("x.id") < col("y.id") else lit(true))
         broadcast(x.as("x")).join(y.as("y"), cond)
           .select(col("x.id").as("qa"), col("y.id").as("qb"),
@@ -1238,17 +1286,17 @@ object Streams {
         vecStore.write(batchId, b.select(col("id"), col("v")))
       } {
         // exact incremental top-k merge + mine + publish — the shared
-        // family tail ([[mergeListsAndMine]]): prior lists and new
-        // pairs are disjoint by construction (every new pair involves
-        // a batch vector). pruneLookups=false: the exact mode scores
-        // batch×ALL-prior, so its touched set covers every stored
-        // query_id and the bucket-prune collect could only ever
-        // answer "all buckets" — skip that per-batch job (the ANN
-        // mode keeps pruning; its touched set is candidate-bounded)
+        // family tail ([[mergeListsAndMine]]) in its full-state mode:
+        // the batch is scored against ALL prior vectors, so the
+        // touched set covers every stored query and the touched-only
+        // lookups could never shrink anything. Lists delta N carries
+        // every listed query's list and the mine reads that delta
+        // back as its frame (the ANN mode stays touched-only; its
+        // touched set is candidate-bounded)
         mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
-          k, minMargin, pruneLookups = false)
+          k, minMargin, exact = true)
       } finally {
-        // the tail materialized its own persist of `oriented`; the
+        // the merge consumed `oriented` into its own persist; the
         // pair cache has no consumer left
         newPairs.unpersist(blocking = false)
       }
@@ -1386,7 +1434,7 @@ object Streams {
         // neighbors cannot evict the cross-parity ones
         val cand = Similarity.ivfCandidates(
           b, "id", "v", index, cents, nprobe)
-          .filter((col("query_id") % 2) =!= (col("nn_id") % 2))
+          .filter(side(col("query_id")) =!= side(col("nn_id")))
           // the two-orientation union below duplicates the candidate
           // join + scoring subtree in ONE plan (no exchange between
           // them for ReuseExchange to dedup) — persist so the probe
@@ -1410,7 +1458,7 @@ object Streams {
           // new candidates are disjoint (every new pair involves a
           // batch vector, which no earlier list can reference)
           mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
-            k, minMargin)
+            k, minMargin, exact = false)
         } finally {
           // the tail materialized its own persist of `oriented`; the
           // candidate cache has no consumer left

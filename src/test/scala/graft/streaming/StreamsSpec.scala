@@ -1066,6 +1066,204 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  /** An exact cross-lingual ingest of `batches` (one per batch id, in
+    * order) into fresh stores under `base`. */
+  private def ingestExact(
+      base: String, batches: Seq[org.apache.spark.sql.DataFrame]): Unit =
+    for ((b, n) <- batches.zipWithIndex)
+      Streams.ingestCrossLingualBatch(b, n.toLong, "vec_id", "embedding",
+        s"$base/vecs", s"$base/lists", s"$base/pairs", 4, 1.05)
+
+  private def listRows(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select("query_id", "rank", "nn_id", "cos")
+      .as[(Long, Long, Long, Double)].collect().sorted.toSeq
+  }
+
+  private def pairRows(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select("keep_id", "drop_id", "cos", "margin")
+      .as[(Long, Long, Double, Double)].collect().sorted.toSeq
+  }
+
+  /** The folded lists and pairs of the cross-lingual stores under
+    * `base`. */
+  private def folds(base: String) =
+    (listRows(Streams.crossLingualLists(spark, s"$base/lists")),
+      pairRows(Streams.crossLingualPairs(spark, s"$base/pairs")))
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+
+  test("exact mode, one-sided batch: lists delta N holds every listed " +
+      "query, the folds equal the one-shot dual k-NN and the q267 " +
+      "mining bitwise, and a replay leaves both folds unchanged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select("vec_id", "embedding")
+    // batch 1 is the 4 highest even ids only: the one batch shape
+    // whose touched set is not the whole corpus (no prior even query
+    // pairs with it)
+    val last4 = e.filter(pmod($"vec_id", lit(2)) === 0)
+      .select("vec_id").as[Long].collect().sorted.takeRight(4).toSeq
+    def part(p: org.apache.spark.sql.Column) =
+      e.filter(p).as[(Long, Seq[Float])].collect().toSeq
+        .toDF("vec_id", "embedding")
+    val batch1 = part($"vec_id".isin(last4: _*))
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_xling_onesided_").toString
+    try {
+      ingestExact(base, Seq(part(!$"vec_id".isin(last4: _*)), batch1))
+      val (lists, pairs) = folds(base)
+      // the one-shot twins over the whole corpus
+      val a = e.filter(pmod($"vec_id", lit(2)) === 0)
+      val b = e.filter(pmod($"vec_id", lit(2)) === 1)
+      val fwd = graft.operators.Similarity.bruteForceTopK(
+        b, "vec_id", "embedding", a, "vec_id", "embedding", k = 4)
+      val bwd = graft.operators.Similarity.bruteForceTopK(
+        a, "vec_id", "embedding", b, "vec_id", "embedding", k = 4)
+      assert(lists.nonEmpty && lists == listRows(fwd.unionByName(bwd)),
+        "folded lists diverged from the one-shot dual k-NN")
+      val mfwd = graft.operators.Align.marginScore(fwd, bwd, 4, 1.05)
+      val mbwd = graft.operators.Align.marginScore(bwd, fwd, 4, 1.05)
+      assert(pairs.nonEmpty && pairs == pairRows(mfwd.as("f")
+        .join(mbwd.as("b"), col("f.src_id") === col("b.dst_id") &&
+          col("f.dst_id") === col("b.src_id"))
+        .select(col("f.src_id").as("keep_id"),
+          col("f.dst_id").as("drop_id"), col("f.cos"), col("f.margin"))),
+        "folded pairs diverged from the q267 mining")
+      // full state: delta 1 lists every query, the untouched even
+      // ones included
+      def qids(df: org.apache.spark.sql.DataFrame) =
+        df.select("query_id").distinct().as[Long].collect().sorted.toSeq
+      val missing = lists.map(_._1).distinct
+        .diff(qids(spark.read.parquet(s"$base/lists/delta=1")))
+      assert(missing.isEmpty, s"lists delta=1 misses ${missing.size} " +
+        s"listed queries, e.g. ${missing.take(5).mkString(", ")}")
+      Streams.ingestCrossLingualBatch(batch1, 1L, "vec_id", "embedding",
+        s"$base/vecs", s"$base/lists", s"$base/pairs", 4, 1.05)
+      assert(folds(base) == ((lists, pairs)),
+        "a batch-1 replay changed the folds")
+    } finally deleteDir(base)
+  }
+
+  test("cross-lingual parity is pmod: an exact ingest whose ids are " +
+      "shifted below zero by an even offset gives the unshifted run's " +
+      "folds, shifted") {
+    import spark.implicits._
+    val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val maxId = e.agg(org.apache.spark.sql.functions.max($"vec_id"))
+      .first().getLong(0)
+    // even, and about half the corpus lands below zero
+    val shift = -((maxId + 1) / 4 * 2)
+    val rows = e.as[(Long, Seq[Float])].collect().toSeq
+    def halves(off: Long) = {
+      val (lo, hi) = rows.map { case (i, v) => (i + off, v) }
+        .partition(_._1 <= maxId / 2 + off)
+      Seq(lo.toDF("vec_id", "embedding"), hi.toDF("vec_id", "embedding"))
+    }
+    val plain = java.nio.file.Files
+      .createTempDirectory("graft_xling_plain_").toString
+    val shifted = java.nio.file.Files
+      .createTempDirectory("graft_xling_shifted_").toString
+    try {
+      ingestExact(plain, halves(0L))
+      ingestExact(shifted, halves(shift))
+      val (lists, pairs) = folds(plain)
+      val (sLists, sPairs) = folds(shifted)
+      assert(lists.nonEmpty && pairs.nonEmpty)
+      assert(sLists == lists.map { case (q, r, n, c) =>
+        (q + shift, r, n + shift, c) }.sorted,
+        "negative ids changed the lists")
+      assert(sPairs == pairs.map { case (k, d, c, m) =>
+        (k + shift, d + shift, c, m) }.sorted,
+        "negative ids changed the pairs")
+      // non-vacuous: negative odd ids pair up
+      assert(sPairs.exists(p => p._2 < 0L && p._2 % 2 != 0L))
+    } finally {
+      deleteDir(plain)
+      deleteDir(shifted)
+    }
+  }
+
+  test("exact mode scan path: with prior state, no executed plan scans " +
+      "the postings store, and the pairs write scans the lists store " +
+      "only at delta=N") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    // every file scan, through AQE stages and into cached relations
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = Plans.flatMap(p) {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    def uriPath(p: Path) = p.toUri.getPath.stripSuffix("/")
+    val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select("vec_id", "embedding").filter($"vec_id" < 160)
+    def part(p: org.apache.spark.sql.Column) =
+      e.filter(p).as[(Long, Seq[Float])].collect().toSeq
+        .toDF("vec_id", "embedding")
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_xling_scans_").toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val marker = "graft_scan_marker"
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit =
+        seen.add(qe)
+    }
+    try {
+      ingestExact(base, Seq(part($"vec_id" < 80)))
+      spark.listenerManager.register(listener)
+      try {
+        Streams.ingestCrossLingualBatch(part($"vec_id" >= 80), 1L,
+          "vec_id", "embedding", s"$base/vecs", s"$base/lists",
+          s"$base/pairs", 4, 1.05)
+        // the listener queue delivers in order: once the marker's
+        // execution is seen, the batch's have all been delivered
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        def markerSeen = seen.toArray(Array.empty[QueryExecution])
+          .exists(_.analyzed.output.exists(_.name == marker))
+        while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(markerSeen, "the listener never saw the marker")
+      } finally spark.listenerManager.unregister(listener)
+      val plans = seen.toArray(Array.empty[QueryExecution]).toSeq
+        .map(_.executedPlan)
+      val lists = uriPath(new Path(new java.io.File(s"$base/lists").toURI))
+      val postings = uriPath(new Path(
+        new java.io.File(Streams.postingsPath(s"$base/lists")).toURI))
+      def under(p: Path, dir: String) =
+        uriPath(p) == dir || uriPath(p).startsWith(dir + "/")
+      val roots = plans.flatMap(scans).flatMap(_.relation.location.rootPaths)
+      assert(roots.exists(under(_, lists)), "no plan scanned the lists")
+      assert(!roots.exists(under(_, postings)),
+        s"a plan scanned the postings store: ${roots.mkString(", ")}")
+      // AQE wraps a write whose query shuffles: find the command inside
+      val pairsDelta =
+        uriPath(new Path(new java.io.File(s"$base/pairs/delta=1").toURI))
+      val pairsWrite = plans.flatMap(p => Plans.collect(p) {
+        case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+            if uriPath(c.outputPath) == pairsDelta => w
+      })
+      assert(pairsWrite.size == 1, s"${pairsWrite.size} pairs writes seen")
+      val listScans = scans(pairsWrite.head).flatMap(_.relation.location.rootPaths)
+        .filter(under(_, lists))
+      assert(listScans.nonEmpty && listScans.forall(uriPath(_) == s"$lists/delta=1"),
+        s"the pairs write scans the lists store at ${listScans.mkString(", ")}")
+    } finally deleteDir(base)
+  }
+
   test("ingestDeleteStream: per-batch reports == direct deletePropagation " +
       "on the evolving survivor view; final survivors == batch anti-join; " +
       "replay and double-delete are no-ops") {
