@@ -316,15 +316,81 @@ object Streams {
       .start()
 
   /** The foreachBatch sink every ingest and ledger stream runs on:
-    * `f` gets each micro-batch with its id, in Append mode, under the
-    * checkpoint at `checkpointDir`. */
-  private def eachBatch(df: DataFrame, checkpointDir: String)(
-      f: (DataFrame, Long) => Unit): StreamingQuery =
+    * `batch` gets each micro-batch with its id, in Append mode, under
+    * the checkpoint at `checkpointDir`. After batch N, when
+    * [[compactDue]] holds, `compact` folds the stream's stores up to
+    * N−1 (batch and horizon as arguments), named and timed as
+    * `compact upTo=N−1`. */
+  private def eachBatch(
+      df: DataFrame, checkpointDir: String, compactEvery: Int = 0)(
+      batch: (DataFrame, Long) => Unit)(
+      compact: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => f(batch, batchId))
+      .foreachBatch { (b: Dataset[Row], batchId: Long) =>
+        batch(b, batchId)
+        if (compactDue(batchId, compactEvery))
+          timed(s"compact upTo=${batchId - 1}")(compact(b, batchId - 1))
+      }
       .start()
+
+  /** Opt-in in-stream compaction (`compactEvery` on every ingest
+    * wrapper with a growing delta store — the two cross-lingual
+    * modes, [[ingestNearDupStream]], [[ingestVectorStream]],
+    * [[ingestDeleteStream]]): at the end of batch N, batch N−1 is by
+    * construction checkpoint-COMMITTED (N only runs after N−1
+    * committed), so folding up to N−1 is always replay-safe — a
+    * crash before N's own commit replays N against the folded
+    * delta N−1, value-identical to the uncompacted history, and a
+    * replayed compaction is idempotent. This bounds every lookup's
+    * delta-directory count to O(compactEvery) without any
+    * out-of-band maintenance job. */
+  private[graft] def compactDue(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
+
+  /** The stream family's one naming and timing site. Every Spark job
+    * `body` starts reports `name` as its call site (the
+    * `callSite.short` local property, what `SparkContext.setCallSite`
+    * sets; the previous value is restored on exit, and
+    * [[graft.core.Par.overlap]] legs copy it), so a listener can tell
+    * a batch's merge, mine, write and compaction jobs apart. On
+    * success one `[graft] <name> took X s` line reports the wall: for
+    * a batch, what the ingest operator itself cost, without the
+    * stream's startup, trigger polling and checkpoint commits. No job
+    * group or tag is set: listeners attribute spans by group, and
+    * `Par.overlap` cancels by tag. */
+  private def timed[A](name: String)(body: => A): A = {
+    val sc = SparkSession.active.sparkContext
+    val prev = sc.getLocalProperty(CallSiteShort)
+    sc.setLocalProperty(CallSiteShort, name)
+    try {
+      val t0 = System.nanoTime()
+      val out = body
+      System.err.println(
+        f"[graft] $name took ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      out
+    } finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  private val CallSiteShort = "callSite.short"
+
+  /** Micro-batch `batchId` of the `*Batch` function `fn`: the writer
+    * recovers `stores` first ([[DeltaStore.recover]] heals a swap a
+    * crash left mid-flight and refuses a retired-layout store) — so
+    * before the batch reads or writes anything — then runs `body`
+    * under `timed(s"$fn batch=$batchId")`. */
+  private def batchRun[A](fn: String, batchId: Long, stores: DeltaStore*)(
+      body: => A): A = {
+    stores.foreach(_.recover())
+    timed(s"$fn batch=$batchId")(body)
+  }
+
+  /** `f` over `df` persisted at MEMORY_AND_DISK, unpersisted after. */
+  private def persisted[A](df: DataFrame)(f: DataFrame => A): A = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally p.unpersist(blocking = false)
+  }
 
   /** Continuous near-dup ingestion — the streaming face of the
     * incremental MinHash-LSH story ([[graft.operators.Dedup]]): each
@@ -365,9 +431,10 @@ object Streams {
       bands: Int = 32,
       rowsPerBand: Int = 4,
       compactEvery: Int = 0): StreamingQuery =
-    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+    eachBatch(docs, checkpointDir, compactEvery) { (batch, batchId) =>
       ingestNearDupBatch(batch, batchId, idCol, textCol,
         indexDir, pairsDir, minJ, n, bands, rowsPerBand)
+    } { (batch, upTo) =>
       // in-stream index compaction ([[compactDue]]'s committed-only
       // rule); pairsDir is append-only published OUTPUT, not state,
       // so only the index store folds. With append-only unique ids
@@ -375,11 +442,10 @@ object Streams {
       // unchanged; re-ingested ids resolve latest-wins (no ghost
       // pairs). Deltas are read under the batch index's schema
       // (building that plan is analysis only, no job)
-      if (compactDue(batchId, compactEvery))
-        new DeltaStore(batch.sparkSession, indexDir).compact(batchId - 1,
-          graft.operators.Dedup.minHashIndex(batch, idCol, textCol, n,
-            bands, rowsPerBand).schema.toDDL)(
-          graft.operators.Dedup.compactIndex(_))
+      new DeltaStore(batch.sparkSession, indexDir).compact(upTo,
+        graft.operators.Dedup.minHashIndex(batch, idCol, textCol, n,
+          bands, rowsPerBand).schema.toDDL)(
+        graft.operators.Dedup.compactIndex(_))
     }
 
   /** One [[ingestNearDupStream]] micro-batch — factored out so the
@@ -397,20 +463,14 @@ object Streams {
       bands: Int,
       rowsPerBand: Int): Unit = {
     import graft.operators.Dedup
-    val t0 = System.nanoTime()
     val index = new DeltaStore(batch.sparkSession, indexDir)
-    // heal any compaction swap a crash left mid-flight (no-op when clean)
-    index.recover()
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    batchRun("ingestNearDupBatch", batchId, index)(persisted(batch) { b =>
       // the batch index feeds BOTH outputs (the probe and the delta
       // write) — build it once and persist, so the batch is shingled
       // and minhashed once per cycle, not once per consumer (measured
       // ~35% off the per-batch cost at sf0.1)
-      val newIdx = Dedup.minHashIndex(b, idCol, textCol, n, bands,
-          rowsPerBand)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      persisted(Dedup.minHashIndex(b, idCol, textCol, n, bands,
+          rowsPerBand)) { newIdx =>
         // replay safety: probe deltas 0..N-1 only, under the batch
         // index's schema (a replayed batch 0 takes the self-pair
         // branch again)
@@ -426,15 +486,8 @@ object Streams {
         } {
           pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         }
-      } finally newIdx.unpersist(blocking = false)
-      // per-batch operator cost, said out loud: an end-to-end timing
-      // of the streaming query also pays query startup, trigger
-      // polling, and checkpoint commits — this line is what the
-      // INGEST OPERATOR itself cost (probe + verify + both writes),
-      // so a bench headline stays attributable (r5 judge finding)
-      System.err.println(f"[graft] ingestNearDupBatch batch=$batchId " +
-        f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    } finally b.unpersist(blocking = false)
+      }
+    })
   }
 
   /** Continuous EMBEDDING ingestion — the ANN twin of
@@ -474,16 +527,16 @@ object Streams {
       nprobe: Int = 4,
       sampleSize: Int = 256,
       compactEvery: Int = 0): StreamingQuery =
-    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+    eachBatch(vecs, checkpointDir, compactEvery) { (batch, batchId) =>
       ingestVectorBatch(batch, batchId, idCol, vecCol,
         indexDir, pairsDir, centroidsDir, minCos, nlist, nprobe,
         sampleSize)
+    } { (batch, upTo) =>
       // in-stream assignment-store compaction (committed-only);
       // pairsDir is append-only published output, not state
-      if (compactDue(batchId, compactEvery))
-        new DeltaStore(batch.sparkSession, indexDir).compact(batchId - 1,
-          vecsSchema(batch, idCol, vecCol, cells = true))(
-          graft.operators.Dedup.compactIndex(_, valueCols = Seq("v", "cell")))
+      new DeltaStore(batch.sparkSession, indexDir).compact(upTo,
+        vecsSchema(batch, idCol, vecCol, cells = true))(
+        graft.operators.Dedup.compactIndex(_, valueCols = Seq("v", "cell")))
     }
 
   /** One [[ingestVectorStream]] micro-batch — factored out so the
@@ -503,13 +556,9 @@ object Streams {
       nprobe: Int,
       sampleSize: Int): Unit = {
     import graft.operators.Similarity
-    val t0 = System.nanoTime()
     val spark = batch.sparkSession
     val index = new DeltaStore(spark, indexDir)
-    // heal any compaction swap a crash left mid-flight (no-op when clean)
-    index.recover()
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    batchRun("ingestVectorBatch", batchId, index)(persisted(batch) { b =>
       // batch 0 trains; every later batch reads. The rule keys on
       // batchId, NOT on whether centroidsDir exists — a replayed
       // batch 0 (crash after the centroid write, before the
@@ -517,18 +566,13 @@ object Streams {
       // deterministic (hash-ordered bounded sample, fixed-seed
       // k-means) and therefore byte-identical, never half-trusted
       // partial state.
-      val cents: org.apache.spark.sql.DataFrame =
-        if (batchId == 0L) {
-          val (_, c) = Similarity.ivfIndex(
-            b, idCol, vecCol, nlist, sampleSize)
-          c.write.mode("overwrite").parquet(centroidsDir)
-          spark.read.parquet(centroidsDir)
-        } else spark.read.parquet(centroidsDir)
+      if (batchId == 0L)
+        Similarity.ivfIndex(b, idCol, vecCol, nlist, sampleSize)._2
+          .write.mode("overwrite").parquet(centroidsDir)
+      val cents = spark.read.schema(CentroidsSchema).parquet(centroidsDir)
       // the batch's assignments feed BOTH outputs (probe index side
       // and the delta write) — persist across the two consumers
-      val own = Similarity.ivfAssign(b, idCol, vecCol, cents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      persisted(Similarity.ivfAssign(b, idCol, vecCol, cents)) { own =>
         // replay safety: probe deltas 0..N-1 plus the batch's own
         // assignments (the same-batch pairs)
         val probed = index.below(batchId, own.schema.toDDL)
@@ -544,66 +588,10 @@ object Streams {
         } {
           pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         }
-      } finally own.unpersist(blocking = false)
-      // attributable per-batch operator cost (see ingestNearDupBatch)
-      System.err.println(f"[graft] ingestVectorBatch batch=$batchId " +
-        f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    } finally b.unpersist(blocking = false)
+      }
+    })
   }
 
-  /** Continuous CROSS-LINGUAL mining — the streaming spelling of the
-    * q267 mutual best-margin dedup (Artetxe & Schwenk margin filter;
-    * reference analog: the chained-job shape — successive
-    * `MapReduceMaster::MapReduce` submissions,
-    * `Imagine_MapReduce/MapReduceMaster.cpp:36-58`): vectors from
-    * two embedded "languages"
-    * (even/odd id parity) arrive as micro-batches, and after each
-    * batch the current mutual best-margin pair set is published as
-    * add/del deltas to the pairs store's delta N (fold with
-    * [[crossLingualPairs]]).
-    *
-    * The INCREMENTAL insight is that exact k-NN LISTS are
-    * maintainable state: cos(x, y) never changes once both vectors
-    * exist, so the exact cross-parity top-k over a growing corpus is
-    * top-k(previous top-k ∪ pairs involving the new batch) — each
-    * batch scores only batch×prior + batch×batch cross-parity pairs
-    * (every unordered pair exactly once; cos is bitwise symmetric,
-    * the dot/norm folds run in index order regardless of
-    * orientation), merges them into the k-bounded per-query lists,
-    * and re-mines margin+mutuality. Its touched set is the whole
-    * corpus by construction, so each batch writes the whole current
-    * list state as its lists delta and mines that delta (see
-    * [[mergeListsAndMine]]'s exact mode, and why that equals the
-    * touched-only re-mine); state and the published pair set live in
-    * latest-wins delta stores folded by [[crossLingualLists]] /
-    * [[crossLingualPairs]]. After the final
-    * batch the folded lists equal the one-shot exact dual k-NN
-    * bitwise (same (cos desc, id) tie-break), so the folded pair set
-    * equals q267's batch result and the same oracle applies
-    * unchanged — StreamsSpec pins the equality.
-    *
-    * The exact batch×state scorer is the bounded ORACLE face
-    * (same loud 32768-row bound as q267, enforced by the caller);
-    * the at-scale swap is the IVF-probe candidate stage that q267's
-    * in-job recall gate prices and [[ingestVectorStream]] already
-    * runs in streaming form.
-    *
-    * Replay safety follows the family contract: the batch reads
-    * vector and list deltas strictly below its batchId (the mine
-    * then reads back the lists delta it has just rewritten), and all
-    * four writes (vector, list, postings and pair deltas) go to
-    * batch-id-deterministic subdirectories with `overwrite` —
-    * exactly-once by idempotence; a crash-replay rewrites every
-    * output value-identically.
-    *
-    * TRIGGER-SIZING CONTRACT (the whole ingest family, loudest here
-    * because the batch side is broadcast AND exactly scored): size
-    * triggers so a micro-batch stays well under `maxBatchRows`
-    * (`maxOffsetsPerTrigger` on Kafka-like sources,
-    * `maxFilesPerTrigger` on file sources) — a catch-up batch after
-    * downtime inherits every backlogged row otherwise. The guard is
-    * COUNTED, so an oversized batch fails with the fix in the error
-    * text instead of hitting Spark's 8 GB broadcast hard-stop. */
   /** Latest-delta-wins resolution over a [[DeltaStore]]: keep,
     * per `keys` group, only the rows of that group's highest delta.
     * Every delta writes a group's FULL replacement rows (a whole
@@ -690,6 +678,9 @@ object Streams {
   private val PairsSchema = "query_id BIGINT, partner_id BIGINT, " +
     "cos DOUBLE, margin DOUBLE, alive BOOLEAN"
   private val TombstonesSchema = "id BIGINT"
+  /** The IVF centroid table both assignment streams train on batch 0
+    * ([[graft.operators.Similarity.ivfIndex]]'s output). */
+  private val CentroidsSchema = "cell INT, centroid ARRAY<FLOAT>"
 
   /** File schema of a vector store's deltas: the batch's (id, v),
     * plus the IVF `cell` of the assignment stores
@@ -983,13 +974,6 @@ object Streams {
       minMargin: Double,
       exact: Boolean): Unit = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      System.err.println(f"[graft]   tail/$name ${(now - tPhase) / 1e9}%.3f s")
-      tPhase = now
-    }
     // step 3, the mine and its publish: margins over `frame`, one row
     // per q ∈ m — alive, or a tombstone when its best fell under the
     // floor (the left join keeps the nulls). That row IS the pair
@@ -1009,12 +993,8 @@ object Streams {
         m.join(marginsM, Seq("query_id"), "left")
           .select(col("query_id"), col("partner_id"), col("cos"),
             col("margin"), col("partner_id").isNotNull.as("alive")))
-      phase("mine")
     }
-    // the ANN mode's touched set feeds three lookups — persist it;
-    // the exact mode's single consumer is the merge below
-    val o = if (exact) oriented else oriented.persist(MEMORY_AND_DISK)
-    try {
+    def tail(o: DataFrame): Unit = {
       // NOT deduped: every consumer is a semi-join right side or the
       // deduping m-union below — a distinct here is a wasted shuffle
       val touched = o.select("query_id")
@@ -1058,15 +1038,13 @@ object Streams {
       // so the fold+rank window runs once. Both writes are
       // batch-id-deterministic overwrites of a deterministic plan ⇒
       // replay-idempotent, so the mirror never drifts from the lists
-      val merged = carried
+      persisted(carried
         .withColumn("_mp",
           max(when(col("delta") < batchId, col("delta"))).over(wMax))
         .filter(col("delta") === batchId || col("delta") === col("_mp"))
         .withColumn("rank", row_number().over(wRank).cast("long"))
         .filter(col("rank") <= k)
-        .select("query_id", "nn_id", "cos", "rank")
-        .persist(MEMORY_AND_DISK)
-      try {
+        .select("query_id", "nn_id", "cos", "rank")) { merged =>
         // each store write is one file per non-empty partition of the
         // merge, whatever StoreBuckets is. The postings delta N is
         // consumed only by FUTURE batches (this batch's reverse lookup
@@ -1080,9 +1058,9 @@ object Streams {
           postings.write(batchId,
             bucketSorted(merged.select("query_id", "nn_id"), "nb", "nn_id"))
         } {
-          lists.write(batchId, bucketSorted(merged, "qb", "query_id"))
-          phase("merge")
-          if (exact) {
+          timed("tail/merge")(
+            lists.write(batchId, bucketSorted(merged, "qb", "query_id")))
+          timed("tail/mine")(if (exact) {
             // 2. the frame is delta N itself — every listed query's
             // current list, read back from disk; M is every listed
             // query. Not persisted: its consumers all sit in the one
@@ -1104,9 +1082,7 @@ object Streams {
                   Seq("nn_id"), "left_semi")
                 .select("query_id"))
               .getOrElse(touched.limit(0))
-            val m = touched.unionByName(rev).distinct()
-              .persist(MEMORY_AND_DISK)
-            try {
+            persisted(touched.unionByName(rev).distinct()) { m =>
               // frame = current lists of M plus of M's list members
               // (their means feed M's margins). The member set is
               // taken from a store scan filtered to M's qb buckets and
@@ -1132,26 +1108,77 @@ object Streams {
               // times by the two marginScore passes — persist it;
               // frameQids too: its bucket set is collected before the
               // lookup consumes it
-              val frameQids = m.unionByName(nnOfM).persist(MEMORY_AND_DISK)
-              // frameQids ⊇ M: the same superset short-circuit
-              val frame = listsForQueries(spark, listsDir, batchId,
-                frameQids,
-                if (hasLists && mBuckets.isDefined)
-                  hitBuckets(frameQids, "query_id", StoreBuckets)
-                else None)
-                .persist(MEMORY_AND_DISK)
-              try mine(frame, m, onlyM = false)
-              finally {
-                frame.unpersist(blocking = false)
-                frameQids.unpersist(blocking = false)
+              persisted(m.unionByName(nnOfM)) { frameQids =>
+                // frameQids ⊇ M: the same superset short-circuit
+                persisted(listsForQueries(spark, listsDir, batchId,
+                  frameQids,
+                  if (hasLists && mBuckets.isDefined)
+                    hitBuckets(frameQids, "query_id", StoreBuckets)
+                  else None))(mine(_, m, onlyM = false))
               }
-            } finally m.unpersist(blocking = false)
-          }
+            }
+          })
         }
-      } finally merged.unpersist(blocking = false)
-    } finally o.unpersist(blocking = false)
+      }
+    }
+    // the ANN mode's touched set feeds three lookups — persist it;
+    // the exact mode's single consumer is the merge
+    if (exact) tail(oriented) else persisted(oriented)(tail)
   }
 
+  /** Continuous CROSS-LINGUAL mining — the streaming spelling of the
+    * q267 mutual best-margin dedup (Artetxe & Schwenk margin filter;
+    * reference analog: the chained-job shape — successive
+    * `MapReduceMaster::MapReduce` submissions,
+    * `Imagine_MapReduce/MapReduceMaster.cpp:36-58`): vectors from
+    * two embedded "languages"
+    * (even/odd id parity) arrive as micro-batches, and after each
+    * batch the current mutual best-margin pair set is published as
+    * add/del deltas to the pairs store's delta N (fold with
+    * [[crossLingualPairs]]).
+    *
+    * The INCREMENTAL insight is that exact k-NN LISTS are
+    * maintainable state: cos(x, y) never changes once both vectors
+    * exist, so the exact cross-parity top-k over a growing corpus is
+    * top-k(previous top-k ∪ pairs involving the new batch) — each
+    * batch scores only batch×prior + batch×batch cross-parity pairs
+    * (every unordered pair exactly once; cos is bitwise symmetric,
+    * the dot/norm folds run in index order regardless of
+    * orientation), merges them into the k-bounded per-query lists,
+    * and re-mines margin+mutuality. Its touched set is the whole
+    * corpus by construction, so each batch writes the whole current
+    * list state as its lists delta and mines that delta (see
+    * [[mergeListsAndMine]]'s exact mode, and why that equals the
+    * touched-only re-mine); state and the published pair set live in
+    * latest-wins delta stores folded by [[crossLingualLists]] /
+    * [[crossLingualPairs]]. After the final
+    * batch the folded lists equal the one-shot exact dual k-NN
+    * bitwise (same (cos desc, id) tie-break), so the folded pair set
+    * equals q267's batch result and the same oracle applies
+    * unchanged — StreamsSpec pins the equality.
+    *
+    * The exact batch×state scorer is the bounded ORACLE face
+    * (same loud 32768-row bound as q267, enforced by the caller);
+    * the at-scale swap is the IVF-probe candidate stage that q267's
+    * in-job recall gate prices and [[ingestVectorStream]] already
+    * runs in streaming form.
+    *
+    * Replay safety follows the family contract: the batch reads
+    * vector and list deltas strictly below its batchId (the mine
+    * then reads back the lists delta it has just rewritten), and all
+    * four writes (vector, list, postings and pair deltas) go to
+    * batch-id-deterministic subdirectories with `overwrite` —
+    * exactly-once by idempotence; a crash-replay rewrites every
+    * output value-identically.
+    *
+    * TRIGGER-SIZING CONTRACT (the whole ingest family, loudest here
+    * because the batch side is broadcast AND exactly scored): size
+    * triggers so a micro-batch stays well under `maxBatchRows`
+    * (`maxOffsetsPerTrigger` on Kafka-like sources,
+    * `maxFilesPerTrigger` on file sources) — a catch-up batch after
+    * downtime inherits every backlogged row otherwise. The guard is
+    * COUNTED, so an oversized batch fails with the fix in the error
+    * text instead of hitting Spark's 8 GB broadcast hard-stop. */
   def ingestCrossLingualStream(
       vecs: DataFrame,
       idCol: String,
@@ -1164,47 +1191,33 @@ object Streams {
       minMargin: Double = 1.05,
       maxBatchRows: Long = 65536L,
       compactEvery: Int = 0): StreamingQuery =
-    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+    eachBatch(vecs, checkpointDir, compactEvery) { (batch, batchId) =>
       ingestCrossLingualBatch(batch, batchId, idCol, vecCol,
         vecsDir, listsDir, pairsDir, k, minMargin, maxBatchRows)
-      if (compactDue(batchId, compactEvery)) {
-        val spark = batch.sparkSession
-        compactCrossLingualState(spark, listsDir, pairsDir, batchId - 1)
-        // the VECTOR delta store is state too (every batch scores
-        // against it) — bound it with the same cadence. Plain union
-        // fold: bitwise read-equivalent always (the family's prior
-        // reads are row unions, never a fold), so compaction here can
-        // never change a score; LWW/tombstone maintenance stays the
-        // deliberate out-of-band compactIndex job
-        new DeltaStore(spark, vecsDir).compact(batchId - 1,
-          vecsSchema(batch, idCol, vecCol, cells = false))(
-          _.reduce(_ unionByName _))
-      }
+    } { (batch, upTo) =>
+      compactCrossLingualStores(batch, idCol, vecCol, cells = false,
+        vecsDir, listsDir, pairsDir, upTo)
     }
 
-  /** Opt-in in-stream compaction (`compactEvery` on every ingest
-    * wrapper with a growing delta store — the two cross-lingual
-    * modes, [[ingestNearDupStream]], [[ingestVectorStream]],
-    * [[ingestDeleteStream]]): at the end of batch N, batch N−1 is by
-    * construction checkpoint-COMMITTED (N only runs after N−1
-    * committed), so folding up to N−1 is always replay-safe — a
-    * crash before N's own commit replays N against the folded
-    * delta N−1, value-identical to the uncompacted history, and a
-    * replayed compaction is idempotent. This bounds every lookup's
-    * delta-directory count to O(compactEvery) without any
-    * out-of-band maintenance job. */
-  private[graft] def compactDue(batchId: Long, compactEvery: Int): Boolean =
-    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
-
-  /** The cross-lingual batches' recovery sweep over all four of their
-    * stores (vectors, lists, postings, pairs), run before a batch
-    * reads or writes anything — so a retired-layout store fails
-    * before a vector delta is written. */
-  private def recoverCrossLingual(
-      spark: SparkSession, vecsDir: String, listsDir: String,
-      pairsDir: String): Unit =
-    Seq(vecsDir, listsDir, postingsPath(listsDir), pairsDir)
-      .foreach(new DeltaStore(spark, _).recover())
+  /** The in-stream compaction of both cross-lingual modes, up to the
+    * committed batch `upTo`: lists, postings and pairs through
+    * [[compactCrossLingualState]], then the vector store (the batch's
+    * (id, v) deltas, plus the IVF `cell` when `cells`). The VECTOR
+    * delta store is state too (every batch scores against it), so it
+    * is bound by the same cadence. Plain union fold: bitwise
+    * read-equivalent always (the family's prior reads are row unions,
+    * never a fold), so compaction here can never change a score;
+    * LWW/tombstone maintenance stays the deliberate out-of-band
+    * compactIndex job. */
+  private[graft] def compactCrossLingualStores(
+      batch: DataFrame, idCol: String, vecCol: String, cells: Boolean,
+      vecsDir: String, listsDir: String, pairsDir: String,
+      upTo: Long): Unit = {
+    val spark = batch.sparkSession
+    compactCrossLingualState(spark, listsDir, pairsDir, upTo)
+    new DeltaStore(spark, vecsDir).compact(upTo,
+      vecsSchema(batch, idCol, vecCol, cells))(_.reduce(_ unionByName _))
+  }
 
   /** One [[ingestCrossLingualStream]] micro-batch — factored out so
     * the crash-replay contract is directly testable (StreamsSpec
@@ -1221,17 +1234,16 @@ object Streams {
       minMargin: Double,
       maxBatchRows: Long = 65536L): Unit = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
-    val t0 = System.nanoTime()
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    // writer-side crash contract: heal any compaction swap a crash
-    // left mid-flight, and refuse a retired-layout store, before this
-    // batch reads or writes anything
-    recoverCrossLingual(spark, vecsDir, listsDir, pairsDir)
-    val vecStore = new DeltaStore(spark, vecsDir)
-    val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // all four stores (vectors, lists, postings, pairs) recover before
+    // anything is read or written — a retired-layout store fails
+    // before a vector delta is written
+    val stores = Seq(vecsDir, listsDir, postingsPath(listsDir), pairsDir)
+      .map(new DeltaStore(spark, _))
+    val vecStore = stores.head
+    batchRun("ingestCrossLingualBatch", batchId, stores: _*)(persisted(
+        batch.select(col(idCol).as("id"), col(vecCol).as("v"))) { b =>
       // counted trigger-size guard: "the batch side is small by
       // construction" holds only when the source bounds its triggers —
       // a catch-up batch after downtime (or a maxOffsetsPerTrigger-less
@@ -1263,47 +1275,40 @@ object Streams {
             call_function("graft_cosine", col("x.v"), col("y.v"))
               .as("cos"))
       }
-      val newPairs = prior
+      // the two-orientation union below duplicates this subtree in ONE
+      // plan, and there is no exchange between the scoring join and
+      // the union for ReuseExchange to dedup — without a persist every
+      // batch×corpus cosine is computed TWICE (r14)
+      persisted(prior
         .map(p => crossParity(b, p.select("id", "v"), dedupe = false)
           .unionByName(crossParity(b, b, dedupe = true)))
-        .getOrElse(crossParity(b, b, dedupe = true))
-          // the two-orientation union below duplicates this subtree
-          // in ONE plan, and there is no exchange between the scoring
-          // join and the union for ReuseExchange to dedup — without a
-          // persist every batch×corpus cosine is computed TWICE (r14)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // both orientations feed the per-query lists (cos symmetric)
-      val oriented = newPairs
-        .select(col("qa").as("query_id"), col("qb").as("nn_id"),
-          col("cos"))
-        .unionByName(newPairs.select(col("qb").as("query_id"),
-          col("qa").as("nn_id"), col("cos")))
-      // the list tail reads lists/postings/pairs only, and replay
-      // reads vecs deltas strictly below N (a delta N from a crashed
-      // attempt is invisible until overwritten), so the vector-delta
-      // write's commit wall can back-fill the tail's jobs
-      try Par.overlap {
-        vecStore.write(batchId, b.select(col("id"), col("v")))
-      } {
-        // exact incremental top-k merge + mine + publish — the shared
-        // family tail ([[mergeListsAndMine]]) in its full-state mode:
-        // the batch is scored against ALL prior vectors, so the
-        // touched set covers every stored query and the touched-only
-        // lookups could never shrink anything. Lists delta N carries
-        // every listed query's list and the mine reads that delta
-        // back as its frame (the ANN mode stays touched-only; its
-        // touched set is candidate-bounded)
-        mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
-          k, minMargin, exact = true)
-      } finally {
-        // the merge consumed `oriented` into its own persist; the
-        // pair cache has no consumer left
-        newPairs.unpersist(blocking = false)
+        .getOrElse(crossParity(b, b, dedupe = true))) { newPairs =>
+        // both orientations feed the per-query lists (cos symmetric)
+        val oriented = newPairs
+          .select(col("qa").as("query_id"), col("qb").as("nn_id"),
+            col("cos"))
+          .unionByName(newPairs.select(col("qb").as("query_id"),
+            col("qa").as("nn_id"), col("cos")))
+        // the list tail reads lists/postings/pairs only, and replay
+        // reads vecs deltas strictly below N (a delta N from a crashed
+        // attempt is invisible until overwritten), so the vector-delta
+        // write's commit wall can back-fill the tail's jobs
+        Par.overlap {
+          vecStore.write(batchId, b.select(col("id"), col("v")))
+        } {
+          // exact incremental top-k merge + mine + publish — the shared
+          // family tail ([[mergeListsAndMine]]) in its full-state mode:
+          // the batch is scored against ALL prior vectors, so the
+          // touched set covers every stored query and the touched-only
+          // lookups could never shrink anything. Lists delta N carries
+          // every listed query's list and the mine reads that delta
+          // back as its frame (the ANN mode stays touched-only; its
+          // touched set is candidate-bounded)
+          mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
+            k, minMargin, exact = true)
+        }
       }
-      // attributable per-batch operator cost (see ingestNearDupBatch)
-      System.err.println(f"[graft] ingestCrossLingualBatch batch=$batchId " +
-        f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    } finally b.unpersist(blocking = false)
+    })
   }
 
   /** [[ingestCrossLingualStream]] in its AT-SCALE candidate mode —
@@ -1359,19 +1364,13 @@ object Streams {
       nprobe: Int = 4,
       sampleSize: Int = 256,
       compactEvery: Int = 0): StreamingQuery =
-    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+    eachBatch(vecs, checkpointDir, compactEvery) { (batch, batchId) =>
       ingestCrossLingualAnnBatch(batch, batchId, idCol, vecCol,
         vecsDir, centroidsDir, listsDir, pairsDir, k, minMargin,
         nlist, nprobe, sampleSize)
-      if (compactDue(batchId, compactEvery)) {
-        val spark = batch.sparkSession
-        compactCrossLingualState(spark, listsDir, pairsDir, batchId - 1)
-        // assignment-store cadence — plain union fold, bitwise
-        // read-equivalent (see the exact wrapper's note)
-        new DeltaStore(spark, vecsDir).compact(batchId - 1,
-          vecsSchema(batch, idCol, vecCol, cells = true))(
-          _.reduce(_ unionByName _))
-      }
+    } { (batch, upTo) =>
+      compactCrossLingualStores(batch, idCol, vecCol, cells = true,
+        vecsDir, listsDir, pairsDir, upTo)
     }
 
   /** One [[ingestCrossLingualAnnStream]] micro-batch — factored out
@@ -1394,15 +1393,15 @@ object Streams {
       sampleSize: Int): Unit = {
     import graft.operators.Similarity
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
-    val t0 = System.nanoTime()
     val spark = batch.sparkSession
     graft.expressions.GraftFunctions.register(spark)
-    // the same sweep as the exact mode, before anything is touched
-    recoverCrossLingual(spark, vecsDir, listsDir, pairsDir)
-    val vecStore = new DeltaStore(spark, vecsDir)
-    val b = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // the same four stores as the exact mode, recovered before
+    // anything is touched
+    val stores = Seq(vecsDir, listsDir, postingsPath(listsDir), pairsDir)
+      .map(new DeltaStore(spark, _))
+    val vecStore = stores.head
+    batchRun("ingestCrossLingualAnnBatch", batchId, stores: _*)(persisted(
+        batch.select(col(idCol).as("id"), col(vecCol).as("v"))) { b =>
       // batch 0 trains, every later batch reads — keyed on batchId,
       // not directory existence, so a replayed batch 0 RETRAINS over
       // the same rows (deterministic: hash-ordered bounded sample,
@@ -1413,17 +1412,14 @@ object Streams {
           val (a, c) = Similarity.ivfIndex(
             b, "id", "v", nlist, sampleSize)
           c.write.mode("overwrite").parquet(centroidsDir)
-          (a, spark.read.schema(c.schema).parquet(centroidsDir))
+          (a, spark.read.schema(CentroidsSchema).parquet(centroidsDir))
         } else {
-          val c = spark.read.schema("cell INT, centroid ARRAY<FLOAT>")
-            .parquet(centroidsDir)
+          val c = spark.read.schema(CentroidsSchema).parquet(centroidsDir)
           (Similarity.ivfAssign(b, "id", "v", c), c)
         }
       // the batch's assignments feed the probe index AND the delta
       // write — persist across the two consumers
-      val own = own0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      persisted(own0) { own =>
         // replay safety: probe deltas 0..N-1 plus the batch's own
         // assignments (the within-batch pairs)
         val index = vecStore.below(batchId, own.schema.toDDL)
@@ -1431,44 +1427,37 @@ object Streams {
           .getOrElse(own)
         // candidate stage: raw IVF candidates, cross-parity only —
         // the filter runs BEFORE any ranking so same-parity
-        // neighbors cannot evict the cross-parity ones
-        val cand = Similarity.ivfCandidates(
-          b, "id", "v", index, cents, nprobe)
-          .filter(side(col("query_id")) =!= side(col("nn_id")))
-          // the two-orientation union below duplicates the candidate
-          // join + scoring subtree in ONE plan (no exchange between
-          // them for ReuseExchange to dedup) — persist so the probe
-          // runs once per batch, not twice (r14; see the exact mode)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // both orientations feed the lists (cos bitwise symmetric);
-        // a within-batch pair found from BOTH sides' probes would
-        // otherwise occupy two of a list's k slots — distinct
-        // collapses the identical rows
-        val oriented = cand
-          .unionByName(cand.select(col("nn_id").as("query_id"),
-            col("query_id").as("nn_id"), col("cos")))
-          .distinct()
-        // the tail never reads vecsDir, and replay reads assignment
-        // deltas strictly below N (as in the exact mode)
-        try Par.overlap {
-          vecStore.write(batchId, own)
-        } {
-          // merge into the k-bounded lists + mine + publish — the
-          // shared family tail ([[mergeListsAndMine]]): prior lists and
-          // new candidates are disjoint (every new pair involves a
-          // batch vector, which no earlier list can reference)
-          mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
-            k, minMargin, exact = false)
-        } finally {
-          // the tail materialized its own persist of `oriented`; the
-          // candidate cache has no consumer left
-          cand.unpersist(blocking = false)
+        // neighbors cannot evict the cross-parity ones. The
+        // two-orientation union below duplicates the candidate join +
+        // scoring subtree in ONE plan (no exchange between them for
+        // ReuseExchange to dedup) — persist so the probe runs once per
+        // batch, not twice (r14; see the exact mode)
+        persisted(Similarity.ivfCandidates(
+            b, "id", "v", index, cents, nprobe)
+          .filter(side(col("query_id")) =!= side(col("nn_id")))) { cand =>
+          // both orientations feed the lists (cos bitwise symmetric);
+          // a within-batch pair found from BOTH sides' probes would
+          // otherwise occupy two of a list's k slots — distinct
+          // collapses the identical rows
+          val oriented = cand
+            .unionByName(cand.select(col("nn_id").as("query_id"),
+              col("query_id").as("nn_id"), col("cos")))
+            .distinct()
+          // the tail never reads vecsDir, and replay reads assignment
+          // deltas strictly below N (as in the exact mode)
+          Par.overlap {
+            vecStore.write(batchId, own)
+          } {
+            // merge into the k-bounded lists + mine + publish — the
+            // shared family tail ([[mergeListsAndMine]]): prior lists and
+            // new candidates are disjoint (every new pair involves a
+            // batch vector, which no earlier list can reference)
+            mergeListsAndMine(spark, oriented, batchId, listsDir, pairsDir,
+              k, minMargin, exact = false)
+          }
         }
-      } finally own.unpersist(blocking = false)
-      // attributable per-batch operator cost (see ingestNearDupBatch)
-      System.err.println(f"[graft] ingestCrossLingualAnnBatch batch=$batchId " +
-        f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    } finally b.unpersist(blocking = false)
+      }
+    })
   }
 
   /** Continuous DELETE ingestion — the streaming twin of
@@ -1532,8 +1521,9 @@ object Streams {
       reportDir: String,
       checkpointDir: String,
       compactEvery: Int = 0): StreamingQuery =
-    eachBatch(tombstones, checkpointDir) { (batch, batchId) =>
+    eachBatch(tombstones, checkpointDir, compactEvery) { (batch, batchId) =>
       ingestDeleteBatch(batch, batchId, clustersDir, deltaDir, reportDir)
+    } { (batch, upTo) =>
       // in-stream tombstone compaction (committed-only): the fold
       // is [[compactTombstoneDeltas]]' distinct id set — the
       // anti-join is set-semantics, so later batches are bitwise
@@ -1543,9 +1533,8 @@ object Streams {
       // [[DeltaStore.replace]] here — crash-safe, not the bare
       // overwrite its scaladoc warns about; the fold materializes
       // only after the store's recovery (by-name argument)
-      if (compactDue(batchId, compactEvery))
-        new DeltaStore(batch.sparkSession, deltaDir).replace(batchId - 1)(
-          compactTombstoneDeltas(batch.sparkSession, deltaDir, batchId - 1))
+      new DeltaStore(batch.sparkSession, deltaDir).replace(upTo)(
+        compactTombstoneDeltas(batch.sparkSession, deltaDir, upTo))
     }
 
   /** One [[ingestDeleteStream]] micro-batch — factored out so the
@@ -1557,15 +1546,11 @@ object Streams {
       clustersDir: String,
       deltaDir: String,
       reportDir: String): Unit = {
-    val t0 = System.nanoTime()
     val spark = batch.sparkSession
     val deltas = new DeltaStore(spark, deltaDir)
-    // heal any compaction swap a crash left mid-flight (no-op when clean)
-    deltas.recover()
-    val idName = batch.columns.head
-    val t = batch.select(col(idName).cast("long").as("id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    batchRun("ingestDeleteBatch", batchId, deltas)(persisted(batch
+        .select(col(batch.columns.head).cast("long").as("id"))
+        .distinct()) { t =>
       val clusters = spark.read.parquet(clustersDir)
         .select(col("id"), col("cluster_id"))
       // replay safety: subtract tombstone deltas 0..N-1 ONLY
@@ -1597,10 +1582,7 @@ object Streams {
         graft.operators.Dedup.deletePropagation(preState, live)
           .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
       }
-      // attributable per-batch operator cost (see ingestNearDupBatch)
-      System.err.println(f"[graft] ingestDeleteBatch batch=$batchId " +
-        f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    } finally t.unpersist(blocking = false)
+    })
   }
 
   /** Tombstone-delta compaction — the maintenance operator
@@ -1669,7 +1651,7 @@ object Streams {
       checkpointDir: String): StreamingQuery =
     eachBatch(events, checkpointDir) { (batch, batchId) =>
       ingestAggBatch(batch, batchId, keyCols, valueCol, stateDir)
-    }
+    }()
 
   /** One [[ingestAggStream]] micro-batch, factored out so the
     * crash-replay contract is directly testable. */
@@ -1678,14 +1660,11 @@ object Streams {
       batchId: Long,
       keyCols: Seq[String],
       valueCol: String,
-      stateDir: String): Unit = {
-    val t0 = System.nanoTime()
-    new DeltaStore(batch.sparkSession, stateDir).write(batchId,
-      graft.operators.Incremental.buildState(batch, keyCols, valueCol))
-    // attributable per-batch operator cost (see ingestNearDupBatch)
-    System.err.println(f"[graft] ingestAggBatch batch=$batchId " +
-      f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-  }
+      stateDir: String): Unit =
+    batchRun("ingestAggBatch", batchId) {
+      new DeltaStore(batch.sparkSession, stateDir).write(batchId,
+        graft.operators.Incremental.buildState(batch, keyCols, valueCol))
+    }
 
   /** Continuous data-contract enforcement — the streaming face of
     * [[graft.operators.Expectations.audit]]: every micro-batch is
@@ -1706,7 +1685,7 @@ object Streams {
     require(checks.nonEmpty, "at least one rule required")
     eachBatch(rows, checkpointDir) { (batch, batchId) =>
       expectationsBatch(batch, batchId, checks, ledgerDir)
-    }
+    }()
   }
 
   /** One [[expectationsStream]] micro-batch, factored out so the
@@ -1715,13 +1694,11 @@ object Streams {
       batch: DataFrame,
       batchId: Long,
       checks: Seq[(String, org.apache.spark.sql.Column)],
-      ledgerDir: String): Unit = {
-    val t0 = System.nanoTime()
-    graft.operators.Expectations.audit(batch, checks)
-      .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
-    System.err.println(f"[graft] expectationsBatch batch=$batchId " +
-      f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-  }
+      ledgerDir: String): Unit =
+    batchRun("expectationsBatch", batchId) {
+      graft.operators.Expectations.audit(batch, checks)
+        .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
+    }
 
   /** The audit ledger over every batch [[expectationsStream]] has
     * written: (batch, rule, kind, violations, total, pass) —
@@ -1752,7 +1729,7 @@ object Streams {
     val ref = reference.localCheckpoint(true)
     eachBatch(rows, checkpointDir) { (batch, batchId) =>
       psiBatch(batch, batchId, ref, keyCols, valueCol, ledgerDir, bins)
-    }
+    }()
   }
 
   /** One [[psiStream]] micro-batch, factored out so the replay
@@ -1764,13 +1741,11 @@ object Streams {
       keyCols: Seq[String],
       valueCol: String,
       ledgerDir: String,
-      bins: Int): Unit = {
-    val t0 = System.nanoTime()
-    graft.operators.Profile.psi(ref, batch, keyCols, valueCol, bins)
-      .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
-    System.err.println(f"[graft] psiBatch batch=$batchId " +
-      f"took ${(System.nanoTime() - t0) / 1e9}%.3f s")
-  }
+      bins: Int): Unit =
+    batchRun("psiBatch", batchId) {
+      graft.operators.Profile.psi(ref, batch, keyCols, valueCol, bins)
+        .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
+    }
 
   /** Continuous experiment monitoring — the streaming face of
     * [[graft.operators.Profile.ratioMetricCI]]: each micro-batch
@@ -1794,7 +1769,7 @@ object Streams {
     eachBatch(rows, checkpointDir) { (batch, batchId) =>
       ratioCiBatch(batch, batchId, keyCols, numCol, denCol,
         ledgerDir, ciPct, scale)
-    }
+    }()
 
   /** One [[ratioCiStream]] micro-batch, factored out so the replay
     * contract is directly testable. */
@@ -1806,11 +1781,12 @@ object Streams {
       denCol: String,
       ledgerDir: String,
       ciPct: Int,
-      scale: Int): Unit = {
-    graft.operators.Profile.ratioMetricCI(
-      batch, keyCols, numCol, denCol, ciPct, scale)
-      .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
-  }
+      scale: Int): Unit =
+    batchRun("ratioCiBatch", batchId) {
+      graft.operators.Profile.ratioMetricCI(
+        batch, keyCols, numCol, denCol, ciPct, scale)
+        .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
+    }
 
   /** Streaming model-performance monitor — the MLOps face of
     * [[graft.operators.Classify.aucReport]]: each micro-batch
@@ -1828,7 +1804,7 @@ object Streams {
       checkpointDir: String): StreamingQuery =
     eachBatch(rows, checkpointDir) { (batch, batchId) =>
       aucBatch(batch, batchId, labelCol, scoreCol, ledgerDir)
-    }
+    }()
 
   /** One [[aucStream]] micro-batch, factored out so the replay
     * contract is directly testable. */
@@ -1838,8 +1814,10 @@ object Streams {
       labelCol: String,
       scoreCol: String,
       ledgerDir: String): Unit =
-    graft.operators.Classify.aucReport(batch, labelCol, scoreCol)
-      .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
+    batchRun("aucBatch", batchId) {
+      graft.operators.Classify.aucReport(batch, labelCol, scoreCol)
+        .write.mode("overwrite").parquet(s"$ledgerDir/batch=$batchId")
+    }
 
   /** The maintained view over every delta [[ingestAggStream]] has
     * written: one partition-discovered read + one state-sized merge.

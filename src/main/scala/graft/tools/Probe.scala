@@ -272,16 +272,18 @@ object Probe {
         .createTempDirectory("graft_tailprobe_").toString
       try {
         for (i <- 0 until priorDeltas) {
+          val slice = e.filter(col("vec_id") >= bounds(i) &&
+            col("vec_id") < bounds(i + 1))
           graft.streaming.Streams.ingestCrossLingualAnnBatch(
-            e.filter(col("vec_id") >= bounds(i) &&
-              col("vec_id") < bounds(i + 1)),
-            i.toLong, "vec_id", "embedding",
+            slice, i.toLong, "vec_id", "embedding",
             s"$base/vecs", s"$base/cents", s"$base/lists", s"$base/pairs",
             4, 1.05, nlist, 4, 256)
-          // the in-stream cadence (committed-only)
+          // the in-stream cadence (committed-only), over all four
+          // stores as the ANN stream runs it
           if (graft.streaming.Streams.compactDue(i.toLong, compactEvery))
-            graft.streaming.Streams.compactCrossLingualState(
-              spark, s"$base/lists", s"$base/pairs", i - 1L)
+            graft.streaming.Streams.compactCrossLingualStores(
+              slice, "vec_id", "embedding", cells = true, s"$base/vecs",
+              s"$base/lists", s"$base/pairs", i - 1L)
         }
         val dirCount =
           new graft.streaming.DeltaStore(spark, s"$base/lists").ids.size

@@ -857,6 +857,24 @@ class StreamsSpec extends AnyFunSuite {
       .createTempDirectory("graft_xling_autocompact_").toString
     val b = java.nio.file.Files
       .createTempDirectory("graft_xling_autocompact_ctl_").toString
+    val context = spark.sparkContext
+    // (job group, streaming query id, call site) of every job start
+    val started =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(key: String) = Option(j.properties)
+          .flatMap(p => Option(p.getProperty(key))).getOrElse("")
+        started.add((prop("spark.jobGroup.id"),
+          prop("sql.streaming.queryId"), prop("callSite.short")))
+      }
+    }
+    def seen = {
+      import scala.jdk.CollectionConverters._
+      started.asScala.toSeq
+    }
+    context.addSparkListener(listener)
     try {
       val mem = MemoryStream[(Long, Seq[Float])]
       val query = ingestCrossLingualAnnStream(
@@ -872,6 +890,32 @@ class StreamsSpec extends AnyFunSuite {
         query.processAllAvailable()
         mem.addData(part($"vec_id" > c2)); query.processAllAvailable()
       } finally query.stop()
+      // the listener queue delivers in order: once a marker job's
+      // start is seen, every earlier start has been delivered
+      val marker = "graft-autocompact-marker"
+      context.setJobGroup(marker, marker)
+      try context.parallelize(Seq(1), 1).count() finally context.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_._1 == marker),
+        "listener never saw the marker")
+      // every job the stream started is named by the micro-batch
+      // frame: its batch function and id, a tail phase, or the
+      // compaction — never the stream's own `start` call site
+      val sites = seen
+        .collect { case (_, q, site) if q == query.id.toString => site }
+      val named =
+        "ingestCrossLingualAnnBatch batch=[012]|tail/(merge|mine)|compact upTo=[01]".r
+      assert(sites.nonEmpty, "the listener saw no job of the stream")
+      assert(!sites.exists(_.startsWith("start at Streams.scala")),
+        s"a batch job reports the stream's start call site: ${sites.distinct}")
+      assert(sites.forall(named.matches),
+        s"unnamed batch jobs: ${sites.filterNot(named.matches).distinct}")
+      assert(((0 to 2).map(n => s"ingestCrossLingualAnnBatch batch=$n") ++
+          Seq("tail/merge", "tail/mine", "compact upTo=0", "compact upTo=1"))
+          .forall(sites.contains),
+        s"call sites seen: ${sites.distinct}")
       // batch 2 compacted upTo=1: delta=0 gone, history bounded —
       // in ALL THREE state stores (lists, pairs, and r13: the vector
       // deltas every batch scores against)
@@ -907,6 +951,7 @@ class StreamsSpec extends AnyFunSuite {
       assert(vecRows(a).nonEmpty && vecRows(a) == vecRows(b),
         "auto-compacted vecs store diverged from the control run")
     } finally {
+      context.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(a))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b))
     }
