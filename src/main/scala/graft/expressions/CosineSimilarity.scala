@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<float>` columns — the top rung of the extension ladder
@@ -22,8 +22,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * element arrays).
   *
   * SQL name: `graft_cosine(a, b)` — registered per-session via
-  * [[GraftFunctions.register]] or globally with
-  * `spark.sql.extensions=graft.expressions.GraftExtensions`.
+  * [[GraftFunctions.register]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -173,31 +172,5 @@ object GraftFunctions {
       (t: String, chunkSize: Int, stride: Int) =>
         if (t == null) Array.empty[Kernels.Chunk]
         else Kernels.chunkOverlap(t, chunkSize, stride))
-  }
-}
-
-/** `spark.sql.extensions=graft.expressions.GraftExtensions` injects
-  * the functions into every session built against the extension —
-  * the deployment path; [[GraftFunctions.register]] is the
-  * library-call path. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // reuse the registry builder so both registration paths share the
-    // 2-argument arity check (a clear analysis error, not an opaque
-    // IndexOutOfBounds at plan time)
-    ext.injectFunction(
-      (GraftFunctions.CosineIdent,
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-        GraftFunctions.cosineBuilder))
-    ext.injectFunction(
-      (GraftFunctions.Int8CosineIdent,
-        new ExpressionInfo(classOf[Int8Cosine].getName, "graft_int8_cosine"),
-        GraftFunctions.int8CosineBuilder))
-    ext.injectFunction(
-      (GraftFunctions.NfcIdent,
-        new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-        GraftFunctions.nfcBuilder))
-    ext.injectOptimizerRule(_ => graft.plans.NativeCosineRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }

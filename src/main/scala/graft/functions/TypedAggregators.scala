@@ -56,62 +56,6 @@ object TypedAggregators {
       ExpressionEncoder[Array[Long]]()
   }
 
-  /** Top-k (score DESC, id ASC) pairs per group with O(k) state — the
-    * shuffle-shrinking top-k for similarity search: partial top-k
-    * heaps run map-side (ObjectHashAggregate partial mode), so the
-    * exchange carries at most k (score, id) entries per group per
-    * partition instead of every candidate score. Input rows are
-    * (group, id, score); the group key comes from groupByKey.
-    *
-    * NOTE: the hot ANN paths use the native
-    * [[graft.expressions.TopKScoredAgg]] instead — same semantics,
-    * but as a `TypedImperativeAggregate` it skips the per-row
-    * object-encoding fence this typed Aggregator pays (measured 2x
-    * at millions of rows per group set). This class remains the
-    * typed-API face and the reference implementation the native
-    * aggregate is spec-checked against. */
-  class TopKScored(k: Int)
-      extends Aggregator[(Long, Long, Double),
-        Array[(Double, Long)], Array[(Double, Long)]] {
-    require(k > 0)
-
-    override def zero: Array[(Double, Long)] = Array.empty
-
-    // buffer kept sorted best -> worst by (score desc, id asc)
-    private def beats(a: (Double, Long), b: (Double, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-    private def insert(
-        buf: Array[(Double, Long)], v: (Double, Long)): Array[(Double, Long)] = {
-      if (buf.length >= k && !beats(v, buf(buf.length - 1))) return buf
-      val n = math.min(buf.length + 1, k)
-      val out = new Array[(Double, Long)](n)
-      var i = 0
-      while (i < buf.length && i < n && beats(buf(i), v)) {
-        out(i) = buf(i); i += 1
-      }
-      if (i < n) out(i) = v
-      var j = i + 1
-      while (j < n) { out(j) = buf(j - 1); j += 1 }
-      out
-    }
-
-    override def reduce(
-        buf: Array[(Double, Long)], row: (Long, Long, Double)): Array[(Double, Long)] =
-      insert(buf, (row._3, row._2))
-
-    override def merge(
-        a: Array[(Double, Long)], b: Array[(Double, Long)]): Array[(Double, Long)] =
-      b.foldLeft(a)(insert)
-
-    override def finish(buf: Array[(Double, Long)]): Array[(Double, Long)] = buf
-
-    override def bufferEncoder: Encoder[Array[(Double, Long)]] =
-      ExpressionEncoder[Array[(Double, Long)]]()
-    override def outputEncoder: Encoder[Array[(Double, Long)]] =
-      ExpressionEncoder[Array[(Double, Long)]]()
-  }
-
   /** collect_list with a HARD per-group state cap — the bounded-
     * buffer answer to the "loud before it is WRONG, not always
     * before it hurts" problem of guarding an unbounded fold with a
@@ -181,21 +125,5 @@ object TypedAggregators {
       val vs: scala.collection.mutable.ArrayBuffer[Long] =
         scala.collection.mutable.ArrayBuffer.empty[Long]
     }
-  }
-
-  /** Streaming mean with exact integer state (sum, count) — the
-    * simplest two-phase Aggregator; deterministic under any merge
-    * order. */
-  object LongMean extends Aggregator[Long, (Long, Long), Double] {
-    override def zero: (Long, Long) = (0L, 0L)
-    override def reduce(b: (Long, Long), v: Long): (Long, Long) =
-      (b._1 + v, b._2 + 1)
-    override def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-      (a._1 + b._1, a._2 + b._2)
-    override def finish(b: (Long, Long)): Double =
-      if (b._2 == 0) 0.0 else b._1.toDouble / b._2
-    override def bufferEncoder: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 }

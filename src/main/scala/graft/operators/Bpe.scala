@@ -5,19 +5,18 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 
-/** Byte-pair-encoding TOKENIZER TRAINING over a corpus — the step
-  * that turns 100 TB of text into the merge table a trainer's
-  * tokenizer ships with (Sennrich et al., "Neural Machine Translation
-  * of Rare Words with Subword Units", ACL 2016 — the algorithm behind
-  * GPT-2/RoBERTa vocabularies).
+/** Byte-pair-encoding statistics and encoding over a corpus
+  * (Sennrich et al., "Neural Machine Translation of Rare Words with
+  * Subword Units", ACL 2016 — the algorithm behind GPT-2/RoBERTa
+  * vocabularies): the first merge's pair counts, and a trained merge
+  * table applied to text.
   *
   * The at-scale shape is the whole point: BPE statistics NEVER run
   * over raw text. The corpus collapses to its (word, freq) table
   * first — one wordcount shuffle, output bounded by vocabulary size,
-  * not corpus size — and every merge iteration after that is pair
-  * counting + re-segmentation over that collapsed table, each
-  * iteration one narrow shuffle on pair keys. A 100× corpus grows
-  * the wordcount input but not the iteration state.
+  * not corpus size — and pair counting and encoding run over that
+  * collapsed table. A 100× corpus grows the wordcount input but not
+  * the encode work.
   *
   * Merges never cross word boundaries (pairs are adjacent symbols
   * within a word), so no end-of-word marker is needed for the
@@ -25,11 +24,10 @@ import graft.functions.TextFunctions
   * suffixes — a caller-side `word || "</w>"` preprocessing choice
   * this operator deliberately leaves out of the kernel.
   *
-  * Reference analog: the wordcount job chained with itself — the
-  * default (line, 1) map (`Imagine_MapReduce/Mapper.h:268-270`) into
-  * sum-by-key (`MapReduceUtil.cpp:114-135`), resubmitted per round
-  * (`MapReduceMaster.cpp:36-58`) — BPE
-  * training IS a chain of weighted pair-wordcounts.
+  * Reference analog: the wordcount job — the default (line, 1) map
+  * (`Imagine_MapReduce/Mapper.h:268-270`) into sum-by-key
+  * (`MapReduceUtil.cpp:114-135`); pair statistics are a weighted
+  * pair-wordcount over its output.
   */
 object Bpe {
 
@@ -65,83 +63,10 @@ object Bpe {
       .select("rank", "left", "right", "cnt")
   }
 
-  private val charsUdf = udf((w: String) =>
-    if (w == null) Array.empty[String]
-    else w.toCharArray.map(_.toString))
-
-  private def mergeUdf(l: String, r: String) =
-    udf((s: scala.collection.Seq[String]) => {
-      // greedy leftmost non-overlapping replace — the BPE rule
-      // ("aaa" + (a,a) merges positions 1-2, NOT 2-3)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < s.length) {
-        if (i + 1 < s.length && s(i) == l && s(i + 1) == r) {
-          out += (l + r); i += 2
-        } else { out += s(i); i += 1 }
-      }
-      out.toArray
-    })
-
-  /** Train `numMerges` BPE merges: (rank, left, right, freq) — rank
-    * the merge order, freq the weighted adjacent-pair count at the
-    * moment the pair was chosen. Deterministic: argmax ties break by
-    * (left, right); stops early when no pair remains (every word one
-    * symbol).
-    *
-    * Driver loop over a VOCAB-sized frame: each iteration one pair
-    * explode + partial-agg shuffle and a 1-row TakeOrdered; the
-    * re-segmented table is localCheckpoint'd to keep lineage flat
-    * across iterations (blocks do not survive executor loss — on a
-    * real cluster checkpoint the segments to reliable storage every
-    * few dozen merges; the frame is vocab-sized, so that write is
-    * cheap). BpeSpec pins the canonical hand example, the
-    * concat(syms) == word reconstruction invariant, and partition
-    * invariance. */
-  def bpeTrain(
-      df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = df.sparkSession
-    import spark.implicits._
-    var segs = wordFreq(df, textCol)
-      .withColumn("syms", charsUdf(col("word")))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var it = 0
-    var exhausted = false
-    while (it < numMerges && !exhausted) {
-      val best = segs
-        .filter(size(col("syms")) >= 2) // same ascending-sequence guard
-        .select(col("freq"), explode(
-          transform(sequence(lit(0), size(col("syms")) - lit(2)),
-            i => struct(
-              element_at(col("syms"), i + lit(1)).as("l"),
-              element_at(col("syms"), i + lit(2)).as("r")))).as("p"))
-        .groupBy(col("p.l"), col("p.r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((it + 1L, l, r, cnt))
-        val next = segs.withColumn("syms", mergeUdf(l, r)(col("syms")))
-          .localCheckpoint(true) // flat lineage; frees the parent plan
-        segs.unpersist()
-        segs = next
-        it += 1
-      }
-    }
-    segs.unpersist()
-    merges.toSeq.toDF("rank", "left", "right", "freq")
-  }
-
-  /** ENCODING — the other half of the tokenizer lifecycle: apply a
-    * trained merge table (the `merges.txt` a tokenizer ships) to
-    * text. Each word splits to characters, then every merge applies
-    * IN RANK ORDER with the same greedy leftmost non-overlapping
-    * rule as training ([[mergeUdf]]'s rule: "aaa" + (a,a) → [aa, a]).
+  /** ENCODING: apply a trained merge table (the `merges.txt` a
+    * tokenizer ships) to text. Each word splits to characters, then
+    * every merge applies IN RANK ORDER with BPE's greedy leftmost
+    * non-overlapping rule ("aaa" + (a,a) → [aa, a]).
     *
     * The at-scale shape mirrors training: text NEVER encodes row by
     * row — the corpus collapses to its (word, freq) vocabulary
@@ -197,10 +122,9 @@ object Bpe {
       .select("rank", "token", "cnt")
   }
 
-  /** The counted broadcast gate shared by [[encodeDocs]] and
-    * [[fertilityReport]] (the kCore `broadcastMaxNodes` discipline,
-    * Graphs.scala): an explicit broadcast() hint is honored PAST
-    * autoBroadcastJoinThreshold, and at web scale the distinct-word
+  /** [[fertilityReport]]'s counted broadcast gate (the kCore
+    * `broadcastMaxNodes` discipline, Graphs.scala): an explicit
+    * broadcast() hint is honored PAST autoBroadcastJoinThreshold, and at web scale the distinct-word
     * table (typos, URLs, code) is not Heaps-law-small — an
     * unconditional hint would pin a vocab-sized frame on the driver.
     * The fallback is CODE, not planner hope: the vocab is counted,
@@ -226,28 +150,6 @@ object Bpe {
       perWord: DataFrame, nVocab: Long, broadcastMaxVocab: Long): DataFrame =
     if (nVocab <= broadcastMaxVocab) broadcast(perWord) else perWord
 
-  /** Per-document token counts under the merge table:
-    * (id, n_words, n_tokens) — the sequence-length input the packing
-    * family (q74/q100) consumes. Distinct words encode once; docs
-    * join the vocab-sized (word → n_tokens) table, broadcast only
-    * while its counted size stays ≤ `broadcastMaxVocab`
-    * ([[gatedVocabSide]]). */
-  def encodeDocs(
-      df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      broadcastMaxVocab: Long = 10000000L): DataFrame = {
-    require(broadcastMaxVocab >= 1L,
-      s"broadcastMaxVocab must be >= 1, got $broadcastMaxVocab")
-    val nVocab = wordFreq(df, textCol).count()
-    val perWord = encodeVocab(df, textCol, merges)
-      .select(col("word"), size(col("tokens")).cast("long").as("_nt"))
-    df.select(col(idCol).as("id"),
-      explode(TextFunctions.words(col(textCol))).as("word"))
-      .join(gatedVocabSide(perWord, nVocab, broadcastMaxVocab), Seq("word"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_words"), sum("_nt").as("n_tokens"))
-  }
-
   /** Tokenizer-FERTILITY audit per group (usually `source`): tokens
     * emitted per word and characters per token under a fixed merge
     * table — the number a tokenizer owner watches per data source,
@@ -256,7 +158,7 @@ object Bpe {
     * sequence length per word, i.e. more training compute for the
     * same text).
     *
-    * At-scale shape, same as [[encodeDocs]]: the corpus collapses to
+    * At-scale shape: the corpus collapses to
     * a per-(group, word) frequency table (one shuffle, vocab-sized
     * output per group), DISTINCT words encode exactly once through
     * the merge chain, and the vocab-sized (word → token count) table

@@ -54,45 +54,6 @@ object Decontaminate {
       .withColumn("contaminated", col("n_shared") > 0)
   }
 
-  /** The enforcement end: keep only clean training rows. One
-    * broadcast-semi-join gram pass to find contaminated ids, one
-    * anti join keyed on the id to drop them — document bodies are
-    * read once and never shuffled. */
-  def removeContaminated(
-      train: DataFrame,
-      trainId: String,
-      trainText: String,
-      test: DataFrame,
-      testText: String,
-      n: Int = 8): DataFrame = {
-    val testGrams = testGramSet(test, testText, n)
-    val dirty = grams(train, trainId, trainText, n)
-      .join(broadcast(testGrams), Seq("g"), "left_semi")
-      .select("id").distinct()
-    train.join(dirty, train(trainId) === dirty("id"), "left_anti")
-  }
-
-  /** Bloom-prefiltered contamination candidates + the exact verify
-    * join — shared plumbing for the *Bloom variants. Returns per-doc
-    * hit counts (id, n_shared) over EXACTLY the true collisions. */
-  private def bloomHits(
-      train: DataFrame, trainId: String, trainText: String,
-      test: DataFrame, testText: String, n: Int, fpp: Double): DataFrame = {
-    require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
-    val testGrams = testGramSet(test, testText, n)
-    val nGrams = testGrams.count()
-    val bf = testGrams.stat.bloomFilter("g", math.max(nGrams, 1L), fpp)
-    val bfB = train.sparkSession.sparkContext.broadcast(bf)
-    val mightUdf = udf((g: String) => bfB.value.mightContainString(g))
-    // the corpus gram stream collapses to true hits + ~fpp noise
-    // BEFORE any join — so the exact verify below joins a near-empty
-    // stream and need not broadcast the full gram set
-    val candidates = grams(train, trainId, trainText, n)
-      .filter(mightUdf(col("g")))
-    candidates.join(testGrams, Seq("g"), "left_semi")
-      .groupBy("id").agg(count(lit(1)).as("n_shared"))
-  }
-
   /** [[contaminationReport]] with a Bloom-filter pre-pass — the
     * BIG-benchmark-set spelling: when the held-out side has millions
     * of distinct grams, broadcasting them as strings is GBs per
@@ -114,27 +75,30 @@ object Decontaminate {
       testText: String,
       n: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    val hits = bloomHits(train, trainId, trainText, test, testText, n, fpp)
+    require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
+    val testGrams = testGramSet(test, testText, n)
+    val nGrams = testGrams.count()
+    // an empty held-out side has nothing to hit, and no filter to build:
+    // Spark's bloomFilter aggregate yields null over zero rows
+    val might =
+      if (nGrams == 0L) lit(false)
+      else {
+        val bf = testGrams.stat.bloomFilter("g", nGrams, fpp)
+        val bfB = train.sparkSession.sparkContext.broadcast(bf)
+        udf((g: String) => bfB.value.mightContainString(g)).apply(col("g"))
+      }
+    // the corpus gram stream collapses to true hits + ~fpp noise
+    // BEFORE any join — so the exact verify below joins a near-empty
+    // stream and need not broadcast the full gram set
+    val hits = grams(train, trainId, trainText, n)
+      .filter(might)
+      .join(testGrams, Seq("g"), "left_semi")
+      .groupBy("id").agg(count(lit(1)).as("n_shared"))
     train.select(col(trainId).as("id"))
       .join(hits, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"))
       .withColumn("contaminated", col("n_shared") > 0)
-  }
-
-  /** [[removeContaminated]] through the same Bloom pre-pass; output
-    * rows identical (spec-pinned). */
-  def removeContaminatedBloom(
-      train: DataFrame,
-      trainId: String,
-      trainText: String,
-      test: DataFrame,
-      testText: String,
-      n: Int = 8,
-      fpp: Double = 0.01): DataFrame = {
-    val dirty = bloomHits(train, trainId, trainText, test, testText, n, fpp)
-      .select("id").distinct()
-    train.join(dirty, train(trainId) === dirty("id"), "left_anti")
   }
 
   // -------------------------------------------------------------------
@@ -268,26 +232,6 @@ object Decontaminate {
       .withColumn("contaminated", col("n_matches") > 0)
   }
 
-  /** The enforcement end: drop every corpus row within cosine ≥ τ of
-    * any benchmark embedding. Same anti-join discipline as
-    * [[removeContaminated]]. */
-  def removeSemantic(
-      corpus: DataFrame, corpusId: String, corpusVec: String,
-      bench: DataFrame, benchId: String, benchVec: String,
-      tau: Double,
-      nlist: Int = 16,
-      sampleSize: Int = 256,
-      iters: Int = 5,
-      eps: Double = 1e-4,
-      maxBench: Long = 1000000L): DataFrame = {
-    val cand = semanticCandidates(corpus, corpusId, corpusVec,
-      bench, benchId, benchVec, tau, nlist, sampleSize, iters, eps, maxBench)
-    val dirty = cand
-      .filter(Similarity.cosineKernel(col("cv"), col("bv")) >= tau)
-      .select("id").distinct()
-    corpus.join(dirty, corpus(corpusId) === dirty("id"), "left_anti")
-  }
-
   // -------------------------------------------------------------------
   // FUZZY decontamination — the NEAR-duplicate screen between corpus
   // and benchmark: the exact n-gram collision test above misses a
@@ -311,13 +255,19 @@ object Decontaminate {
   // brute-force cross-join answer (q117's oracle).
   // -------------------------------------------------------------------
 
-  /** Shared plumbing: exact-verified fuzzy matches (id, bid, jaccard)
-    * with J >= minJ, one row per (corpus doc, benchmark doc) pair. */
-  private def fuzzyMatches(
+  /** Per-training-document fuzzy contamination report:
+    * (id, n_matches, contaminated) — n_matches the number of DISTINCT
+    * benchmark documents within n-gram Jaccard >= minJ; every
+    * training row appears exactly once (0 when clean, including docs
+    * shorter than n words). */
+  def fuzzyReport(
       train: DataFrame, trainId: String, trainText: String,
       test: DataFrame, testId: String, testText: String,
-      n: Int, bands: Int, rowsPerBand: Int, minJ: Double,
-      maxBench: Long): DataFrame = {
+      n: Int = 3,
+      bands: Int = 32,
+      rowsPerBand: Int = 4,
+      minJ: Double = 0.5,
+      maxBench: Long = 10000000L): DataFrame = {
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0,1], got $minJ")
     val shingleUdf = udf((t: String) =>
       if (t == null) Array.empty[String] else Kernels.wordNgrams(t, n))
@@ -350,52 +300,18 @@ object Decontaminate {
         posexplode(bandsUdf(col("ngrams"))).as(Seq("band", "bucket")))
       .join(broadcast(benchBanded), Seq("band", "bucket"))
       .select("id", "bid").distinct()
-    candidates
+    val hits = candidates
       .join(sets, Seq("id"))
       .join(broadcast(bench), Seq("bid"))
       .select(col("id"), col("bid"),
         jUdf(col("ngrams"), col("bngrams")).as("jaccard"))
       .filter(col("jaccard") >= minJ)
-  }
-
-  /** Per-training-document fuzzy contamination report:
-    * (id, n_matches, contaminated) — n_matches the number of DISTINCT
-    * benchmark documents within n-gram Jaccard >= minJ; every
-    * training row appears exactly once (0 when clean, including docs
-    * shorter than n words). */
-  def fuzzyReport(
-      train: DataFrame, trainId: String, trainText: String,
-      test: DataFrame, testId: String, testText: String,
-      n: Int = 3,
-      bands: Int = 32,
-      rowsPerBand: Int = 4,
-      minJ: Double = 0.5,
-      maxBench: Long = 10000000L): DataFrame = {
-    val hits = fuzzyMatches(train, trainId, trainText,
-      test, testId, testText, n, bands, rowsPerBand, minJ, maxBench)
       .groupBy("id").agg(count(lit(1)).as("n_matches"))
     train.select(col(trainId).as("id"))
       .join(hits, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"))
       .withColumn("contaminated", col("n_matches") > 0)
-  }
-
-  /** The enforcement end: drop every training row within n-gram
-    * Jaccard >= minJ of any benchmark document. Same anti-join
-    * discipline as [[removeContaminated]]. */
-  def removeFuzzy(
-      train: DataFrame, trainId: String, trainText: String,
-      test: DataFrame, testId: String, testText: String,
-      n: Int = 3,
-      bands: Int = 32,
-      rowsPerBand: Int = 4,
-      minJ: Double = 0.5,
-      maxBench: Long = 10000000L): DataFrame = {
-    val dirty = fuzzyMatches(train, trainId, trainText,
-      test, testId, testText, n, bands, rowsPerBand, minJ, maxBench)
-      .select("id").distinct()
-    train.join(dirty, train(trainId) === dirty("id"), "left_anti")
   }
 
   /** Spec hook: candidate-pair count after pruning (the spec asserts

@@ -930,7 +930,7 @@ object Dedup {
     * before honoring a delete batch: which duplicate clusters does
     * the batch touch, does any cluster lose its canonical
     * REPRESENTATIVE (the member whose id equals the min-label
-    * `cluster_id` — the row [[resolveDuplicates]] kept and every
+    * `cluster_id` — the row a min-id resolution keeps and every
     * downstream index/pack references), and who is the surviving
     * representative afterwards. Deleting a non-representative
     * member is metadata-only; deleting the representative
@@ -987,30 +987,15 @@ object Dedup {
       .filter(col("n_deleted") >= 1L)
   }
 
-  /** Apply cluster labels back to the data: keep exactly the rows
-    * whose id IS its cluster's representative (the min id). The
-    * "delete the duplicates" end of the pair→cluster pipeline:
-    * pairs = any candidate generator, clusters = [[duplicateClusters]],
-    * and the final semi join keys on the id — one shuffle of ids, row
-    * bodies move once. */
-  def resolveDuplicates(
-      df: DataFrame,
-      idCol: String,
-      pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val clusters = duplicateClusters(df.select(idCol), pairs, maxIter)
-    val keep = clusters.filter(col("id") === col("cluster_id")).select("id")
-    df.join(keep, df(idCol) === keep("id"), "left_semi")
-  }
-
-  /** [[resolveDuplicates]] with a QUALITY policy: keep each cluster's
-    * best row by `scoreCol` (ties by id — total, deterministic)
-    * rather than its min id. The curation-correct resolution — a
-    * near-dup cluster usually holds one clean original and N mangled
+  /** Resolve duplicate clusters with a QUALITY policy: keep each
+    * cluster's best row by `scoreCol` (ties by id — total,
+    * deterministic) rather than its min id. The curation-correct
+    * resolution — a near-dup cluster usually holds one clean original
+    * and N mangled
     * copies, and min-id keeps whichever was crawled first, not
     * whichever is best. Emits (id, cluster_id, score, keep) for
     * EVERY row — the audit face; filter(keep) + semi-join is the
-    * enforcement end ([[keepBestDuplicates]]).
+    * enforcement end.
     *
     * Cost on top of [[duplicateClusters]]: one narrow (id, score)
     * join and one max_by aggregate per cluster — partial-aggregated,
@@ -1035,19 +1020,6 @@ object Dedup {
     scored.join(best, Seq("cluster_id"))
       .select(col("id"), col("cluster_id"), col("score"),
         (col("id") === col("_keep_id")).as("keep"))
-  }
-
-  /** The enforcement end of [[resolveDuplicatesBy]]: rows whose id is
-    * its cluster's quality representative, bodies moved once. */
-  def keepBestDuplicates(
-      df: DataFrame,
-      idCol: String,
-      scoreCol: String,
-      pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val keep = resolveDuplicatesBy(df, idCol, scoreCol, pairs, maxIter)
-      .filter(col("keep")).select("id")
-    df.join(keep, df(idCol) === keep("id"), "left_semi")
   }
 
   /** Per-group dedup ATTRITION: what does each source really

@@ -134,13 +134,4 @@ object HeavyHitters {
     heavyHitters(
       df.select(explode(TextFunctions.words(col(textCol))).as("token")),
       "token", k)
-
-  /** Heavy hitters over word n-grams — the template/boilerplate-
-    * discovery face (a phrase above 1/k of all n-gram mass is a
-    * template, not content). */
-  def heavyNgrams(df: DataFrame, textCol: String, n: Int, k: Int): DataFrame =
-    heavyHitters(
-      df.select(explode(TextFunctions.wordNgramsAll(col(textCol), n))
-        .as("token")),
-      "token", k)
 }

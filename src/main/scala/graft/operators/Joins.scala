@@ -226,8 +226,7 @@ object Joins {
           rightPayload.map(col): _*)
     }
     val spark = left.sparkSession
-    // idempotent strategy injection for sessions built without
-    // GraftExtensions
+    // idempotent: the one place AsofJoinStrategy enters a session
     if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy

@@ -167,7 +167,7 @@ object Kernels extends Serializable {
 
   /** Cosine similarity, float→double casts with a strict left-to-right
     * fold — bitwise equal to the DuckDB oracle's sequential list sum.
-    * Returns 0 for zero vectors (matching [[Similarity.cosine]]). */
+    * Returns 0 for zero vectors (matching [[Similarity.cosineKernel]]). */
   def cosine(
       a: scala.collection.Seq[Float],
       b: scala.collection.Seq[Float]): Double = {

@@ -71,26 +71,6 @@ object Multimodal {
       MediaCodec.decodeStub(payload)
   }
 
-  /** Second deterministic stub: per-stride byte means — different
-    * math, same seam, proving a codec swap touches zero plumbing. */
-  object StrideMeanCodec extends Codec {
-    val name = "stub-stride-mean"
-    val embeddingDim: Int = MediaCodec.EmbeddingDim
-    def decode(payload: Array[Byte]): Array[Float] = {
-      val sums = new Array[Float](embeddingDim)
-      val counts = new Array[Int](embeddingDim)
-      var i = 0
-      while (i < payload.length) {
-        val s = i % embeddingDim
-        sums(s) += (payload(i) & 0xff).toFloat
-        counts(s) += 1
-        i += 1
-      }
-      Array.tabulate(embeddingDim)(s =>
-        if (counts(s) == 0) 0f else sums(s) / counts(s))
-    }
-  }
-
   /** REAL image codec through the seam — `javax.imageio` ships in
     * every JDK (PNG/BMP/GIF/JPEG), so "this container has no codec
     * library" stops being true for images: the payload is decoded to

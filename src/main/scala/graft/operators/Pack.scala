@@ -219,25 +219,4 @@ object Pack {
         sum(when(col("_del") === 0L, col("_ov")).otherwise(0L))
           .as("surviving_tokens"))
   }
-
-  /** Shard-level chunk accounting: how many full seqLen chunks each
-    * shard yields and how many tail tokens fall off the end —
-    * the "how much data do I actually have" number that drives
-    * epoch/token-budget planning. */
-  def chunkCounts(
-      df: DataFrame,
-      idCol: String,
-      shardCol: String,
-      orderCol: String,
-      tokenCol: String,
-      seqLen: Long): DataFrame = {
-    require(seqLen > 0, "seqLen must be positive")
-    df.groupBy(col(shardCol).as("shard"))
-      .agg(coalesce(sum(col(tokenCol).cast("long")), lit(0L)).as("total_toks"))
-      .select(
-        col("shard"),
-        col("total_toks"),
-        floor(col("total_toks") / seqLen).as("n_chunks"),
-        (col("total_toks") % seqLen).as("tail_toks"))
-  }
 }

@@ -33,18 +33,6 @@ object Quantize {
     u(vec)
   }
 
-  /** struct(scale, q) → array<float> reconstruction (x̂_i = q_i·scale);
-    * |x - x̂| ≤ scale/2 per component. */
-  def dequantize(qvec: Column): Column = {
-    val u = udf((r: Row) =>
-      if (r == null) null
-      else {
-        val s = r.getDouble(0)
-        r.getSeq[Byte](1).map(b => (b * s).toFloat).toArray
-      })
-    u(qvec)
-  }
-
   /** Cosine between two quantized vectors — scales cancel, so this is
     * the native codegen'd [[graft.expressions.Int8Cosine]] over the
     * code arrays: primitive byte reads and 64-bit integer accumulators

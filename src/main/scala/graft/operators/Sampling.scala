@@ -14,44 +14,12 @@ import graft.functions.TextFunctions
   * 100 TB job's stage gets retried halfway through. */
 object Sampling {
 
-  /** Deterministic Bernoulli sample: keep a row iff
-    * hash(key, salt) mod 1e6 < fraction*1e6. Same key ⇒ same decision
-    * (also the right tool for stable train/eval splits). */
-  def deterministicSample(
-      df: DataFrame, keyCol: Column, fraction: Double,
-      salt: Long = 42L): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0)
-    df.filter(
-      pmod(xxhash64(keyCol, lit(salt)), lit(1000000L)) <
-        lit((fraction * 1000000L).toLong))
-  }
-
-  /** Stratified sampling with per-stratum fractions: each stratum
-    * (e.g. source) keeps its own rate — how pretraining mixes are
-    * rebalanced. Unlisted strata default to `defaultFraction`. */
-  def stratifiedSample(
-      df: DataFrame,
-      stratumCol: Column,
-      keyCol: Column,
-      fractions: Map[String, Double],
-      defaultFraction: Double = 0.0,
-      salt: Long = 42L): DataFrame = {
-    val frac = fractions.foldLeft(lit(defaultFraction)) {
-      case (acc, (stratum, f)) => when(stratumCol === stratum, f).otherwise(acc)
-    }
-    df.filter(
-      pmod(xxhash64(keyCol, lit(salt)), lit(1000000L)).cast("double") <
-        frac * 1000000.0)
-  }
-
   /** Cross-engine deterministic Bernoulli: keep a row iff the low 64
     * bits of md5(key ++ ":" ++ salt), read as UNSIGNED, fall below
     * fraction·2⁶⁴. Any engine with an md5 builtin reproduces the
     * exact decision set (DuckDB: `md5_number_lower(x) < T::UBIGINT`)
     * — the contract to reach for when a split must be carved
-    * identically by non-Spark systems. Slower per row than the
-    * xxhash64 variants above; prefer those when only Spark replays
-    * the decision. */
+    * identically by non-Spark systems. */
   def crossEngineSample(
       df: DataFrame, keyCol: Column, fraction: Double,
       salt: String = "graft"): DataFrame = {
@@ -167,23 +135,9 @@ object Sampling {
       .drop("_sk")
   }
 
-  /** Exact per-group top-n by a deterministic hash order — a fixed-size
-    * "reservoir" per group without any RNG: one window, shuffle keyed
-    * by the group column. */
-  def perGroupSample(
-      df: DataFrame, groupCol: Column, keyCol: Column, n: Int,
-      salt: Long = 42L): DataFrame = {
-    val w = Window.partitionBy(groupCol)
-      .orderBy(xxhash64(keyCol, lit(salt)), keyCol)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= n)
-      .drop("_rn")
-  }
-
   /** Exact-count mixture balancing — cut a corpus to a target source
-    * mix ("50% web, 30% books, 20% code"), the pretraining-mix
-    * counterpart to [[stratifiedSample]]'s rate-based cut: fractions
-    * give BINOMIAL per-group counts, this gives EXACT ones. Two
+    * mix ("50% web, 30% books, 20% code"): per-group rate
+    * fractions give BINOMIAL per-group counts, this gives EXACT ones. Two
     * phases: (1) one aggregate pass counts each group's available
     * rows (≤ |weights| rows to the driver — bounded by construction);
     * the driver apportions `total` into integer targets by largest
@@ -368,12 +322,12 @@ object Sampling {
     * BINOMIAL count; an eval set wants an exact one). The md5 order
     * is uniform and content-independent, the id tiebreak makes it
     * total, and any engine that can md5 reproduces the same k rows —
-    * the cross-engine twin of [[deterministicSample]].
+    * the exact-count twin of [[crossEngineSample]].
     *
     * Scale shape: one `TakeOrderedAndProject` — per-partition top-k
     * heaps, k rows to the driver-side merge, no global sort. k is
     * bounded (an eval set, not a corpus cut — use
-    * [[deterministicSample]]'s fraction form for proportional
+    * [[crossEngineSample]]'s fraction form for proportional
     * cuts). */
   def exactK(
       df: DataFrame,
@@ -676,7 +630,7 @@ object Sampling {
     * proportional allocation are both strictly worse when strata
     * spread differs). The plan half of the two-phase pattern
     * [[mixturePlan]]/`tokenBudgetSelect` use: compute the allocation
-    * here, then draw with [[exactK]]/[[perGroupSample]].
+    * here, then draw with [[exactK]].
     *
     * Engine-order-proof arithmetic: phase 1 is one distributed pass
     * of EXACT integer moments per stratum (count, Σx, Σx² — Σx² in

@@ -34,25 +34,17 @@ object Similarity {
   /** Euclidean norm, same fold discipline. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity in [-1, 1]; 0 for zero vectors. One JIT'd
-    * [[Kernels.cosine]] call per row — same strict left-to-right
-    * double fold as the HOF spelling, so values are bitwise identical
-    * (the DuckDB oracle relies on this). Named so
-    * [[graft.plans.NativeCosineRewrite]] can upgrade it to the native
-    * codegen expression when the rule is injected. */
+  /** Cosine similarity in [-1, 1]; 0 for zero vectors, NULL when
+    * either side is NULL. One JIT'd [[Kernels.cosine]] call per row —
+    * same strict left-to-right double fold as the HOF spelling, so
+    * values are bitwise identical (the DuckDB oracle relies on this). */
   def cosineKernel(a: Column, b: Column): Column = {
-    // null-tolerant like the native CosineSimilarity expression (whose
-    // nullSafeEval returns NULL on null input) — the query must behave
-    // the same whether or not NativeCosineRewrite upgrades this UDF
     val u = udf((x: scala.collection.Seq[Float], y: scala.collection.Seq[Float]) =>
       if (x == null || y == null) null.asInstanceOf[java.lang.Double]
       else java.lang.Double.valueOf(Kernels.cosine(x, y)))
       .withName("graft_cosine_kernel")
     u(a, b)
   }
-
-  /** Alias kept for column-level use. */
-  def cosine(a: Column, b: Column): Column = cosineKernel(a, b)
 
   /** Exact top-k nearest neighbors by cosine for each query vector.
     * `queries` must be small enough to broadcast (it is hash-joined

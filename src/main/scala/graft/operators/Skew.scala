@@ -48,25 +48,6 @@ object Skew {
       .agg(sum(col("_partial")).as(resultName))
   }
 
-  /** Salted exact count-distinct: phase 1 dedups (key, value) pairs
-    * spread across salts, phase 2 counts — the hot key's dedup work is
-    * parallelized across `salt` partitions instead of one. */
-  def saltedCountDistinct(
-      df: DataFrame,
-      keyCols: Seq[String],
-      valueCol: Column,
-      resultName: String,
-      salt: Int = 16): DataFrame = {
-    val k = keyCols.map(col)
-    val spread = df.withColumn("_salt", pmod(hash(valueCol), lit(salt)))
-    // same value always lands in the same salt bucket, so per-bucket
-    // distinct sets are disjoint and their counts add exactly
-    val perBucket = spread
-      .groupBy((k :+ col("_salt")): _*)
-      .agg(countDistinct(valueCol).as("_d"))
-    perBucket.groupBy(k: _*).agg(sum(col("_d")).cast("long").as(resultName))
-  }
-
   /** Salted equi-join for a skewed BIG side against a side that is too
     * big to broadcast but small enough to replicate `salt`× through
     * the shuffle: the big side's hot key is spread across `salt`

@@ -27,8 +27,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * greatest rightTime <= leftTime per key, NULL keys match nothing)
   * and are spec-checked equal on the fixture.
   *
-  * Injection: `GraftExtensions` (injectPlannerStrategy) or the
-  * operator wrapper's idempotent `experimental.extraStrategies` add.
+  * Injection: [[graft.operators.Joins.asofJoinNative]] adds
+  * [[AsofJoinStrategy]] to the session's `experimental.extraStrategies`
+  * (idempotent) before planning.
   */
 case class AsofJoinPlan(
     left: LogicalPlan,

@@ -1089,8 +1089,8 @@ private[graft] object ExtDedup {
     // Right-to-be-forgotten blast radius (GDPR art. 17 — the delete
     // batch a production corpus owner must honor): which duplicate
     // clusters does a tombstone set touch, does any cluster lose its
-    // canonical REPRESENTATIVE (the min-label member every
-    // resolveDuplicates output, index entry, and pack references),
+    // canonical REPRESENTATIVE (the min-label member every min-id
+    // resolution, index entry, and pack references),
     // and who represents the survivors afterwards. Deleting a
     // non-representative member is metadata-only; a deleted
     // representative invalidates derived artifacts; a fully-deleted

@@ -736,7 +736,7 @@ private[queries] object ExtSimilarity {
       val pairs = a.join(b,
         col("query_id") === col("_q2") && col("id_a") =!= col("id_b"))
         .select(col("query_id"), col("id_a"), col("id_b"),
-          Similarity.cosine(col("_va"), col("_vb")).as("sim"))
+          Similarity.cosineKernel(col("_va"), col("_vb")).as("sim"))
       graft.operators.Retrieval.mmrDiversify(cand, pairs, m = 4)
         .orderBy("query_id", "step")
     },

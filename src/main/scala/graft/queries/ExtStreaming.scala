@@ -580,10 +580,9 @@ private[queries] object ExtStreaming {
 
   private val q58_sessionize = Q(
     "q58_sessionize",
-    // Batch twin of Streams.sessionize (flatMapGroupsWithState):
-    // identical 30-minute-gap session definition as one declarative
-    // window pipeline; StreamsSpec pins stream == batch, the oracle
-    // pins batch == SQL.
+    // 30-minute-gap sessions as one declarative window pipeline;
+    // StreamsSpec pins the gap rule on a hand fixture, the oracle pins
+    // batch == SQL.
     (s, dir) =>
       graft.streaming.Streams.sessionizeBatch(events(s, dir), gapMs = 1800000L)
         .orderBy("user_id", "started_ms"),
@@ -601,8 +600,7 @@ private[queries] object ExtStreaming {
 
   private val q59_stream_dedup = Q(
     "q59_stream_dedup",
-    // Batch twin of Streams.dedupStream (dropDuplicatesWithinWatermark)
-    // on the same key set; StreamsSpec pins stream == batch.
+    // Key-distinct events; StreamsSpec pins the key projection.
     (s, dir) =>
       graft.streaming.Streams.dedupBatch(
         events(s, dir), Seq("user_id", "event_type"))

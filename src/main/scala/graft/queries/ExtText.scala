@@ -690,9 +690,7 @@ private[queries] object ExtText {
     // (word, freq) table (vocab-sized, the at-scale move), then
     // frequency-weighted adjacent character pairs rank toward the
     // first merge argmax. Top-20 with (left, right) tiebreaks; rank 1
-    // is the pair bpeTrain's first iteration picks (BpeSpec pins the
-    // iterative path against a hand reference — its driver loop is
-    // not SQL-expressible, the stats kernel is).
+    // is the pair BPE training's first merge picks.
     (s, dir) =>
       graft.operators.Bpe.pairStats(table(s, dir, "documents"), "text", 20)
         .orderBy("rank"),

@@ -3,33 +3,16 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{MRStage, TinyMapReduce}
-
 /** Source/sink façade (SURVEY §2.2 "Scans/sources" / "Sinks"). The
   * reference reads exactly one format — `\r\n`-line local text files
   * via byte-range splits (`MapReduceUtil.cpp:139-166`,
-  * `LineRecordReader.h:96-119`) — and writes `key value` text. Spark
-  * provides the rest for free; this object pins the library's
-  * supported matrix in one place, with split-size control preserved
-  * where it exists (`maxPartitionBytes` for file sources, the direct
-  * analog of DEFAULT_READ_SPLIT_SIZE).
+  * `LineRecordReader.h:96-119`) — and writes `key value` text
+  * (`TinyMapReduce.text` is the reference-native source). Spark
+  * provides the columnar formats directly; this object holds what
+  * adds a contract on top: declared-schema text formats and
+  * schema-evolved parquet reads.
   */
 object Sources {
-
-  /** Reference-native source: text lines with byte-offset keys. */
-  def textKV(
-      spark: SparkSession,
-      paths: Seq[String],
-      splitSize: Long = TinyMapReduce.DefaultSplitSize): MRStage[Long, String] =
-    TinyMapReduce.text(spark, paths, splitSize)
-
-  /** Plain text lines as a DataFrame (`value` column). */
-  def text(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
-  /** Columnar scans — pruning/pushdown verified in graft.Explain. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** CSV with explicit schema (never infer on a 100 TB input — schema
     * inference is an extra full scan). */
@@ -49,26 +32,6 @@ object Sources {
   def jsonLines(
       spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** ORC — the other columnar format Spark ships natively; same
-    * pruning/pushdown machinery as parquet. */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(
-      df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .orc(path)
-  }
-
-  /** Sinks: partitioned columnar write is the default at scale. */
-  def writeParquet(
-      df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
-  }
 
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode("overwrite").option("header", header.toString).csv(path)

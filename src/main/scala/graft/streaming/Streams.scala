@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.core.Par
 
@@ -16,10 +13,10 @@ import graft.core.Par
   * are the extension surface over the `events` fixture schema
   * (event_id, ts, user_id, event_type, value, props).
   *
-  * Each transform takes a DataFrame that may be streaming
-  * (`readStream`) or batch — identical logical plan either way, which
-  * is what the specs exploit: run the same transform on a MemoryStream
-  * and on the batch table and require equal results.
+  * `windowedTypeCounts` and `clickToPurchaseJoin` take a DataFrame
+  * that may be streaming or batch — identical logical plan either way,
+  * which is what the specs exploit: run the same transform on a
+  * MemoryStream and on the batch table and require equal results.
   */
 object Streams {
 
@@ -43,68 +40,12 @@ object Streams {
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
 
-  case class Event(
-      event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double)
-
-  case class SessionState(nEvents: Long, lastTs: Long)
-
-  case class Session(
-      user_id: Long, n_events: Long, started_ms: Long, ended_ms: Long)
-
-  /** Sessionization via flatMapGroupsWithState: one state record per
-    * live user, a session closes after `gapMs` of event-time
-    * inactivity. Event-time timeouts (driven by the watermark) keep
-    * the operator deterministic and replayable — a processing-time
-    * timeout would tie results to wall-clock and, under the default
-    * 0 ms trigger, schedule continuous timer-check micro-batches.
-    * The custom-state path of the streaming surface — the analog the
-    * reference entirely lacks. State per key is one bounded list of
-    * timestamps of the open session only; closed sessions leave state
-    * immediately, so state size tracks live users, not history. */
-  def sessionize(
-      events: Dataset[Event],
-      gapMs: Long,
-      watermarkDelay: String = "0 seconds"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[Event], state: GroupState[List[Long]]) =>
-          if (state.hasTimedOut) {
-            val ts = state.get
-            state.remove()
-            Iterator.single(
-              Session(userId, ts.length, ts.min, ts.max))
-          } else {
-            val incoming = it.map(_.ts.getTime).toList
-            val all = state.getOption.getOrElse(Nil) ++ incoming
-            // close any complete session on a gap inside the batch;
-            // keep the trailing open session in state
-            val sorted = all.sorted
-            val (closed, open) = splitOnGaps(sorted, gapMs)
-            state.update(open)
-            // fire when the watermark passes the open session's gap
-            // (clamped: Spark rejects timeouts at/behind the watermark,
-            // which late data could otherwise produce)
-            state.setTimeoutTimestamp(
-              math.max(open.max + gapMs, state.getCurrentWatermarkMs() + 1))
-            closed.iterator.map(s =>
-              Session(userId, s.length, s.min, s.max))
-          }
-      }
-  }
-
-  /** Batch twin of [[sessionize]]: the identical session definition
-    * (a session breaks where the gap to the previous event exceeds
-    * `gapMs`) as one declarative window pipeline — lag → break flag →
-    * running sum as session id → aggregate. One shuffle on user_id;
-    * whole-stage codegen throughout; this is also the SQL-expressible
-    * spelling the DuckDB oracle recomputes (q58). The streaming
-    * version emits exactly these rows once the watermark closes every
-    * session — StreamsSpec pins stream == batch. */
+  /** Sessionization over a bounded input: a session breaks where the
+    * gap to the user's previous event exceeds `gapMs`, as one
+    * declarative window pipeline — lag → break flag → running sum as
+    * session id → aggregate. One shuffle on user_id; whole-stage
+    * codegen throughout; this is also the SQL-expressible spelling the
+    * DuckDB oracle recomputes (q58). */
   def sessionizeBatch(events: DataFrame, gapMs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("t")
@@ -124,38 +65,8 @@ object Streams {
       .select("user_id", "n_events", "started_ms", "ended_ms")
   }
 
-  /** Splits a sorted timestamp run into closed sessions (followed by a
-    * gap) and the still-open tail. */
-  private[streaming] def splitOnGaps(
-      sorted: List[Long], gapMs: Long): (List[List[Long]], List[Long]) = {
-    if (sorted.isEmpty) return (Nil, Nil)
-    val sessions = sorted.tail.foldLeft(List(List(sorted.head))) {
-      case (cur :: done, t) =>
-        if (t - cur.head <= gapMs) (t :: cur) :: done
-        else List(t) :: cur :: done
-      case (Nil, t) => List(List(t))
-    }
-    (sessions.tail.reverse.map(_.reverse), sessions.head.reverse)
-  }
-
-  /** Streaming exact dedup: drop rows whose key columns were already
-    * seen, with state bounded by the watermark window
-    * (`dropDuplicatesWithinWatermark`) — the streaming face of
-    * [[graft.operators.Dedup.exactDedup]]. At 100 TB/day the
-    * watermark is what keeps the dedup state store finite: a key is
-    * only remembered while a duplicate could still legally arrive. */
-  def dedupStream(
-      events: DataFrame,
-      keyCols: Seq[String],
-      watermarkDelay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Batch face of [[dedupStream]]: the same key-distinct semantics
-    * over a bounded input (projected to the keys so the kept-row
-    * choice cannot be nondeterministic). StreamsSpec pins
-    * stream == batch on a replayed fixture. */
+  /** Key-distinct rows over a bounded input, projected to the keys so
+    * the kept-row choice cannot be nondeterministic (q59). */
   def dedupBatch(events: DataFrame, keyCols: Seq[String]): DataFrame =
     events.select(keyCols.map(col): _*).dropDuplicates(keyCols)
 
@@ -190,62 +101,10 @@ object Streams {
         col("click_id"), col("click_ts"), col("value"))
   }
 
-  /** Streaming decontamination: a live document feed screened against
-    * a fixed held-out benchmark set. The decision is LOCAL to each
-    * document (does any of its n-grams hit the benchmark gram set?),
-    * so the streaming spelling is a pure per-row filter against a
-    * broadcast of the static side's distinct grams — ZERO streaming
-    * state, no watermark, no shuffle, no matter how long the stream
-    * runs. The collect of the gram set is bounded by the same
-    * contract as [[graft.operators.Decontaminate]]: benchmarks are
-    * KBs–MBs next to the corpus (the batch operator broadcasts the
-    * identical set through the join layer instead). Works identically
-    * on a batch input — StreamsSpec pins stream == batch ==
-    * Decontaminate.removeContaminated. */
-  def decontaminateStream(
-      docs: DataFrame,
-      textCol: String,
-      staticTest: DataFrame,
-      testTextCol: String,
-      n: Int = 8,
-      maxTestGrams: Int = 10000000): DataFrame = {
-    import graft.operators.Kernels
-    // the bounded-benchmark contract, made LOUD (the exactSelfTopK
-    // guard discipline) — and checked DISTRIBUTED, BEFORE anything is
-    // collected: a guard that fires only after a corpus-sized gram
-    // set already landed on the driver would arrive as the OOM it
-    // exists to prevent. One extra pass over the (tiny by contract)
-    // test set buys the fail-fast.
-    val gramsUdf = udf((t: String) =>
-      if (t == null) Array.empty[String] else Kernels.wordNgrams(t, n))
-    val nGrams = staticTest
-      .select(explode(gramsUdf(col(testTextCol))).as("g"))
-      .distinct().count()
-    require(nGrams <= maxTestGrams,
-      s"decontaminateStream: test set has $nGrams distinct n-grams > " +
-        s"maxTestGrams=$maxTestGrams — the test set must be benchmark-sized " +
-        "(KBs-MBs); for corpus-vs-corpus overlap use Decontaminate/" +
-        "Boilerplate.sourceOverlap instead")
-    val testGrams: Set[String] = staticTest
-      .select(col(testTextCol).as("t"))
-      .na.drop(Seq("t"))
-      .collect()
-      .iterator
-      .flatMap(r => Kernels.wordNgrams(r.getString(0), n))
-      .toSet
-    System.err.println(
-      s"[graft] decontaminateStream broadcasting ${testGrams.size} test grams")
-    val bc = docs.sparkSession.sparkContext.broadcast(testGrams)
-    val clean = udf((t: String) =>
-      t == null || !Kernels.wordNgrams(t, n).exists(bc.value.contains))
-    docs.filter(clean(col(textCol)))
-  }
-
   /** Quality routing decision: `keep` / `review` / `reject` from the
     * [[graft.functions.TextFunctions.qualityScore]] heuristic. A pure
-    * per-row projection — STATELESS on a stream (no watermark, no
-    * shuffle), identical on a batch frame, which is what makes the
-    * stream==batch equivalence pinnable. Thresholds compare the
+    * per-row projection (no watermark, no shuffle), so it runs
+    * unchanged on a stream or a batch frame. Thresholds compare the
     * 6-decimal-rounded score, so the decision is engine-exact (the
     * q31 oracle recomputes the same score bitwise). */
   def routeByQuality(
@@ -261,59 +120,6 @@ object Streams {
         .when(q >= reviewMin, "review")
         .otherwise("reject"))
   }
-
-  /** One-stream quality router: a single scan of the feed, routed to a
-    * parquet sink PARTITIONED BY the decision — `route=keep/...`
-    * directories downstream consumers read independently. One
-    * partitioned exactly-once sink (the `_spark_metadata` manifest
-    * covers all three routes atomically) is the 100 TB shape: the
-    * alternative — three filtered streams over the same feed — scans
-    * the source three times and can commit one route's batch without
-    * the others'. AvailableNow drains the backlog then stops (the
-    * incremental-backfill trigger, same as [[writeEventStream]]). */
-  def writeRoutedStream(
-      docs: DataFrame,
-      textCol: String,
-      outDir: String,
-      checkpointDir: String,
-      keepMin: Double = 0.75,
-      reviewMin: Double = 0.5): StreamingQuery =
-    routeByQuality(docs, textCol, keepMin, reviewMin).writeStream
-      .format("parquet")
-      .partitionBy("route")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** File-source entry: tail a directory of parquet event files as a
-    * stream — the deployment shape for the fixture schema. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .parquet(dir)
-
-  /** File-sink exit: append the stream to a parquet directory with
-    * exactly-once semantics — the `_spark_metadata` commit manifest
-    * records which files belong to each committed batch, so a crashed
-    * and restarted query (same checkpoint) never double-writes and
-    * readers never see partial batches. `Trigger.AvailableNow`
-    * processes the backlog then stops: the batch-job-over-a-stream
-    * shape used for incremental 100 TB backfills (each run picks up
-    * exactly where the checkpoint left off). */
-  def writeEventStream(
-      events: DataFrame,
-      outDir: String,
-      checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
 
   /** The foreachBatch sink every ingest and ledger stream runs on:
     * `batch` gets each micro-batch with its id, in Append mode, under

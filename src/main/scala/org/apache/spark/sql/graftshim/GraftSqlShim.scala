@@ -8,8 +8,7 @@ import org.apache.spark.sql.classic
   * needs — the standard shim pattern third-party Spark libraries use
   * to build a DataFrame from a hand-constructed LogicalPlan (the only
   * missing public surface for whole-operator extensions; strategies
-  * and rules themselves inject through the public
-  * SparkSessionExtensions / experimental APIs). */
+  * themselves inject through the public `experimental` API). */
 object GraftSqlShim {
 
   /** Public face of `classic.Dataset.ofRows`. */
@@ -24,15 +23,4 @@ object GraftSqlShim {
   def expression(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
-
-  /** Test-only views of what an extensions class registered. */
-  def plannerStrategies(
-      ext: org.apache.spark.sql.SparkSessionExtensions,
-      spark: SparkSession) =
-    ext.buildPlannerStrategies(spark)
-
-  def optimizerRules(
-      ext: org.apache.spark.sql.SparkSessionExtensions,
-      spark: SparkSession) =
-    ext.buildOptimizerRules(spark)
 }

@@ -9,6 +9,13 @@ import org.scalacheck.rng.Seed
 
 import graft.TestSpark
 
+/** Not a hash layout, so a spec sees the partitioner it passed. */
+private class FirstCharPartitioner(n: Int)
+    extends org.apache.spark.Partitioner {
+  def numPartitions: Int = n
+  def getPartition(key: Any): Int = key.asInstanceOf[String].head % n
+}
+
 /** Unit + property coverage for the MapReduce facade (SURVEY §5.2 #1-3):
   * streaming reduce, bounded combiner, split planning / line-reader
   * offsets, partition layout, and the word-count golden path. */
@@ -149,5 +156,22 @@ class TinyMapReduceSpec extends AnyFunSuite {
       .reduceByKeySorted(_ + _, numPartitions = 3)
       .collectSorted()
     assert(got == Seq("a" -> 2L, "b" -> 2L))
+  }
+
+  test("partitionSorted: records in their partitioner's partition, key-sorted, none lost") {
+    val byFirstChar = new FirstCharPartitioner(3)
+    val in = Seq("pear" -> 1L, "apple" -> 2L, "fig" -> 3L, "apple" -> 4L,
+      "kiwi" -> 5L, "banana" -> 6L, "date" -> 7L, "fig" -> 3L, "cherry" -> 8L)
+    val parts = TinyMapReduce.from(spark.sparkContext.parallelize(in, 2))
+      .partitionSorted(partitioner = Some(byFirstChar))
+      .rdd.glom().collect()
+    assert(parts.length == 3)
+    parts.zipWithIndex.foreach { case (p, i) =>
+      assert(p.forall { case (k, _) => byFirstChar.getPartition(k) == i },
+        s"partition $i holds ${p.toSeq}")
+      val keys = p.map(_._1).toSeq
+      assert(keys == keys.sorted, s"partition $i unsorted: $keys")
+    }
+    assert(parts.flatten.toSeq.sorted == in.sorted) // same multiset
   }
 }

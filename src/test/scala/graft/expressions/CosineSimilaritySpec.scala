@@ -19,7 +19,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
       .select(
         call_function("graft_cosine", col("a.embedding"), col("b.embedding"))
           .as("native"),
-        Similarity.cosine(col("a.embedding"), col("b.embedding")).as("kernel"))
+        Similarity.cosineKernel(col("a.embedding"), col("b.embedding")).as("kernel"))
       .as[(Double, Double)].collect()
     assert(pairs.nonEmpty)
     pairs.foreach { case (n, k) => assert(n == k) } // bitwise equality

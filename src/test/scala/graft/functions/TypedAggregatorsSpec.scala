@@ -38,11 +38,4 @@ class TypedAggregatorsSpec extends AnyFunSuite {
     assert(agg.finish(agg.merge(right, left)).toSeq ==
       Seq(200L, 199L, 198L, 197L))
   }
-
-  test("LongMean two-phase == plain mean") {
-    import spark.implicits._
-    val ds = spark.range(1, 1001).as[Long]
-    val got = ds.select(LongMean.toColumn).head()
-    assert(got == 500.5)
-  }
 }

@@ -294,18 +294,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("resolveDuplicates keeps exactly one representative per cluster") {
-    val df = Seq(
-      (1L, "x"), (2L, "x"), (3L, "x"),   // cluster {1,2,3} -> keep 1
-      (4L, "y"), (5L, "y"),              // cluster {4,5}   -> keep 4
-      (6L, "z")                          // singleton       -> keep 6
-    ).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val kept = Dedup.resolveDuplicates(df, "doc_id", pairs)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L, 4L, 6L))
-  }
-
   test("resolveDuplicatesBy keeps the best-scored member, ties to smaller id") {
     val df = Seq(
       (1L, "x", 10.0), (2L, "x", 30.0), (3L, "x", 30.0), // tie 2/3 -> 2
@@ -317,13 +305,10 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long, Double, Boolean)].collect()
     assert(rep.length == 6) // audit face: every row present
     assert(rep.filter(_._4).map(_._1).sorted.toSeq == Seq(2L, 5L, 6L))
-    val kept = Dedup.keepBestDuplicates(df, "doc_id", "q", pairs)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(2L, 5L, 6L))
     // negative scores: the (score, -id) struct order must still hold
     val neg = df.withColumn("q", -col("q"))
-    val keptNeg = Dedup.keepBestDuplicates(neg, "doc_id", "q", pairs)
-      .select("doc_id").as[Long].collect().sorted
+    val keptNeg = Dedup.resolveDuplicatesBy(neg, "doc_id", "q", pairs)
+      .as[(Long, Long, Double, Boolean)].collect().filter(_._4).map(_._1).sorted
     assert(keptNeg.toSeq == Seq(1L, 4L, 6L)) // best = least negative
   }
 
@@ -343,8 +328,10 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Seq(
       ("s1", 2L, 300L, 1L, 200L),
       ("s2", 4L, 430L, 2L, 80L)))
-    // conservation: kept tokens equal keepBestDuplicates' total
-    val keptToks = Dedup.keepBestDuplicates(df, "doc_id", "q", pairs)
+    // conservation: kept tokens equal the keep rows' total
+    val keep = Dedup.resolveDuplicatesBy(df, "doc_id", "q", pairs)
+      .filter(col("keep")).select("id")
+    val keptToks = df.join(keep, df("doc_id") === keep("id"), "left_semi")
       .agg(org.apache.spark.sql.functions.sum("toks")).as[Long].collect().head
     assert(got.map(_._5).sum == keptToks)
   }

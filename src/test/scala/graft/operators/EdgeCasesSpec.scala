@@ -85,13 +85,14 @@ class EdgeCasesSpec extends AnyFunSuite {
     // empty train side: empty report, no throw
     assert(Decontaminate.contaminationReport(
       emptyDocs, "doc_id", "text", nullTexts, "text").count() == 0)
-    // empty TEST side: everything clean, all rows kept
+    // empty TEST side: everything clean, on the exact and the Bloom path
     val rep = Decontaminate.contaminationReport(
       nullTexts, "doc_id", "text", emptyDocs, "text")
       .as[(Long, Long, Boolean)].collect().toSet
     assert(rep == Set((1L, 0L, false), (2L, 0L, false)))
-    assert(Decontaminate.removeContaminated(
-      nullTexts, "doc_id", "text", emptyDocs, "text").count() == 2)
+    assert(Decontaminate.contaminationReportBloom(
+      nullTexts, "doc_id", "text", emptyDocs, "text")
+      .as[(Long, Long, Boolean)].collect().toSet == rep)
     // tf-idf: empty corpus and null texts yield no term rows
     assert(TfIdf.topTerms(emptyDocs, "doc_id", "text", 3).count() == 0)
     assert(TfIdf.termScores(

@@ -91,7 +91,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     assert(hh == Seq(("a", 3L))) // 3*2 > 4; b: 1*2 <= 4
   }
 
-  test("heavyTokens matches words() tokenization; heavyNgrams counts multiplicity") {
+  test("heavyTokens matches words(); wordNgramsAll counts multiplicity") {
     val docs = Seq(
       (1L, "spam spam spam ham"),
       (2L, "spam  spam eggs"), // double space -> empty dropped
@@ -103,7 +103,9 @@ class HeavyHittersSpec extends AnyFunSuite {
     assert(toks == Seq(("spam", 6L)))
     // bigrams with multiplicity: "spam spam" appears twice in doc 1,
     // once in doc 2 (distinct-set semantics would say twice total)
-    val grams = HeavyHitters.heavyNgrams(docs, "text", 2, 3)
+    val grams = HeavyHitters.heavyHitters(
+        docs.select(explode(graft.functions.TextFunctions.wordNgramsAll(
+          col("text"), 2)).as("token")), "token", 3)
       .as[(String, Long)].collect().toSeq
     // 6 bigrams total: "spam spam"x3 (3*3 > 6), "spam ham",
     // "spam eggs", "ham spam" (1*3 <= 6 each)

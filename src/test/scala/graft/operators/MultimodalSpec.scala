@@ -5,6 +5,27 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.operators.Multimodal._
 
+/** A second deterministic stub for the codec-seam case: per-stride
+  * byte means — different math, same seam, proving a codec swap
+  * touches zero plumbing. */
+private object StrideMeanCodec extends Codec {
+  val name = "stub-stride-mean"
+  val embeddingDim: Int = MediaCodec.EmbeddingDim
+  def decode(payload: Array[Byte]): Array[Float] = {
+    val sums = new Array[Float](embeddingDim)
+    val counts = new Array[Int](embeddingDim)
+    var i = 0
+    while (i < payload.length) {
+      val s = i % embeddingDim
+      sums(s) += (payload(i) & 0xff).toFloat
+      counts(s) += 1
+      i += 1
+    }
+    Array.tabulate(embeddingDim)(s =>
+      if (counts(s) == 0) 0f else sums(s) / counts(s))
+  }
+}
+
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

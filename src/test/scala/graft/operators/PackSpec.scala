@@ -41,9 +41,6 @@ class PackSpec extends AnyFunSuite {
     assert(got(1L) == ((4L, 0L)))
     assert(got(2L) == ((0L, 4L))) // null -> 0 tokens at offset 4
     assert(got(3L) == ((5L, 4L)))
-    val counts = Pack.chunkCounts(withNull, "doc_id", "source", "doc_id",
-      "toks", seqLen = 8L).as[(String, Long, Long, Long)].head()
-    assert(counts == (("A", 9L, 1L, 1L)))
   }
 
   test("deleteBlastRadius: hand-checked overlap accounting; the fully-" +
@@ -70,22 +67,6 @@ class PackSpec extends AnyFunSuite {
     assert(radius(5L, 6L) == Map(
       ("B", 0L) -> ((1L, 1L, 8L, 0L)),
       ("B", 1L) -> ((1L, 1L, 1L, 0L))))
-  }
-
-  test("chunkCounts agrees with per-doc offsets") {
-    val counts = Pack.chunkCounts(docs, "doc_id", "source", "doc_id",
-      "toks", seqLen = 8L)
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(counts("A") == ((19L, 2L, 3L))) // 19 toks = 2 full chunks + 3
-    assert(counts("B") == ((9L, 1L, 1L)))
-    // cross-check: total == last doc's start + toks per shard
-    val offs = Pack.sequenceOffsets(docs, "doc_id", "source", "doc_id",
-      "toks", seqLen = 8L)
-      .groupBy("shard").agg(max(col("start_offset") + col("toks")).as("t"))
-      .as[(String, Long)].collect().toMap
-    assert(offs("A") == counts("A")._1)
-    assert(offs("B") == counts("B")._1)
   }
 
   test("offsets are per-shard contiguous and deterministic on the fixture") {

@@ -31,13 +31,12 @@ class QuantizeSpec extends AnyFunSuite {
     val rows = emb.select(
       col("embedding"),
       Quantize.int8(col("embedding")).as("qv"))
-      .select(col("embedding"), col("qv.scale").as("s"),
-        Quantize.dequantize(col("qv")).as("recon"))
+      .select(col("embedding"), col("qv.scale").as("s"), col("qv.q"))
       .collect()
     rows.foreach { r =>
       val x = r.getSeq[Float](0)
       val s = r.getDouble(1)
-      val xh = r.getSeq[Float](2)
+      val xh = r.getSeq[Byte](2).map(b => (b * s).toFloat)
       x.zip(xh).foreach { case (a, b) =>
         assert(math.abs(a - b) <= s / 2 + 1e-6, s"err ${math.abs(a - b)} vs $s")
       }

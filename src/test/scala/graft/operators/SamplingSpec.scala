@@ -81,35 +81,6 @@ class SamplingSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("boundary"))
   }
 
-  test("deterministicSample: stable across runs and repartitioning") {
-    val a = Sampling.deterministicSample(docs, col("doc_id"), 0.3)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    val b = Sampling.deterministicSample(docs.repartition(13), col("doc_id"), 0.3)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(a.toSeq == b.toSeq)
-    // rate in a loose band around the target
-    val rate = a.length.toDouble / docs.count()
-    assert(rate > 0.2 && rate < 0.4, s"rate $rate")
-    // monotone: a higher fraction keeps a superset
-    val bigger = Sampling.deterministicSample(docs, col("doc_id"), 0.6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(a.forall(bigger.contains))
-  }
-
-  test("stratifiedSample honors per-stratum fractions") {
-    val sampled = Sampling.stratifiedSample(
-      docs, col("lang"), col("doc_id"),
-      fractions = Map("en" -> 0.5, "de" -> 1.0), defaultFraction = 0.0)
-    val byLang = sampled.groupBy("lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = docs.groupBy("lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byLang("de") == total("de")) // fraction 1.0 keeps everything
-    assert(!byLang.contains("fr") && !byLang.contains("zh")) // default 0
-    val enRate = byLang("en").toDouble / total("en")
-    assert(enRate > 0.35 && enRate < 0.65, s"en rate $enRate")
-  }
-
   test("crossEngineSample: deterministic, rate-accurate, salt-sensitive, edge fractions") {
     val s1 = Sampling.crossEngineSample(docs, col("doc_id"), 0.3)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -225,16 +196,6 @@ class SamplingSpec extends AnyFunSuite {
     // frac = 1.0 keeps everything
     assert(Curation.topQuantilePerGroup(docs, "doc_id", "source",
       col("doc_id").cast("double"), 1.0).count() == docs.count())
-  }
-
-  test("perGroupSample: exactly n per group, deterministic") {
-    val s1 = Sampling.perGroupSample(docs, col("lang"), col("doc_id"), 5)
-    val counts = s1.groupBy("lang").count().collect().map(_.getLong(1))
-    assert(counts.forall(_ == 5))
-    val s2 = Sampling.perGroupSample(docs.repartition(7), col("lang"),
-      col("doc_id"), 5)
-    assert(s1.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
-      s2.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   test("shuffleShards: a permutation — every id once, contiguous positions, repartition-stable") {

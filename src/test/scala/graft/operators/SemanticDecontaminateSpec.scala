@@ -86,15 +86,6 @@ class SemanticDecontaminateSpec extends AnyFunSuite {
     assert(re == base)
   }
 
-  test("removeSemantic drops exactly the contaminated ids") {
-    val dirty = bruteForce.filter(_._2 > 0L).keySet
-    val kept = Decontaminate.removeSemantic(
-      corpusDf, "vec_id", "embedding", benchDf, "vec_id", "embedding",
-      tau, nlist = 8)
-      .select("vec_id").as[Long].collect().toSet
-    assert(kept == corpus.map(_._1).toSet.diff(dirty))
-  }
-
   test("null corpus vectors report 0; empty benchmark reports all clean") {
     val withNull = corpusDf.union(
       Seq((9999L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))

@@ -20,14 +20,13 @@ class SimilaritySpec extends AnyFunSuite {
       (4L, Array(0f, 0f), Array(1f, 1f))    // zero vector -> 0
     ).toDF("id", "a", "b")
     val got = df.select(col("id"),
-      Similarity.cosine(col("a"), col("b")).as("c"))
+      Similarity.cosineKernel(col("a"), col("b")).as("c"))
       .orderBy("id").as[(Long, Double)].collect().map(_._2)
     assert(got.toSeq == Seq(1.0, 0.0, -1.0, 0.0))
   }
 
   test("cosine kernel UDF is null-tolerant like the native expression") {
-    // with and without NativeCosineRewrite the result on NULL vectors
-    // must be NULL, never an NPE-failed job
+    // the result on NULL vectors must be NULL, never an NPE-failed job
     val df = Seq(
       (1L, Option(Seq(1f, 0f)), Option(Seq(1f, 0f))),
       (2L, Option.empty[Seq[Float]], Option(Seq(1f, 0f))),

@@ -74,19 +74,6 @@ class SkewSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("saltedCountDistinct == plain countDistinct") {
-    val plain = lineitem
-      .groupBy("l_returnflag")
-      .agg(countDistinct("l_partkey").as("d"))
-      .orderBy("l_returnflag")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val got = Skew.saltedCountDistinct(
-      lineitem, Seq("l_returnflag"), col("l_partkey"), "d", salt = 8)
-      .orderBy("l_returnflag")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == plain.toSeq)
-  }
-
   test("saltedJoin == plain join (inner and left), row-for-row") {
     import spark.implicits._
     val dim = Seq(("A", "returned"), ("N", "in_transit"))

@@ -37,34 +37,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.collect().map(_.toSeq).toSeq == df.collect().map(_.toSeq).toSeq)
   }
 
-  test("partitioned parquet sink prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-src-pq").toString
-    import spark.implicits._
-    val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "tag")
-    Sources.writeParquet(df, s"$dir/pq", partitionBy = Seq("tag"))
-    val pruned = Sources.parquet(spark, s"$dir/pq").filter(col("tag") === "a")
-    assert(pruned.count() == 2)
-    // partition pruning: only the tag=a directory is scanned
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(!scan.contains("tag=b"), scan.take(1000))
-  }
-
-  test("orc round-trip preserves rows and pushes filters") {
-    val dir = Files.createTempDirectory("graft-src-orc").toString
-    import spark.implicits._
-    val df = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0))
-      .toDF("id", "tag", "v")
-    Sources.writeOrc(df, s"$dir/orc")
-    val back = Sources.orc(spark, s"$dir/orc")
-    assert(back.orderBy("id").collect().map(_.toSeq).toSeq ==
-      df.orderBy("id").collect().map(_.toSeq).toSeq)
-    val filtered = back.filter(col("id") > 1L)
-    val scan = filtered.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,1)]"),
-      scan.take(1000))
-    assert(filtered.count() == 2)
-  }
-
   test("parquet schema evolution: mergeSchema unifies old and new batches") {
     // the 100 TB reality: a long-lived dataset grows columns across
     // ingestion batches; readers must see the union schema with nulls

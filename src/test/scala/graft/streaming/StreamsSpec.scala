@@ -29,15 +29,6 @@ class StreamsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  test("splitOnGaps: closed sessions vs open tail") {
-    assert(splitOnGaps(Nil, 10) == (Nil, Nil))
-    assert(splitOnGaps(List(1L, 2L, 3L), 10) == (Nil, List(1L, 2L, 3L)))
-    assert(splitOnGaps(List(1L, 2L, 50L, 51L), 10) ==
-      (List(List(1L, 2L)), List(50L, 51L)))
-    assert(splitOnGaps(List(1L, 50L, 100L), 10) ==
-      (List(List(1L), List(50L)), List(100L)))
-  }
-
   test("windowedTypeCounts: streaming == batch on the events fixture") {
     import spark.implicits._
     val batch = graft.queries.Catalog.events(spark, TestSpark.sf0001)
@@ -67,129 +58,37 @@ class StreamsSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("sessionize closes sessions on in-batch gaps and watermark timeouts") {
+  test("sessionizeBatch: a gap longer than gapMs starts a new session") {
     import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val sessions = sessionize(mem.toDS(), gapMs = 1000L)
-    val query = sessions.writeStream
-      .format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      // base offset keeps event times away from epoch 0 — rows at the
-      // initial watermark value would be dropped as late data
-      val T = 1000000L
-      def ev(id: Long, user: Long, ms: Long) =
-        Event(id, new Timestamp(T + ms), user, "click", 1.0)
-      // batch 1 — user 1: burst 0..500, gap, lone event 10_000 (open);
-      //           user 2: event 0 (gap-closed), event 99_000 (open)
-      mem.addData(ev(1, 1, 0), ev(2, 1, 200), ev(3, 1, 500),
-        ev(4, 1, 10000), ev(5, 2, 0), ev(6, 2, 99000))
-      query.processAllAvailable()
-      // batch 2 — watermark is now 99_000: fires user 1's timeout
-      mem.addData(ev(7, 3, 200000))
-      query.processAllAvailable()
-      // batch 3 — watermark 200_000: fires user 2's timeout; user 3's
-      // 200_000 session gap-closes against the new 300_000 event
-      mem.addData(ev(8, 3, 300000))
-      query.processAllAvailable()
-      val closed = spark.table("sessions")
-        .as[Session].collect().sortBy(s => (s.user_id, s.started_ms))
-      assert(closed.toSeq == Seq(
-        Session(1L, 3L, T, T + 500L),
-        Session(1L, 1L, T + 10000L, T + 10000L),
-        Session(2L, 1L, T, T),
-        Session(2L, 1L, T + 99000L, T + 99000L),
-        Session(3L, 1L, T + 200000L, T + 200000L)))
-    } finally query.stop()
+    val T = 1000000L
+    def ev(id: Long, user: Long, ms: Long) =
+      (id, new Timestamp(T + ms), user, "click", 1.0)
+    // user 1: burst 0..500, gap, lone event 10_000; user 2: 0 and 99_000;
+    // user 3: 200_000 and 201_000 (a gap of exactly gapMs stays open)
+    val events = Seq(ev(1, 1, 0), ev(2, 1, 200), ev(3, 1, 500),
+      ev(4, 1, 10000), ev(5, 2, 0), ev(6, 2, 99000),
+      ev(7, 3, 200000), ev(8, 3, 201000))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val sessions = sessionizeBatch(events, gapMs = 1000L)
+      .as[(Long, Long, Long, Long)].collect().sortBy(s => (s._1, s._3)).toSeq
+    assert(sessions == Seq(
+      (1L, 3L, T, T + 500L),
+      (1L, 1L, T + 10000L, T + 10000L),
+      (2L, 1L, T, T),
+      (2L, 1L, T + 99000L, T + 99000L),
+      (3L, 2L, T + 200000L, T + 201000L)))
   }
 
-  test("dedupStream drops in-watermark duplicates across batches") {
+  test("dedupBatch: one row per distinct key tuple on the fixture events") {
     import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val deduped = dedupStream(
-      mem.toDF(), Seq("event_id"), watermarkDelay = "1 hour")
-    val query = deduped.writeStream
-      .format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      val T = 10000000L
-      def ev(id: Long, ms: Long) =
-        Event(id, new Timestamp(T + ms), 1L, "click", 1.0)
-      mem.addData(ev(1, 0), ev(1, 10), ev(2, 20)) // in-batch dup of 1
-      query.processAllAvailable()
-      mem.addData(ev(2, 30), ev(3, 40)) // cross-batch dup of 2
-      query.processAllAvailable()
-      val ids = spark.table("dedup_stream")
-        .select("event_id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally query.stop()
-  }
-
-  test("sessionize streaming == sessionizeBatch on replayed fixture events") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
     val ev = graft.queries.Catalog.events(spark, TestSpark.sf0001)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event]
-    val rows = ev.collect()
-    val gapMs = 1800000L
-    val mem = MemoryStream[Event]
-    val query = sessionize(mem.toDS(), gapMs).writeStream
-      .format("memory").queryName("sessions_twin")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      mem.addData(rows.toIndexedSeq)
-      query.processAllAvailable()
-      // two far-future flush events push the watermark past every open
-      // session's timeout; the second batch fires timeouts set by the first
-      val flushT = rows.map(_.ts.getTime).max + 100L * gapMs
-      mem.addData(Event(-1L, new Timestamp(flushT), -1L, "flush", 0.0))
-      query.processAllAvailable()
-      mem.addData(Event(-2L, new Timestamp(flushT + 100L * gapMs), -1L, "flush", 0.0))
-      query.processAllAvailable()
-      val streamed = spark.table("sessions_twin")
-        .filter(org.apache.spark.sql.functions.col("user_id") >= 0L)
-        .select("user_id", "n_events", "started_ms", "ended_ms")
-        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-      val batch = sessionizeBatch(
-        graft.queries.Catalog.events(spark, TestSpark.sf0001), gapMs)
-        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-      assert(streamed.nonEmpty)
-      assert(streamed == batch)
-    } finally query.stop()
-  }
-
-  test("dedupStream == dedupBatch key sets on replayed fixture events") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val ev = graft.queries.Catalog.events(spark, TestSpark.sf0001)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event]
-    val mem = MemoryStream[Event]
-    val deduped = dedupStream(
-      mem.toDF(), Seq("user_id", "event_type"), watermarkDelay = "10 days")
-    val query = deduped.writeStream
-      .format("memory").queryName("dedup_twin")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      mem.addData(ev.collect().toIndexedSeq)
-      query.processAllAvailable()
-      val streamed = spark.table("dedup_twin")
-        .select("user_id", "event_type")
-        .as[(Long, String)].collect().sorted.toSeq
-      val batch = dedupBatch(
-        graft.queries.Catalog.events(spark, TestSpark.sf0001),
-        Seq("user_id", "event_type"))
-        .as[(Long, String)].collect().sorted.toSeq
-      assert(streamed.nonEmpty)
-      assert(streamed == batch)
-    } finally query.stop()
+    val expected = ev.select("user_id", "event_type")
+      .as[(Long, String)].collect().distinct.sorted.toSeq
+    val batch = dedupBatch(ev, Seq("user_id", "event_type"))
+    assert(batch.columns.toSeq == Seq("user_id", "event_type"))
+    val got = batch.as[(Long, String)].collect().sorted.toSeq
+    assert(got.nonEmpty)
+    assert(got == expected)
   }
 
   test("clickToPurchaseJoin: stream-stream join == batch twin") {
@@ -224,69 +123,6 @@ class StreamsSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("writeEventStream: exactly-once file sink across checkpointed restarts") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_sink_").toString
-    val outDir = s"$base/out"
-    val ckpt = s"$base/ckpt"
-    val T = 10000000L
-    def ev(id: Long, ms: Long) =
-      Event(id, new Timestamp(T + ms), 1L, "click", 1.0)
-    val mem = MemoryStream[Event]
-    // run 1: backlog of 3 events, AvailableNow drains then stops
-    mem.addData(ev(1, 0), ev(2, 10), ev(3, 20))
-    val q1 = writeEventStream(mem.toDF(), outDir, ckpt)
-    q1.awaitTermination()
-    assert(spark.read.parquet(outDir).select("event_id")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // the exactly-once mechanism is the commit manifest, not luck
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outDir, "_spark_metadata")))
-    // run 2: same checkpoint — resumes past batch 0, appends only the
-    // new events, re-writes nothing
-    mem.addData(ev(4, 30), ev(5, 40))
-    val q2 = writeEventStream(mem.toDF(), outDir, ckpt)
-    q2.awaitTermination()
-    assert(spark.read.parquet(outDir).select("event_id")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
-  }
-
-  test("writeRoutedStream: stream == batch routes, partitioned exactly-once sink") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
-    val rows = docs.select("doc_id", "text")
-      .as[(Long, String)].collect()
-    val base = java.nio.file.Files.createTempDirectory("graft_route_").toString
-    val outDir = s"$base/out"
-    val ckpt = s"$base/ckpt"
-    val mem = MemoryStream[(Long, String)]
-    // run 1 drains half the backlog, run 2 restarts from the same
-    // checkpoint for the rest — routing decisions must be identical
-    // to the batch projection either way
-    mem.addData(rows.take(25).toIndexedSeq)
-    val q1 = writeRoutedStream(
-      mem.toDF().toDF("doc_id", "text"), "text", outDir, ckpt)
-    q1.awaitTermination()
-    mem.addData(rows.drop(25).toIndexedSeq)
-    val q2 = writeRoutedStream(
-      mem.toDF().toDF("doc_id", "text"), "text", outDir, ckpt)
-    q2.awaitTermination()
-    val streamed = spark.read.parquet(outDir)
-      .select("doc_id", "route").as[(Long, String)].collect().toSet
-    val batch = routeByQuality(docs, "text")
-      .select("doc_id", "route").as[(Long, String)].collect().toSet
-    assert(streamed == batch)
-    // the sink is genuinely partitioned by decision: every observed
-    // route surfaces as its own route=<r> directory
-    val dirs = new java.io.File(outDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    val routes = batch.map(_._2).map(r => s"route=$r")
-    assert(routes.subsetOf(dirs), s"dirs $dirs missing some of $routes")
-    assert(batch.map(_._2).size >= 2, "fixture should exercise >1 route")
-  }
-
   test("routeByQuality: thresholds honored and total partition preserved") {
     import spark.implicits._
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
@@ -303,68 +139,6 @@ class StreamsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       routeByQuality(docs, "text", keepMin = 0.4, reviewMin = 0.5)
     }
-  }
-
-  test("readEventStream schema matches the fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val ss = readEventStream(spark, dir)
-    assert(ss.isStreaming)
-    assert(ss.schema.fieldNames.toSeq ==
-      Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
-  }
-
-  test("decontaminateStream: streaming == batch == removeContaminated") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = spark.read
-      .parquet(s"${graft.TestSpark.sf0001}/documents.parquet")
-      .select("doc_id", "text")
-    val heldout = docs.filter(col("doc_id") % 10 === 0)
-    val train = docs.filter(col("doc_id") % 10 =!= 0)
-    val expected = graft.operators.Decontaminate.removeContaminated(
-      train, "doc_id", "text", heldout, "text", n = 3)
-      .select("doc_id").as[Long].collect().toSet
-    // batch twin of the streaming spelling
-    val viaBatch = decontaminateStream(train, "text", heldout, "text", n = 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(viaBatch == expected)
-    // streamed over two micro-batches; per-row decisions, zero state
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val streamDf = mem.toDF().toDF("doc_id", "text")
-    val query = decontaminateStream(streamDf, "text", heldout, "text", n = 3)
-      .writeStream
-      .format("memory")
-      .queryName("decon_stream")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      val rows = train.as[(Long, String)].collect()
-      val (a, b) = rows.splitAt(rows.length / 2)
-      mem.addData(a.toSeq)
-      query.processAllAvailable()
-      mem.addData(b.toSeq)
-      query.processAllAvailable()
-      val streamed = spark.table("decon_stream")
-        .select("doc_id").as[Long].collect().toSet
-      assert(streamed == expected)
-      assert(streamed.nonEmpty)
-    } finally query.stop()
-  }
-
-  test("decontaminateStream: gram-set broadcast bound is loud") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val heldout = Seq("one two three four", "five six seven eight")
-      .toDF("text")
-    val e = intercept[IllegalArgumentException] {
-      decontaminateStream(docs, "text", heldout, "text", n = 2,
-        maxTestGrams = 3)
-    }
-    assert(e.getMessage.contains("maxTestGrams"))
-    // at the default bound the same call goes through
-    assert(decontaminateStream(docs, "text", heldout, "text", n = 2)
-      .count() == 1L)
   }
 
   test("ingestNearDupStream: streamed batches == one-shot batch pairs; delta index compacts to rebuild") {
